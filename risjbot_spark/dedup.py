@@ -21,7 +21,9 @@ Scale notes (the 100 TB story):
     Python anywhere in the family.
   * Connected components iterates on the EDGE list only (never the
     corpus), min-label propagation + pointer jumping = O(log diameter)
-    rounds; lineage is truncated per round (localCheckpoint by default,
+    rounds. The edge list is materialized once up front, so the
+    caller's verify plan runs once per call, not once per round; label
+    lineage is truncated per round (localCheckpoint by default,
     reliable `spark.checkpoint()` when `checkpoint_dir` is set — the
     cluster-durable variant, since localCheckpoint blocks die with an
     executor).
@@ -185,7 +187,11 @@ def minhash_bands_expr(arrays: DataFrame, id_col: str,
     construction: `array_min(transform(sh, s -> md5(seed||s)))` is the
     same min over the same per-doc set the exploded `groupBy(id).agg(
     min(...))` computes (duplicates can't change a min), and the band
-    md5s concatenate the same minima in the same order."""
+    md5s concatenate the same minima in the same order.
+
+    Rows with an empty `sh` are dropped: `array_min([])` is NULL and
+    `concat_ws` skips NULLs, so every empty row would otherwise get the
+    band `md5('')` and all of them would land in one bucket."""
     k = num_bands * rows_per_band
 
     def _perm(j: int):
@@ -194,7 +200,7 @@ def minhash_bands_expr(arrays: DataFrame, id_col: str,
         # silently shadow the seed
         return lambda s: F.md5(F.concat(F.lit(f"{j}|"), s))
 
-    mins = arrays.select(
+    mins = arrays.filter(F.size("sh") >= 1).select(
         id_col,
         *[F.array_min(F.transform(F.col("sh"), _perm(j))).alias(f"m{j}")
           for j in range(k)],
@@ -524,16 +530,20 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     near-dup component sizes that is 1-2 iterations, and each iteration
     is two shuffles on the EDGE list only, never the corpus.
 
-    Lineage is truncated every round (each iteration references its
-    step twice, so the logical plan DOUBLES per round; left to
-    accumulate, the planner OOMs on tree rendering the moment a
-    downstream query composes on top). Default is eager
-    `localCheckpoint` — right for a single-node/bench run, but its
-    blocks are executor-memory-resident and die with an executor. Pass
-    `checkpoint_dir` on a real cluster: labels then checkpoint to
-    reliable storage (`spark.checkpoint()`, GraphX-style), so a lost
-    executor mid-iteration recomputes from the checkpoint files instead
-    of failing the job."""
+    The edge list and the initial labels are materialized once before
+    the first round. `pairs` is typically a lazy verify plan (shingles,
+    band self-join, distinct, verify joins); without that, every eager
+    action in the loop would re-run it back to the scan. Label lineage
+    is then truncated every round (each iteration references its step
+    twice, so the logical plan DOUBLES per round; left to accumulate,
+    the planner OOMs on tree rendering the moment a downstream query
+    composes on top). Default is eager `localCheckpoint` — right for a
+    single-node/bench run, but its blocks are executor-memory-resident
+    and die with an executor. Pass `checkpoint_dir` on a real cluster:
+    edges and labels then checkpoint to reliable storage
+    (`spark.checkpoint()`, GraphX-style), so a lost executor
+    mid-iteration recomputes from the checkpoint files instead of
+    failing the job."""
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -543,37 +553,38 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    adj = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionAll(pairs.select(F.col(dst).alias("u"),
-                               F.col(src).alias("v")))
-    )
-    lbl = (adj.select(F.col("u").alias("node")).distinct()
-           .withColumn("lbl", F.col("node")))
-    # Block lifecycle: each `lbl = new` drops the ONLY Python ref to
-    # the superseded table; CPython refcounting detaches the py4j
-    # object immediately and Spark's ContextCleaner then unpersists
-    # the checkpointed blocks (same on the failure path when the
-    # frame unwinds). Worst-case pinned-until-cleaned is bounded by
-    # max_iters × one tiny (node,lbl) table; 12 rounds of
-    # pointer-jumping covers diameters past 4000.
+    edges = _truncate(pairs.select(F.col(src).alias("u"),
+                                   F.col(dst).alias("v")))
+    adj = edges.unionAll(edges.select(F.col("v").alias("u"),
+                                      F.col("u").alias("v")))
+    lbl = _truncate(adj.select(F.col("u").alias("node")).distinct()
+                    .withColumn("lbl", F.col("node")))
+    # Block lifecycle: the edge blocks live for this call only; each
+    # `lbl = new` drops the ONLY Python ref to the superseded table;
+    # CPython refcounting detaches the py4j object immediately and
+    # Spark's ContextCleaner then unpersists the checkpointed blocks
+    # (same on the failure path when the frame unwinds). Worst-case
+    # pinned-until-cleaned is bounded by max_iters × one tiny
+    # (node,lbl) table; 12 rounds of pointer-jumping covers diameters
+    # past 4000.
     for _ in range(max_iters):
         nb = (adj.join(lbl.withColumnRenamed("node", "v"), "v")
               .groupBy("u").agg(F.min("lbl").alias("nlbl"))
               .withColumnRenamed("u", "node"))
+        # `old` carries each node's pre-round label through the round,
+        # so convergence is a filter on `new`, not a join against `lbl`
         step = (lbl.join(nb, "node", "left")
                 .select("node", F.least(
-                    "lbl", F.coalesce("nlbl", "lbl")).alias("lbl")))
+                    "lbl", F.coalesce("nlbl", "lbl")).alias("lbl"),
+                    F.col("lbl").alias("old")))
         parent = step.select(F.col("node").alias("pnode"),
                              F.col("lbl").alias("plbl"))
         new = _truncate(
             step.join(parent, step["lbl"] == parent["pnode"], "left")
             .select("node", F.least(
-                "lbl", F.coalesce("plbl", "lbl")).alias("lbl")))
-        changed = (new.alias("n").join(lbl.alias("o"), "node")
-                   .filter(F.col("n.lbl") != F.col("o.lbl"))
-                   .count())
-        lbl = new
+                "lbl", F.coalesce("plbl", "lbl")).alias("lbl"), "old"))
+        changed = new.filter(F.col("lbl") != F.col("old")).count()
+        lbl = new.select("node", "lbl")
         if changed == 0:
             return lbl
     raise RuntimeError(

@@ -352,10 +352,7 @@ class MinHashStore(PinnedStore):
             .select(F.col("new_id").alias("doc_id"), "dup_of"))
         # policy step 2: CC over new-new edges whose BOTH endpoints
         # survived step 1; min id per component survives
-        # cached: the CC loop references its edge list every iteration
-        # (over the truncated evidence the re-evaluation is cheap, but
-        # not free)
-        rem_nn = self._cache(
+        rem_nn = (
             v_nn.join(dup_old.select(F.col("doc_id").alias("id_a")),
                       "id_a", "left_anti")
             .join(dup_old.select(F.col("doc_id").alias("id_b")),

@@ -2563,8 +2563,9 @@ ORACLE_SQL = {
           FROM documents)
         SELECT lang,
                count(*) AS n_docs,
-               sum(CASE WHEN is_null THEN 1 ELSE 0 END) AS n_null,
-               sum(nt) AS n_tokens,
+               CAST(sum(CASE WHEN is_null THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_null,
+               CAST(sum(nt) AS BIGINT) AS n_tokens,
                round(avg(nt), 6) AS tokens_mean,
                round(quantile_cont(nt, 0.5), 6) AS tokens_p50,
                round(quantile_cont(nt, 0.9), 6) AS tokens_p90,
@@ -2752,10 +2753,10 @@ ORACLE_SQL = {
           FROM documents),
         o AS (
           SELECT doc_id, shard, n_tok,
-                 coalesce(sum(n_tok) OVER (
+                 CAST(coalesce(sum(n_tok) OVER (
                    PARTITION BY shard ORDER BY doc_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS start_tok
+                   0) AS BIGINT) AS start_tok
           FROM t)
         SELECT doc_id, shard, n_tok, start_tok,
                start_tok + n_tok AS end_tok,

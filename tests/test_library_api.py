@@ -138,12 +138,54 @@ def test_embedding_near_dup_parameterized_bits(vectors):
 
 
 def test_connected_components_chain(spark):
-    # 1-2-3-4 chain plus isolated 7-8 pair: CC must merge the chain
+    # 1-2-3-4 chain, isolated 7-8 pair, and a 9-hop chain 20..29 listed
+    # from its far end: convergence needs several rounds of propagation
+    # and pointer jumping, so the per-round change count must be right
+    long_chain = [(n + 1, n) for n in range(28, 19, -1)]
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (7, 8)], "id_a long, id_b long")
+        [(1, 2), (2, 3), (3, 4), (7, 8)] + long_chain,
+        "id_a long, id_b long")
     labels = {r["node"]: r["lbl"]
               for r in dedup.connected_components(pairs).collect()}
-    assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
+    assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7,
+                      **{n: 20 for n in range(20, 30)}}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, max_iters=2).collect()
+
+
+@pytest.mark.parametrize("reliable", [False, True])
+def test_connected_components_evaluates_pairs_once(spark, tmp_path,
+                                                   reliable):
+    """The edge list is materialized once per call: a counting UDF
+    upstream of `pairs` sees every edge row exactly once, however many
+    rounds the label loop runs — with localCheckpoint and with a
+    reliable checkpoint_dir alike."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def _count(x):
+        seen.add(1)
+        return x
+
+    raw = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (9, 10)]
+    pairs = spark.createDataFrame(raw, "id_a long, id_b long").select(
+        F.udf(_count, "long")("id_a").alias("id_a"), "id_b")
+    ckpt = str(tmp_path / "cc_ckpt") if reliable else None
+    labels = {r["node"]: r["lbl"] for r in dedup.connected_components(
+        pairs, checkpoint_dir=ckpt).collect()}
+    assert labels == {**{n: 1 for n in range(1, 7)}, 9: 9, 10: 9}
+    assert seen.value == len(raw)
+
+
+def test_minhash_bands_expr_skips_empty_shingle_arrays(spark):
+    """Empty shingle arrays would all sign to md5('') bands and
+    collide in one bucket; they must not sign at all."""
+    arrays = spark.createDataFrame(
+        [(1, []), (2, []), (3, ["a b c", "b c d"])],
+        "pk long, sh array<string>")
+    sig = dedup.minhash_bands_expr(arrays, "pk")
+    assert [r["pk"] for r in sig.collect()] == [3]
+    assert dedup.banded_candidate_pairs(
+        sig, "pk", ["band1", "band2"]).count() == 0
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):

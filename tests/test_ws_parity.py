@@ -66,12 +66,16 @@ def ws_sf(spark, tmp_path_factory):
     return str(sf)
 
 
-def _oracle(name: str, sf: str) -> pd.DataFrame:
+def _oracle_con(sf: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{sf}/documents.parquet/*.parquet')")
-    return con.execute(Q.ORACLE_SQL[name]).df()
+    return con
+
+
+def _oracle(name: str, sf: str) -> pd.DataFrame:
+    return _oracle_con(sf).execute(Q.ORACLE_SQL[name]).df()
 
 
 @pytest.mark.parametrize("name", ["token_count", "quality_score",
@@ -86,6 +90,18 @@ def test_doc_op_parity_on_exotic_whitespace(spark, ws_sf, name):
     want = want.sort_values(want.columns[0]).reset_index(drop=True)
     pd.testing.assert_frame_equal(
         got.astype(str), want.astype(str), check_dtype=False)
+
+
+@pytest.mark.parametrize("name", ["corpus_stats", "pack_sequences"])
+def test_oracle_integer_columns_are_bigint(ws_sf, name):
+    """DuckDB's sum() returns HUGEINT where Spark's returns BIGINT, so
+    an un-cast oracle sum hashes differently from the Spark result:
+    every integer column an oracle returns must come back BIGINT."""
+    con = _oracle_con(ws_sf)
+    rel = con.sql(Q.ORACLE_SQL[name])
+    ints = {c: str(t) for c, t in zip(rel.columns, rel.types)
+            if str(t).endswith("INT")}
+    assert ints and all(t == "BIGINT" for t in ints.values()), ints
 
 
 def test_token_count_matches_python_split(spark, ws_sf):
