@@ -190,8 +190,7 @@ def main() -> None:
     # SPARK_GRAFT_BENCH_SUITE=0)
     run_suite = os.environ.get("SPARK_GRAFT_BENCH_SUITE", "1") != "0"
     bench_queries = [] if not run_suite else [
-        "tpch_pricing", "region_revenue", "brand_supplier_revenue",
-        "politeness_window", "customer_top_order", "sessionize",
+        "politeness_window", "sessionize",
         "link_rank",
         "exact_dedup", "minhash_signature", "lsh_dup_pairs",
         "ngram_jaccard_pairs", "dedup_clusters", "incremental_dedup",

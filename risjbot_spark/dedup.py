@@ -17,6 +17,11 @@ Scale notes (the 100 TB story):
     equi self-joins (MinHash bands, SimHash bands, sign-LSH buckets),
     so the shuffle is on (band, value) buckets — Σ n_b² work, bounded
     by band cardinality — never O(n²).
+  * One shingle representation: a per-doc distinct-shingle array
+    (`doc_shingle_arrays`, built on the one n-gram construction,
+    `ngrams_expr`). MinHash minima, SimHash votes and Jaccard verify
+    are per-row array expressions over it, so signing never exchanges;
+    only the band self-join and the verify join shuffle.
   * All signature math is JVM expressions (md5/conv/bit ops/HOFs); no
     Python anywhere in the family.
   * Connected components iterates on the EDGE list only (never the
@@ -48,12 +53,12 @@ from .schema import PY_WS_RE
 __all__ = [
     "normalized_text_expr",
     "tokens_expr",
+    "ngrams_expr",
     "exact_dup_groups",
-    "shingle_rows",
-    "distinct_shingles",
+    "doc_shingle_arrays",
     "minhash_mins",
     "bands_from_mins",
-    "minhash_signatures",
+    "minhash_bands_expr",
     "banded_candidate_pairs",
     "shingle_arrays",
     "jaccard_verify",
@@ -95,6 +100,31 @@ def tokens_expr(text_col) -> Column:
         lambda x: x != "")
 
 
+def ngrams_expr(toks, n: int) -> Column:
+    """Array of space-joined token n-grams from a token-array column —
+    the one n-gram construction every shingle/gram consumer shares.
+
+    Built as arrays_zip of n shifted slices (n array ops per ROW), then
+    one codegen'd concat_ws per gram. The obvious alternative is 10-20×
+    slower, measured: transform(sequence(...), i -> concat_ws(' ',
+    slice(toks, i, n))) does an interpreted per-GRAM slice (O(words²)
+    work). Guarded: short docs short-circuit to an empty array (Spark's
+    sequence(1, 0) counts DOWN), and NULL tokens stay NULL."""
+    if n < 1:
+        raise ValueError(f"ngram size must be >= 1, got {n}")
+    shift_len = F.size(toks) - (n - 1)
+    zipped = F.arrays_zip(
+        *[F.slice(toks, i + 1, shift_len) for i in range(n)])
+    grams = F.transform(
+        zipped,
+        lambda t: F.concat_ws(" ", *[t[str(i)] for i in range(n)]))
+    return (
+        F.when(toks.isNull(), F.lit(None).cast("array<string>"))
+        .when(F.size(toks) >= n, grams)
+        .otherwise(F.array().cast("array<string>"))
+    )
+
+
 def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup: hash-groupBy on normalized text — map-side
     combinable, one shuffle on the (uniform) md5 key. Returns
@@ -112,129 +142,57 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shingles
+# shingles + MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def shingle_rows(df: DataFrame, id_col: str, text_col: str,
-                 *, ngram: int = 3) -> DataFrame:
-    """(id, text) → exploded (id, s) n-token-shingle rows.
-
-    Construction is arrays_zip of `ngram` shifted slices — ngram array
-    ops per ROW — then explode + codegen'd concat_ws. The obvious
-    alternatives are 10-20× slower, measured: transform(sequence(...),
-    i -> concat_ws(' ', slice(toks,i,n))) does an interpreted
-    per-SHINGLE slice (O(words²) work), and a size(sh)>0 pre-filter gets
-    pushdown-inlined into the scan, re-evaluating the whole non-codegen
-    expression per row. The guarded CASE matters: Spark's
-    sequence(1, 0) counts DOWN."""
-    slices = ", ".join(
-        f"slice(toks, {i + 1}, size(toks)-{ngram - 1})"
-        for i in range(ngram))
-    z = F.expr(
-        f"CASE WHEN size(toks) >= {ngram} THEN arrays_zip({slices}) "
-        "ELSE array() END")
-    return (
-        df.select(F.col(id_col).alias("_id"),
-                  tokens_expr(text_col).alias("toks"))
-        .select("_id", F.explode(z).alias("t"))
-        .select(F.col("_id").alias(id_col),
-                F.concat_ws(" ", *[f"t.{i}" for i in range(ngram)])
-                .alias("s"))
-    )
-
 
 def doc_shingle_arrays(df: DataFrame, id_col: str, text_col: str,
                        *, ngram: int = 3) -> DataFrame:
-    """Per-doc distinct-shingle ARRAYS (id, sh) computed entirely
-    per-row — the ZERO-EXCHANGE twin of
-    `shingle_arrays(distinct_shingles(...))`.
+    """Per-doc distinct-shingle ARRAYS (id, sh) — THE shared dedup
+    stage, computed entirely per-row.
 
-    Every consumer of the shingle table is a per-document function
-    (min-md5 per permutation, simhash votes, pairwise Jaccard), so the
-    global `(id, s).distinct()` exchange — and the `groupBy(id)`
-    collect that re-shuffles the exploded stream back into arrays —
-    buy nothing: `array_distinct` over the same zip-of-shifted-slices
-    construction yields the identical per-doc set without a single
-    row leaving its partition.  At 10^6+ docs the exploded pipeline
+    Every signature in the family is a per-document function of the
+    distinct shingle set (min-md5 per permutation, simhash votes,
+    pairwise Jaccard), so no global `(id, s).distinct()` exchange and no
+    `groupBy(id)` collect is ever needed: `array_distinct` over
+    `ngrams_expr` yields the per-doc set without a single row leaving
+    its partition. At 10^6+ docs an exploded (id, shingle) table
     shuffles the raw shingle-string stream (~tokens × bytes/shingle)
     once per consumer; measured at 1M synthetic news docs it spilled
-    past a 75 GB /tmp budget, while this path's only exchanges are the
-    band join and the verify join.  Docs with no shingles (text
-    shorter than `ngram` tokens) are dropped, matching the exploded
-    pipeline where they simply have no rows."""
-    slices = ", ".join(
-        f"slice(toks, {i + 1}, size(toks)-{ngram - 1})"
-        for i in range(ngram))
-    z = F.expr(
-        f"CASE WHEN size(toks) >= {ngram} THEN arrays_zip({slices}) "
-        "ELSE array() END")
-    fields = ", ".join(f"t.`{i}`" for i in range(ngram))
+    past a 75 GB /tmp budget, while this stage's consumers exchange only
+    in the band join and the verify join. Docs with no shingles (text
+    shorter than `ngram` tokens, or NULL) are dropped. Callers that run
+    several family members should persist it (queries.py caches it per
+    (session, sf))."""
     return (
-        df.select(F.col(id_col), tokens_expr(text_col).alias("toks"))
-        .withColumn("_z", z)
-        .select(id_col, F.array_distinct(F.expr(
-            f"transform(_z, t -> concat_ws(' ', {fields}))")).alias("sh"))
+        df.select(F.col(id_col), F.array_distinct(ngrams_expr(
+            tokens_expr(text_col), ngram)).alias("sh"))
         .filter(F.size("sh") >= 1)
     )
 
 
-def minhash_bands_expr(arrays: DataFrame, id_col: str,
-                       *, num_bands: int = 2,
-                       rows_per_band: int = 3) -> DataFrame:
-    """MinHash signature table (id, band1..band{num_bands}) from a
-    per-doc shingle-ARRAY table — the zero-exchange twin of
-    `minhash_signatures(distinct_shingles(...))`, value-identical by
-    construction: `array_min(transform(sh, s -> md5(seed||s)))` is the
-    same min over the same per-doc set the exploded `groupBy(id).agg(
-    min(...))` computes (duplicates can't change a min), and the band
-    md5s concatenate the same minima in the same order.
+def _perm(j: int):
+    # factory, NOT `lambda s, j=j`: a two-parameter lambda is Spark's
+    # (element, index) form — the index column would silently shadow
+    # the seed
+    return lambda s: F.md5(F.concat(F.lit(f"{j}|"), s))
+
+
+def minhash_mins(arrays: DataFrame, id_col: str, *, k: int) -> DataFrame:
+    """Per-doc MinHash minima (id, m0..m{k-1}) from a shingle-ARRAY
+    table: `array_min(transform(sh, s -> md5(seed||s)))` per
+    permutation — a per-row expression, no exchange. The shared core of
+    `minhash_bands_expr` and the incremental store's estimate-verify
+    (the fraction of agreeing minima estimates Jaccard without touching
+    either document's text).
 
     Rows with an empty `sh` are dropped: `array_min([])` is NULL and
     `concat_ws` skips NULLs, so every empty row would otherwise get the
     band `md5('')` and all of them would land in one bucket."""
-    k = num_bands * rows_per_band
-
-    def _perm(j: int):
-        # factory, NOT `lambda s, j=j`: a two-parameter lambda is
-        # Spark's (element, index) form — the index column would
-        # silently shadow the seed
-        return lambda s: F.md5(F.concat(F.lit(f"{j}|"), s))
-
-    mins = arrays.filter(F.size("sh") >= 1).select(
+    return arrays.filter(F.size("sh") >= 1).select(
         id_col,
         *[F.array_min(F.transform(F.col("sh"), _perm(j))).alias(f"m{j}")
           for j in range(k)],
     )
-    return bands_from_mins(mins, id_col, num_bands=num_bands,
-                           rows_per_band=rows_per_band)
-
-
-def distinct_shingles(df: DataFrame, id_col: str, text_col: str,
-                      *, ngram: int = 3) -> DataFrame:
-    """Distinct (id, shingle) rows — THE shared dedup stage: every
-    signature in the family is a function of the distinct shingle set
-    (min(md5) over duplicates equals min over distinct, and simhash
-    votes over distinct shingles), so minhash, Jaccard arrays, and
-    simhash all derive from this one table. Callers that run several
-    family members should persist it (queries.py caches it per
-    (session, sf); a cluster pipeline writes it as a table)."""
-    return shingle_rows(df, id_col, text_col, ngram=ngram).distinct()
-
-
-# ---------------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------------
-
-def minhash_mins(shingles: DataFrame, id_col: str, *, k: int) -> DataFrame:
-    """Per-doc MinHash minima (id, m0..m{k-1}): min(md5(seed||shingle))
-    per permutation, one map-side-combinable groupBy — linear in total
-    shingles. The shared core of minhash_signatures and the incremental
-    store's estimate-verify (the fraction of agreeing minima estimates
-    Jaccard without touching either document's text)."""
-    return shingles.groupBy(id_col).agg(*[
-        F.min(F.md5(F.concat(F.lit(f"{j}|"), F.col("s")))).alias(f"m{j}")
-        for j in range(k)
-    ])
 
 
 def bands_from_mins(mins: DataFrame, id_col: str,
@@ -250,14 +208,15 @@ def bands_from_mins(mins: DataFrame, id_col: str,
     )
 
 
-def minhash_signatures(shingles: DataFrame, id_col: str,
+def minhash_bands_expr(arrays: DataFrame, id_col: str,
                        *, num_bands: int = 2,
                        rows_per_band: int = 3) -> DataFrame:
     """MinHash signature table (id, band1..band{num_bands}) from a
-    distinct-shingle table: num_bands × rows_per_band permutations via
-    md5(seed||shingle) min-hashes, banded by `bands_from_mins`."""
+    per-doc shingle-ARRAY table: num_bands × rows_per_band permutations
+    via md5(seed||shingle) min-hashes (`minhash_mins`), banded by
+    `bands_from_mins`. Exchange-free."""
     k = num_bands * rows_per_band
-    return bands_from_mins(minhash_mins(shingles, id_col, k=k), id_col,
+    return bands_from_mins(minhash_mins(arrays, id_col, k=k), id_col,
                            num_bands=num_bands, rows_per_band=rows_per_band)
 
 
@@ -283,10 +242,10 @@ def banded_candidate_pairs(sig: DataFrame, id_col: str,
 
 
 def shingle_arrays(shingles: DataFrame, id_col: str) -> DataFrame:
-    """Per-doc distinct-shingle arrays (id, sh) — the verify stage's
-    join input. Exposed separately so callers can persist it: the
-    verify self-references it for both pair sides, and a cached/written
-    table computes it once (queries.py caches it per (session, sf))."""
+    """Exploded (id, s) shingle rows → per-doc arrays (id, sh): the
+    `jaccard_verify(cands, shingles, ...)` form, for callers that hold
+    an exploded shingle table. The library's own stage is
+    `doc_shingle_arrays`, which never explodes."""
     return shingles.groupBy(id_col).agg(F.collect_list("s").alias("sh"))
 
 
@@ -296,9 +255,9 @@ def jaccard_verify(cands: DataFrame, shingles: Optional[DataFrame],
                    arrays: Optional[DataFrame] = None,
                    arrays_b: Optional[DataFrame] = None) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs (id_a, id_b) — the
-    verify stage. Joins two per-doc distinct-shingle ARRAYS (collected
-    once, reused for both sides — pass a persisted `arrays` to avoid
-    recomputing the collect for each side); |∩| via array_intersect.
+    verify stage. Joins two per-doc distinct-shingle ARRAYS (one table
+    for both sides — pass a persisted `arrays`, normally
+    `doc_shingle_arrays`, so it is built once); |∩| via array_intersect.
     Verifies candidates only — the unrestricted shingle self-join is
     the quadratic trap (measured 16.7 s vs 3 s at sf0.1; impossible at
     10^10 docs). Pass EXACTLY ONE of `shingles` / `arrays`.
@@ -334,7 +293,7 @@ def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
     → exact-Jaccard verify. Returns verified near-dup pairs
     (id_a, id_b, jaccard). Convenience composition of the blocks above;
     pipelines that also run simhash/Jaccard should persist
-    `distinct_shingles` once and call the blocks directly.
+    `doc_shingle_arrays` once and call the blocks directly.
 
     GEOMETRY AT SCALE: band collision probability is sim^rows_per_band,
     so the LSH knee sits at ~(1/num_bands)^(1/rows_per_band) ≈ 0.79
@@ -347,13 +306,8 @@ def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
     Raise rows_per_band (and num_bands with it to keep the knee) when
     the corpus shares boilerplate/templates; the knee math, not the
     pair explosion, should pick the operating point."""
-    # the zero-exchange shingle path (doc_shingle_arrays docstring has
-    # the budget math): signatures and verify arrays are per-row
-    # expressions, so the only exchanges left are the band self-join
-    # and the verify join — the exploded shingle stream never shuffles.
-    # Value-identical to the distinct_shingles blocks (parity-tested);
-    # pipelines that ALSO run simhash/Jaccard and persist a shared
-    # distinct-shingle table should keep calling the blocks directly.
+    # signatures and verify arrays are per-row expressions, so the only
+    # exchanges are the band self-join and the verify join
     arrays = doc_shingle_arrays(df, id_col, text_col, ngram=ngram)
     sig = minhash_bands_expr(arrays, id_col, num_bands=num_bands,
                              rows_per_band=rows_per_band)
@@ -367,36 +321,39 @@ def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_fingerprints(shingles: DataFrame, id_col: str,
+def _bit_set(b: int):
+    # factory for the same reason as _perm: a two-parameter lambda is
+    # Spark's (element, index) form
+    return lambda h: F.shiftright(h, b) % 2 == 1
+
+
+def simhash_fingerprints(arrays: DataFrame, id_col: str,
                          *, bits: int = 60) -> DataFrame:
-    """SimHash fingerprint (id, simhash long) over distinct shingles:
-    md5-prefix shingle hash (bits/4 hex chars — ≤60 bits parses into a
-    SIGNED 64-bit long identically in Spark and DuckDB), per-bit ±1
-    majority vote (Charikar). Shingles, not single tokens: with a small
-    shared vocabulary the unweighted-token vote degenerates toward the
-    corpus-majority fingerprint (measured: 13% of all pairs at
-    hamming≤3); shingles are doc-specific so unrelated docs separate.
-    One explode + one groupBy — map-side combinable, no skew (hashes
-    are uniform), linear in corpus tokens. Docs under `ngram` tokens
-    produce no shingles and go unfingerprinted (exact dedup covers
-    them)."""
+    """SimHash fingerprint (id, simhash long) from a per-doc
+    distinct-shingle ARRAY table: md5-prefix shingle hash (bits/4 hex
+    chars — ≤60 bits parses into a SIGNED 64-bit long identically in
+    Spark and DuckDB), per-bit majority vote (Charikar): bit b is set
+    iff more than half the doc's shingle hashes have it set. Shingles,
+    not single tokens: with a small shared vocabulary the
+    unweighted-token vote degenerates toward the corpus-majority
+    fingerprint (measured: 13% of all pairs at hamming≤3); shingles are
+    doc-specific so unrelated docs separate. Per-row array expressions
+    only — no exchange. Rows with an empty `sh` (docs under `ngram`
+    tokens) go unfingerprinted (exact dedup covers them)."""
     if bits > 60 or bits % 4:
         raise ValueError("bits must be a multiple of 4, ≤ 60 "
                          "(signed-long portability)")
-    h = shingles.withColumn(
-        "h",
-        F.conv(F.substring(F.md5("s"), 1, bits // 4), 16, 10)
-        .cast("long"))
-    votes = h.groupBy(id_col).agg(*[
-        F.sum(F.when(F.shiftright(F.col("h"), b) % 2 == 1, 1).otherwise(-1))
-        .alias(f"v{b}")
-        for b in range(bits)
-    ])
+    hs = arrays.filter(F.size("sh") >= 1).select(
+        id_col,
+        F.transform("sh", lambda s: F.conv(
+            F.substring(F.md5(s), 1, bits // 4), 16, 10).cast("long"))
+        .alias("hs"))
     fp = sum(
-        F.when(F.col(f"v{b}") > 0, F.lit(2 ** b)).otherwise(F.lit(0))
+        F.when(2 * F.size(F.filter("hs", _bit_set(b))) > F.size("hs"),
+               F.lit(2 ** b)).otherwise(F.lit(0))
         for b in range(bits)
     )
-    return votes.select(id_col, fp.cast("long").alias("simhash"))
+    return hs.select(id_col, fp.cast("long").alias("simhash"))
 
 
 def simhash_pairs(fp: DataFrame, id_col: str,
@@ -445,8 +402,8 @@ def simhash_dedup(df: DataFrame, id_col: str, text_col: str,
                   *, ngram: int = 3, bits: int = 60, num_bands: int = 4,
                   max_hamming: int = 3) -> DataFrame:
     """Full SimHash pipeline: shingle → fingerprint → banded pairs."""
-    sh = distinct_shingles(df, id_col, text_col, ngram=ngram)
-    fp = simhash_fingerprints(sh, id_col, bits=bits)
+    arrays = doc_shingle_arrays(df, id_col, text_col, ngram=ngram)
+    fp = simhash_fingerprints(arrays, id_col, bits=bits)
     return simhash_pairs(fp, id_col, bits=bits, num_bands=num_bands,
                          max_hamming=max_hamming)
 
@@ -639,13 +596,10 @@ def _gram_occurrences(df: DataFrame, id_col: str, text_col: str,
                       k: int) -> DataFrame:
     """(_sid, _p, _gh): every k-gram start position with its md5 gram
     hash (matching lowercased; only docs with >= k tokens have any)."""
-    toks = raw_tokens_expr(F.col(text_col))
+    toks = F.transform(raw_tokens_expr(F.col(text_col)), F.lower)
     t = df.select(F.col(id_col).alias("_sid"), toks.alias("_toks"))
     t = t.filter(F.size("_toks") >= k)
-    gh = F.transform(
-        F.sequence(F.lit(0), F.size("_toks") - k),
-        lambda p: F.md5(F.concat_ws(
-            " ", F.transform(F.slice("_toks", p + 1, k), F.lower))))
+    gh = F.transform(ngrams_expr(F.col("_toks"), k), lambda g: F.md5(g))
     return t.select("_sid", F.posexplode(gh).alias("_p", "_gh"))
 
 

@@ -142,17 +142,17 @@ class MinHashStore(PinnedStore):
     # -- signature pipeline (shared with the batch family) -------------------
 
     def _sig_parts(self, df: DataFrame, id_col: str, text_col: str):
-        """(shingles, mins, sig, bands) for a DataFrame, under the
-        store's pinned geometry; doc ids normalized to `doc_id`."""
+        """(shingle arrays, mins, sig, bands) for a DataFrame, under
+        the store's pinned geometry; doc ids normalized to `doc_id`."""
         d = df.select(F.col(id_col).alias("doc_id"),
                       F.col(text_col).alias("text"))
-        sh = self._cache(
-            dedup.distinct_shingles(d, "doc_id", "text", ngram=self.ngram))
-        mins = self._cache(dedup.minhash_mins(sh, "doc_id", k=self.k))
+        arrays = self._cache(
+            dedup.doc_shingle_arrays(d, "doc_id", "text", ngram=self.ngram))
+        mins = self._cache(dedup.minhash_mins(arrays, "doc_id", k=self.k))
         sig = self._cache(dedup.bands_from_mins(
             mins, "doc_id", num_bands=self.num_bands,
             rows_per_band=self.rows_per_band))
-        return sh, mins, sig, self._unpivot(sig)
+        return arrays, mins, sig, self._unpivot(sig)
 
     def _unpivot(self, sig: DataFrame) -> DataFrame:
         parts = [sig.select(F.col(f"band{b + 1}").alias("band"), "doc_id")
@@ -224,8 +224,8 @@ class MinHashStore(PinnedStore):
         the fraction of the k stored MinHash minima that agree
         (resolution 1/k; with the default k=6 use a coarse threshold).
 
-        Batch ids must be unique: duplicate ids would merge their
-        shingle sets into one frankendocument signature (run
+        Batch ids must be unique: a repeated id yields one signature
+        row per input row, all stored under that one id (run
         exact_dup_groups first if ids can repeat).
 
         stream_batch_id (for foreachBatch sinks): the micro-batch id,
@@ -252,14 +252,14 @@ class MinHashStore(PinnedStore):
                              " to run from stored signatures alone")
         self._pin_id_type(df, id_col)
         # release the PREVIOUS batch's plain caches (finding: a
-        # long-lived per-round store otherwise pins ~7 intermediates
+        # long-lived per-round store otherwise pins ~6 intermediates
         # per batch forever); truncated evidence stays pinned — see
         # _release_batch_intermediates
         self._release_batch_intermediates()
         ids = self._cache(
             df.select(F.col(id_col).alias("doc_id")).distinct())
-        sh, mins, sig, bands_new = self._sig_parts(df, id_col, text_col)
-        arr_new = self._cache(dedup.shingle_arrays(sh, "doc_id"))
+        arr_new, mins, sig, bands_new = self._sig_parts(
+            df, id_col, text_col)
 
         # new-vs-new: the batch family verbatim
         band_cols = [f"band{b + 1}" for b in range(self.num_bands)]
@@ -301,8 +301,8 @@ class MinHashStore(PinnedStore):
                        .select(F.col(id_col).alias("doc_id"),
                                F.col(text_col).alias("text"))
                        .join(old_ids, "doc_id", "left_semi"))
-            sh_old = dedup.distinct_shingles(old_sub, "doc_id", "text",
-                                             ngram=self.ngram)
+            arr_sub = dedup.doc_shingle_arrays(old_sub, "doc_id", "text",
+                                               ngram=self.ngram)
             # a candidate stored doc MISSING from corpus_df (stale or
             # filtered corpus, or its text shrank below the shingle
             # size) must fail loudly: jaccard_verify's inner join would
@@ -314,13 +314,12 @@ class MinHashStore(PinnedStore):
                       "corpus, or text now shorter than the shingle "
                       "size) — pass the corpus the store was built "
                       "from, or use verify='estimate'"))
-            arr_old = (old_ids.join(
-                dedup.shingle_arrays(sh_old, "doc_id"), "doc_id", "left")
-                .select("doc_id",
-                        F.when(F.col("sh").isNull(),
-                               F.raise_error(missing_err)
-                               .cast("array<string>"))
-                        .otherwise(F.col("sh")).alias("sh")))
+            arr_old = (old_ids.join(arr_sub, "doc_id", "left")
+                       .select("doc_id",
+                               F.when(F.col("sh").isNull(),
+                                      F.raise_error(missing_err)
+                                      .cast("array<string>"))
+                               .otherwise(F.col("sh")).alias("sh")))
             v_no = dedup.jaccard_verify(
                 cands_no.select(F.col("new_id").alias("id_a"),
                                 F.col("old_id").alias("id_b")),

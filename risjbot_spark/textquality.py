@@ -38,7 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import shingle_rows, tokens_expr
+from .dedup import ngrams_expr, tokens_expr
 
 __all__ = [
     "ngrams_expr",
@@ -86,29 +86,6 @@ def _as_group_list(group_cols) -> "list[str]":
 # Line split for boilerplate removal: regex so \r\n corpora work; the
 # reassembled text always uses plain \n (documented normalization).
 _LINE_RE = r"\r?\n"
-
-
-def ngrams_expr(toks, n: int) -> Column:
-    """Array of space-joined token n-grams from a token-array column —
-    the non-exploded sibling of `dedup.shingle_rows`, built the same
-    fast way (arrays_zip of n shifted slices, then one codegen'd
-    concat_ws per gram; see shingle_rows' docstring for why the
-    transform(sequence, slice) alternative is 10-20× slower). Guarded:
-    short docs short-circuit to an empty array (Spark's sequence(1, 0)
-    counts DOWN), and NULL tokens stay NULL."""
-    if n < 1:
-        raise ValueError(f"ngram size must be >= 1, got {n}")
-    shift_len = F.size(toks) - (n - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(toks, i + 1, shift_len) for i in range(n)])
-    grams = F.transform(
-        zipped,
-        lambda t: F.concat_ws(" ", *[t[str(i)] for i in range(n)]))
-    return (
-        F.when(toks.isNull(), F.lit(None).cast("array<string>"))
-        .when(F.size(toks) >= n, grams)
-        .otherwise(F.array().cast("array<string>"))
-    )
 
 
 def repetition_signals(df: DataFrame, id_col: str, text_col: str,
@@ -514,12 +491,12 @@ def decontaminate(train: DataFrame, eval_df: DataFrame,
     corpus-sized (e.g. cross-corpus overlap audits): the hint would
     otherwise push a multi-GB build past Spark's broadcast limits, and
     a plain shuffled join is the correct plan there."""
-    # "s" is shingle_rows' own output column (used for the eval side)
-    if id_col in ("n_hits", "n_doc_ngrams", "hit_frac", "s", _SH, _HIT):
+    if id_col in ("n_hits", "n_doc_ngrams", "hit_frac", _SH, _HIT):
         raise ValueError(f"id_col {id_col!r} collides with an output or "
                          "internal column of decontaminate")
-    ev = (shingle_rows(eval_df, id_col, text_col, ngram=ngram)
-          .select(F.col("s").alias(_SH)).distinct()
+    ev = (eval_df.select(F.explode(
+              ngrams_expr(tokens_expr(F.col(text_col)), ngram)).alias(_SH))
+          .distinct()
           .withColumn(_HIT, F.lit(1)))
     if broadcast_eval:
         ev = F.broadcast(ev)

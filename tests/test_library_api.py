@@ -86,8 +86,9 @@ def test_minhash_dedup_finds_planted_near_dups(corpus):
 
 
 def test_minhash_geometry_parameterized(corpus):
-    sh = dedup.distinct_shingles(corpus, "pk", "body", ngram=2)
-    sig = dedup.minhash_signatures(sh, "pk", num_bands=4, rows_per_band=2)
+    arrays = dedup.doc_shingle_arrays(corpus, "pk", "body", ngram=2)
+    sig = dedup.minhash_bands_expr(arrays, "pk", num_bands=4,
+                                   rows_per_band=2)
     assert set(sig.columns) == {"pk", "band1", "band2", "band3", "band4"}
     cands = dedup.banded_candidate_pairs(
         sig, "pk", ["band1", "band2", "band3", "band4"])
@@ -98,11 +99,13 @@ def test_minhash_geometry_parameterized(corpus):
 
 
 def test_ngram_width_changes_shingles(corpus):
-    one = dedup.distinct_shingles(corpus, "pk", "body", ngram=1)
-    five = dedup.distinct_shingles(corpus, "pk", "body", ngram=5)
-    n1 = one.filter(F.col("pk") == 6).count()   # "short" → 1 unigram
-    n5 = five.filter(F.col("pk") == 6).count()  # < 5 tokens → none
-    assert n1 == 1 and n5 == 0
+    one = dedup.doc_shingle_arrays(corpus, "pk", "body", ngram=1)
+    five = dedup.doc_shingle_arrays(corpus, "pk", "body", ngram=5)
+    sh1 = [r["sh"] for r in one.filter(F.col("pk") == 6).collect()]
+    n5 = five.filter(F.col("pk") == 6).count()  # < 5 tokens → no row
+    assert sh1 == [["short"]] and n5 == 0
+    # NULL text has no shingles at any width
+    assert one.filter(F.col("pk") == 7).count() == 0
 
 
 def test_simhash_dedup_arbitrary_schema(corpus):
@@ -382,39 +385,12 @@ def test_assign_strategies_agree(spark, vectors):
         ann.assign_nearest(e, "vec", cents, strategy="window")
 
 
-def test_minhash_expr_path_parity_with_exploded_blocks(corpus, spark):
-    """The zero-exchange shingle/signature path (doc_shingle_arrays +
-    minhash_bands_expr) must be VALUE-IDENTICAL to the exploded
-    distinct_shingles blocks: same per-doc coverage, same band md5s,
-    same verified pairs, and its executed plan must not exchange the
-    shingle stream (only the band join + verify join shuffle)."""
-    sh = dedup.distinct_shingles(corpus, "pk", "body")
-    sig_old = dedup.minhash_signatures(sh, "pk").collect()
-    arrays = dedup.doc_shingle_arrays(corpus, "pk", "body")
-    sig_new = dedup.minhash_bands_expr(arrays, "pk").collect()
-    assert {tuple(sorted(r.asDict().items())) for r in sig_old} \
-        == {tuple(sorted(r.asDict().items())) for r in sig_new}
-    # per-doc shingle SETS identical (docs with no shingles absent in
-    # both: "short" (6) and NULL (7) never sign)
-    old_sets = {r["pk"]: frozenset(r["sh"]) for r in
-                dedup.shingle_arrays(sh, "pk").collect()}
-    new_sets = {r["pk"]: frozenset(r["sh"]) for r in arrays.collect()}
-    assert old_sets == new_sets
-    assert 6 not in new_sets and 7 not in new_sets
-    # end-to-end pairs identical through the switched minhash_dedup
-    pairs_new = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
-                 dedup.minhash_dedup(corpus, "pk", "body").collect()}
-    cands = dedup.banded_candidate_pairs(
-        dedup.minhash_signatures(sh, "pk"), "pk", ["band1", "band2"])
-    pairs_old = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
-                 dedup.jaccard_verify(cands, sh, "pk").collect()}
-    assert pairs_new == pairs_old and pairs_new
-
-
 def test_minhash_expr_path_signature_stage_has_no_exchange(corpus):
-    """The signature stage itself must be exchange-free: shingling,
-    array_distinct, md5 minima, and banding all happen per-row."""
-    plan = dedup.minhash_bands_expr(
-        dedup.doc_shingle_arrays(corpus, "pk", "body"), "pk") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    """The signature stages themselves must be exchange-free:
+    shingling, array_distinct, md5 minima, banding and the SimHash
+    per-bit votes all happen per-row."""
+    arrays = dedup.doc_shingle_arrays(corpus, "pk", "body")
+    for sig in (dedup.minhash_bands_expr(arrays, "pk"),
+                dedup.simhash_fingerprints(arrays, "pk")):
+        plan = sig._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan

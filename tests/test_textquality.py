@@ -73,9 +73,10 @@ def test_colliding_id_col_raises(spark):
                                "n_tokens string, body string")
     with pytest.raises(ValueError, match="collides"):
         textquality.repetition_signals(df, "n_tokens", "body")
-    df2 = spark.createDataFrame([("a", "x y z")], "s string, body string")
+    df2 = spark.createDataFrame([("a", "x y z")],
+                                "hit_frac string, body string")
     with pytest.raises(ValueError, match="collides"):
-        textquality.decontaminate(df2, df2, "s", "body")
+        textquality.decontaminate(df2, df2, "hit_frac", "body")
 
 
 def test_modal_count_on_long_high_entropy_doc(spark):

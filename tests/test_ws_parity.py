@@ -12,6 +12,8 @@ asserts identical results, so the gate no longer depends on corpus
 cleanliness.
 """
 
+import os
+
 import duckdb
 import pandas as pd
 import pytest
@@ -67,10 +69,14 @@ def ws_sf(spark, tmp_path_factory):
 
 
 def _oracle_con(sf: str) -> duckdb.DuckDBPyConnection:
+    # a Spark-written table is a directory of part files; the generated
+    # sf dirs ship documents.parquet as one file
+    path = f"{sf}/documents.parquet"
+    if os.path.isdir(path):
+        path += "/*.parquet"
     con = duckdb.connect()
     con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet/*.parquet')")
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
     return con
 
 
@@ -78,30 +84,58 @@ def _oracle(name: str, sf: str) -> pd.DataFrame:
     return _oracle_con(sf).execute(Q.ORACLE_SQL[name]).df()
 
 
+def _assert_oracle_parity(spark, sf: str, name: str) -> None:
+    got = Q.QUERIES[name](spark, sf).toPandas()
+    want = _oracle(name, sf)
+    assert list(got.columns) == list(want.columns)
+    # sort on every column: pair queries repeat their first column
+    got = got.astype(str)
+    got = got.sort_values(list(got.columns)).reset_index(drop=True)
+    want = want.astype(str)
+    want = want.sort_values(list(want.columns)).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+# the near-dedup family: shingle arrays → MinHash/SimHash → band join →
+# Jaccard verify → components, and the incremental store built on them
+DEDUP_FAMILY = ["minhash_signature", "lsh_dup_pairs", "ngram_jaccard_pairs",
+                "dedup_clusters", "incremental_dedup",
+                "simhash_fingerprint", "simhash_dup_pairs"]
+
+
 @pytest.mark.parametrize("name", ["token_count", "quality_score",
                                   "doc_fingerprint", "wordcount",
                                   "repetition_signals", "decontaminate",
-                                  "quality_classifier", "dsir_scores"])
+                                  "quality_classifier", "dsir_scores",
+                                  *DEDUP_FAMILY])
 def test_doc_op_parity_on_exotic_whitespace(spark, ws_sf, name):
-    got = Q.QUERIES[name](spark, ws_sf).toPandas()
-    want = _oracle(name, ws_sf)
-    assert list(got.columns) == list(want.columns)
-    got = got.sort_values(got.columns[0]).reset_index(drop=True)
-    want = want.sort_values(want.columns[0]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got.astype(str), want.astype(str), check_dtype=False)
+    _assert_oracle_parity(spark, ws_sf, name)
+
+
+@pytest.mark.parametrize("name", DEDUP_FAMILY)
+def test_dedup_family_oracle_parity(spark, sf_dir, name):
+    """The dedup family against its DuckDB oracle on the generated
+    corpus, whose planted mutants give every stage real pairs."""
+    _assert_oracle_parity(spark, sf_dir, name)
 
 
 @pytest.mark.parametrize("name", ["corpus_stats", "pack_sequences"])
-def test_oracle_integer_columns_are_bigint(ws_sf, name):
+def test_oracle_integer_columns_are_bigint(spark, ws_sf, name):
     """DuckDB's sum() returns HUGEINT where Spark's returns BIGINT, so
     an un-cast oracle sum hashes differently from the Spark result:
-    every integer column an oracle returns must come back BIGINT."""
+    every integer column an oracle returns must come back BIGINT, and
+    the correctness twin's type check must pass against the real Spark
+    dtypes (its failing side: tests/test_check_correctness.py)."""
+    from tools import check_correctness as twin
+
     con = _oracle_con(ws_sf)
     rel = con.sql(Q.ORACLE_SQL[name])
     ints = {c: str(t) for c, t in zip(rel.columns, rel.types)
             if str(t).endswith("INT")}
     assert ints and all(t == "BIGINT" for t in ints.values()), ints
+    duck = [(c, str(t)) for c, t in zip(rel.columns, rel.types)]
+    assert twin.type_mismatches(Q.QUERIES[name](spark, ws_sf).dtypes,
+                                duck) == []
 
 
 def test_token_count_matches_python_split(spark, ws_sf):

@@ -1,6 +1,12 @@
 """Local pre-flight twin of the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
-compare row count, column names, and order-insensitive values."""
+compare column names, column type classes, row count, and
+order-insensitive values.
+
+Values are compared through `str()`, which hides type drift (a DuckDB
+HUGEINT sum prints like a Spark BIGINT one but hashes differently), so
+each column's type class — integer width, float width, decimal, string,
+bool, binary, and arrays of those — is compared on its own."""
 
 from __future__ import annotations
 
@@ -15,6 +21,43 @@ from pyspark.sql import SparkSession
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+# Spark dtype / DuckDB type name → class; a name not listed is its own
+# class (so e.g. a DuckDB UBIGINT never matches a Spark type)
+_TYPE_CLASSES = {
+    "tinyint": "int8", "smallint": "int16", "int": "int32",
+    "integer": "int32", "bigint": "int64", "hugeint": "int128",
+    "float": "float32", "double": "float64", "decimal": "decimal",
+    "boolean": "bool", "string": "string", "varchar": "string",
+    "binary": "binary", "blob": "binary",
+}
+
+
+def type_class(t: str) -> str:
+    """Engine-neutral class of a Spark dtype string (`bigint`,
+    `array<double>`, `decimal(10,2)`) or a DuckDB type name (`BIGINT`,
+    `DOUBLE[]`, `DECIMAL(10,2)`). Struct and map fields are not
+    compared."""
+    t = t.strip().lower()
+    if t.endswith("[]"):
+        return f"array<{type_class(t[:-2])}>"
+    if t.startswith("array<") and t.endswith(">"):
+        return f"array<{type_class(t[len('array<'):-1])}>"
+    for nested in ("struct", "map"):
+        if t.startswith(nested):
+            return nested
+    base = t.split("(")[0].strip()
+    return _TYPE_CLASSES.get(base, base)
+
+
+def type_mismatches(spark_dtypes, duck_types):
+    """[(column, spark class, duckdb class)] for every column both sides
+    return whose type classes differ; both arguments are
+    [(column, type string)] lists."""
+    duck = {c: type_class(t) for c, t in duck_types}
+    return [(c, type_class(t), duck[c]) for c, t in spark_dtypes
+            if c in duck and type_class(t) != duck[c]]
 
 
 def canon_cell(v):
@@ -39,7 +82,7 @@ def canon_rows(cols, rows):
 def main(sf_dir: str, only: list[str]):
     # the driver calls __spark_entry__.queries()/oracle_sql(), which adds
     # the crawl-engine end-to-end queries on top of risjbot_spark.queries
-    # — check exactly that surface; --extended widens to the full 65-query
+    # — check exactly that surface; --extended widens to the full 61-query
     # surface including the entries retired from the driver's 50-row window
     import __spark_entry__ as entry
 
@@ -75,6 +118,7 @@ def main(sf_dir: str, only: list[str]):
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
+            stypes = sdf.dtypes
             srows = sdf.collect()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
@@ -84,24 +128,31 @@ def main(sf_dir: str, only: list[str]):
             print(f"ROWS  {name}: {len(srows)} rows (no oracle)")
             continue
         try:
-            res = con.execute(sql)
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
+            rel = con.sql(sql)
+            dcols = rel.columns
+            dtypes = [(c, str(t)) for c, t in zip(dcols, rel.types)]
+            drows = rel.fetchall()
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             failures += 1
             continue
         sc, sv = canon_rows(scols, [tuple(r) for r in srows])
         dc, dv = canon_rows(dcols, drows)
+        problems = []
         if sc != dc:
-            print(f"FAIL  {name}: columns differ spark={sc} duck={dc}")
-            failures += 1
-        elif len(sv) != len(dv):
-            print(f"FAIL  {name}: rowcount spark={len(sv)} duck={len(dv)}")
-            failures += 1
-        elif sv != dv:
-            diff = [(a, b) for a, b in zip(sv, dv) if a != b][:3]
-            print(f"FAIL  {name}: values differ, first diffs: {diff}")
+            problems.append(f"columns differ spark={sc} duck={dc}")
+        else:
+            bad_types = type_mismatches(stypes, dtypes)
+            if bad_types:
+                problems.append("column types differ (column, spark, "
+                                f"duck): {bad_types}")
+            if len(sv) != len(dv):
+                problems.append(f"rowcount spark={len(sv)} duck={len(dv)}")
+            elif sv != dv:
+                diff = [(a, b) for a, b in zip(sv, dv) if a != b][:3]
+                problems.append(f"values differ, first diffs: {diff}")
+        if problems:
+            print(f"FAIL  {name}: " + "; ".join(problems))
             failures += 1
         else:
             print(f"OK    {name}: {len(sv)} rows")
