@@ -71,17 +71,13 @@ def build_parser() -> argparse.ArgumentParser:
                    help="compact the seen base flat instead of bucketed "
                         "by url_hash")
     c.add_argument("--bloom-backend",
-                   choices=["driver", "table", "cuckoo", "auto"],
+                   choices=["driver", "table", "auto"],
                    default="auto",
                    help="'table' keeps bloom bitmaps as a bucket-keyed "
                         "parquet table built/probed distributed (the "
                         "10^10-key path); 'driver' broadcasts them; "
-                        "'cuckoo' uses a partitioned cuckoo filter that "
-                        "supports DELETION (trim rounds remove trimmed "
-                        "keys from the filter exactly; opt-in, sized by "
-                        "cuckoo_slots_per_bucket); 'auto' (default) "
-                        "picks driver/table by key count vs the driver "
-                        "budget")
+                        "'auto' (default) picks driver/table by key "
+                        "count vs the driver budget")
     c.add_argument("--comments-host", default="",
                    help="chase viafoura comment threads for pages on "
                         "this host (e.g. liverpoolecho.co.uk) via the "

@@ -84,8 +84,9 @@ class CrawlConfig:
     round_seconds: int = 3600            # politeness budget horizon
     num_partitions: int = 32
     salt: int = 0                 # >0 → salted-host fetch layout (HTTP mode)
-    # Scale-backend selection (the four flags below): every flag accepts
-    # an explicit value as an override, but the DEFAULT is auto — the
+    # Scale-backend selection (broadcast_frontier, bloom_backend,
+    # robots_scale_path): each accepts an explicit value as an override,
+    # but the DEFAULT is auto — the
     # engine picks the 100×-safe backend from observed scale (bloom key
     # count vs a driver budget, frontier rows vs a broadcast budget,
     # robots host count) and records each choice + the evidence in
@@ -96,33 +97,24 @@ class CrawlConfig:
     # flags were the last way to OOM the driver by default.)
     broadcast_frontier: bool | None = None   # None → auto per round
     use_bloom: bool = True
+    # Seen pre-filter in front of the authoritative seen join (J1); a
+    # false positive costs one join row, never output. Two backends,
+    # one probe each:
     # "driver": PartitionedBloom — bitmaps in a driver dict, broadcast
-    #   probe; right while the filter fits comfortably in driver memory.
+    #   probe; right while the filter fits comfortably in driver memory
+    #   (at default geometry the bitmaps stay ≤ 32 MiB below the
+    #   20M-key budget).
     # "table": DistributedBloomTable — bitmaps as a bucket-keyed parquet
-    #   table, built/merged/probed distributed; the 10^10-key path (the
-    #   driver holds only n_buckets/m/n_keys). Output-identical
-    #   (parity-tested); per-round cost adds one small Spark job.
-    # "cuckoo": PartitionedCuckoo (frontier/cuckoo.py) — the north_star's
-    #   literal filter: driver-resident fingerprint tables that support
-    #   DELETION, so trim rounds remove trimmed keys from the filter
-    #   exactly instead of leaving false-positive fodder until a
-    #   rebuild. Explicit opt-in only (auto picks driver/table); size
-    #   cuckoo_slots_per_bucket for the expected live keys.
-    # "auto": driver below driver_bloom_max_keys expected keys, table at
-    #   or above it; a driver-backed warehouse that outgrows the budget
-    #   is promoted to the table backend at the next engine construction
+    #   table, built/merged/probed distributed, partition-aligned probe;
+    #   the 10^10-key path (the driver holds only n_buckets/m/n_keys).
+    #   Output-identical (parity-tested); per-round cost adds one small
+    #   Spark job.
+    # "auto": driver up to driver_bloom_max_keys expected keys, table
+    #   above it; a driver bloom that outgrows the budget is promoted to
+    #   the table backend mid-run or at the next engine construction
     #   (rebuild from the seen snapshot — durable, one-time).
+    # Any other value raises ValueError at engine construction.
     bloom_backend: str = "auto"
-    # cuckoo geometry: slots/shard (power of two; ×4 16-bit lanes each).
-    # Capacity ≈ n_buckets × slots × 4 × 0.84 live keys before the
-    # overfull() grow-4× rebuild.
-    cuckoo_slots_per_bucket: int = 1 << 13
-    # partition-aligned bloom probe (bucket-shipped bitmaps via cogroup)
-    # instead of broadcasting the whole filter — for when the filter
-    # outgrows what executors can hold broadcast (the table backend
-    # always probes aligned). None → auto: aligned once the driver
-    # filter's bitmap bytes exceed bloom_broadcast_max_bytes.
-    bloom_aligned_probe: bool | None = None
     # auto-mode thresholds. driver_bloom_max_keys: a driver bloom at
     # ~10 bits/key costs n_keys×1.25 B broadcast every round — 20M keys
     # ≈ 25 MB is comfortable, 10^8+ belongs in the table.
@@ -132,7 +124,6 @@ class CrawlConfig:
     # beyond that the SMJ on the bucketed pages side wins — the shape
     # scale_path_10m benched).
     broadcast_frontier_max_rows: int = 1_000_000
-    bloom_broadcast_max_bytes: int = 64 << 20
     # robots host count at which rules stop being a driver dict
     robots_scale_hosts: int = 200_000
     bloom_buckets: int = 64
@@ -235,6 +226,10 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
+        if self.cfg.bloom_backend not in ("auto", "driver", "table"):
+            raise ValueError(
+                f"bloom_backend must be 'auto', 'driver' or 'table', "
+                f"got {self.cfg.bloom_backend!r}")
         self.fetcher = fetcher
         self._round_caches: list = []   # per-round persists, see run_round
         self._rules_bc = None           # robots dict Broadcast, built once
@@ -387,33 +382,6 @@ class CrawlEngine:
                         self.bloom.rebuild_from(
                             self.seen().select("url_hash"))
                         self._write_bloom_marker()
-            elif self.bloom_backend == "cuckoo":
-                from .frontier.cuckoo import PartitionedCuckoo
-
-                loaded = PartitionedCuckoo.load(self._bloom_dir)
-                self.bloom = loaded
-                if (self.bloom is not None
-                        and self._bloom_marker() != (cur, "cuckoo")):
-                    self.bloom = None
-                if self.bloom is None:
-                    # a stale checkpoint's grown geometry is still the
-                    # right geometry (same rationale as the bloom reload)
-                    nb = (loaded.n_buckets if loaded
-                          else self.cfg.bloom_buckets)
-                    slots = (loaded.slots if loaded
-                             else self.cfg.cuckoo_slots_per_bucket)
-                    if cur is not None:
-                        # size to the keys about to be inserted (the
-                        # table branch's _bloom_bits_for rationale): a
-                        # default-geometry build over a big existing
-                        # seen table would stash millions of keys on
-                        # the driver and burn grow-4× rebuilds
-                        n = self.seen().count()
-                        slots = self._cuckoo_slots_for(n, nb, slots)
-                        self.bloom = PartitionedCuckoo.from_seen(
-                            self.seen().select("url_hash"), nb, slots)
-                    else:
-                        self.bloom = PartitionedCuckoo(nb, slots)
             else:
                 loaded = (self._preloaded_bloom
                           if isinstance(self._preloaded_bloom,
@@ -584,16 +552,6 @@ class CrawlEngine:
             m *= 4
         return m
 
-    def _cuckoo_slots_for(self, n_keys: int, n_buckets: int,
-                          floor_slots: int) -> int:
-        """slots/shard sized so n_keys fit under the 0.84 overfull load
-        (4 lanes per slot), power-of-two, floored at the configured or
-        checkpointed geometry — the cuckoo twin of _bloom_bits_for."""
-        slots = floor_slots
-        while n_buckets * slots * 4 * 0.84 < n_keys:
-            slots *= 4
-        return slots
-
     def _resolve_broadcast_frontier(self) -> bool:
         """Per-round broadcast-vs-SMJ choice for the fetch join when
         broadcast_frontier=None. Evidence costs no extra job: the
@@ -615,31 +573,6 @@ class CrawlEngine:
             why = (f"frontier ≈ {est} rows vs broadcast budget "
                    f"{self.cfg.broadcast_frontier_max_rows}")
         self.backend_choices["broadcast_frontier"] = {
-            "value": val, "auto": True, "why": why}
-        return val
-
-    def _resolve_aligned_probe(self) -> bool:
-        """Aligned (bucket-shipped cogroup) vs broadcast bloom probe for
-        the driver backend when bloom_aligned_probe=None: broadcast
-        while the bitmaps fit bloom_broadcast_max_bytes, aligned beyond
-        it. The table backend always probes aligned regardless."""
-        if self.cfg.bloom_aligned_probe is not None:
-            self.backend_choices["bloom_aligned_probe"] = {
-                "value": self.cfg.bloom_aligned_probe, "auto": False,
-                "why": "explicit"}
-            return self.cfg.bloom_aligned_probe
-        bitmaps = getattr(self.bloom, "bitmaps", None)
-        tables = getattr(self.bloom, "tables", None)
-        if bitmaps is None and tables is None:
-            # table backend: split IS aligned
-            val, why = False, "table backend probes aligned by design"
-        else:
-            shards = bitmaps if bitmaps is not None else tables
-            bm_bytes = len(shards) * (self.bloom.m // 8)
-            val = bm_bytes > self.cfg.bloom_broadcast_max_bytes
-            why = (f"driver filter ≈ {bm_bytes} B vs broadcast budget "
-                   f"{self.cfg.bloom_broadcast_max_bytes}")
-        self.backend_choices["bloom_aligned_probe"] = {
             "value": val, "auto": True, "why": why}
         return val
 
@@ -951,10 +884,7 @@ class CrawlEngine:
                 return seen_filter(f, seen, cfg.refetch, round_ts)
 
         if cfg.use_bloom and self.bloom is not None:
-            split = (self.bloom.split_aligned
-                     if self._resolve_aligned_probe()
-                     else self.bloom.split)
-            maybe, fresh = split(fr, self.spark)
+            maybe, fresh = self.bloom.split(fr, self.spark)
             gated = gate(maybe)
             eligible = gated.unionByName(
                 fresh.withColumn("previousfetches", F.lit(0).cast("int"))
@@ -1177,8 +1107,8 @@ class CrawlEngine:
                     # AQE's empty-stage propagation can replace an
                     # all-empty runtime subtree with an EmptyRelation,
                     # eliminating its CollectMetrics node — obs.get then
-                    # yields an empty row (seen under the aligned bloom
-                    # probe's cogroup when a round gates every URL). The
+                    # yields an empty row (seen under the table bloom's
+                    # cogroup probe when a round gates every URL). The
                     # write action DID execute the plan, so the faithful
                     # count for the vanished node is 0.
                     row = {}
@@ -1234,8 +1164,6 @@ class CrawlEngine:
         # keep-forever), not a ZeroDivisionError
         compact = (cfg.trim_every > 0 and round_no > 0
                    and round_no % cfg.trim_every == 0)
-        trimmed_keys_df = None    # set on cuckoo-backend trim rounds
-        trimmed_keys_arr = None   # collected right after the commit
         if compact:
             if parts is not None:
                 # split-form MERGE: this round's resolved updates are
@@ -1265,20 +1193,8 @@ class CrawlEngine:
                 # pipeline recompute, and the protected set is exactly
                 # what this round requested even if the frontier
                 # assembly reads state the round has since committed.
-                if (self.bloom is not None
-                        and self.bloom_backend == "cuckoo"):
-                    # the cuckoo backend DELETES trimmed keys from the
-                    # filter (the capability the blooms lack) — keep the
-                    # deleted-key plan; it is collected after the seen
-                    # commit (its inputs are snapshot files that the
-                    # replace-commit does not remove)
-                    from .frontier.state import trim_seen_with_deletes
-
-                    new_seen, trimmed_keys_df = trim_seen_with_deletes(
-                        new_seen, requested_keys, cfg.refetch, round_ts)
-                else:
-                    new_seen = trim_seen(
-                        new_seen, requested_keys, cfg.refetch, round_ts)
+                new_seen = trim_seen(
+                    new_seen, requested_keys, cfg.refetch, round_ts)
             # base partitions by last-fetch day (the pruned trawl skips
             # day directories outside its window — SURVEY §4) and, on
             # the bucketed path, clusters by url_hash so next rounds'
@@ -1294,19 +1210,6 @@ class CrawlEngine:
                 bucket_by="url_hash" if cfg.bucket_seen_base else None,
                 n_buckets=cfg.seen_buckets,
             )
-            if trimmed_keys_df is not None:
-                # cuckoo backend: pull the trimmed keys NOW — after the
-                # commit (the replace leaves prior snapshot files on
-                # disk) but BEFORE expire_snapshots below physically
-                # deletes the pre-compaction files this plan reads
-                # (expire_keep_last=1 made a post-expire collect throw
-                # FileNotFound on every trim round)
-                # Arrow batch transfer, not row pickling — trim deltas
-                # are bounded by trim_every but can still reach millions
-                # of keys on a big table
-                trimmed_keys_arr = (trimmed_keys_df
-                                    .select("url_hash").toArrow()
-                                    .column("url_hash").to_numpy())
             if cfg.expire_keep_last > 0:
                 # maintenance rides the compaction commit: pre-compaction
                 # delta snapshots age out once K newer ones exist
@@ -1325,19 +1228,16 @@ class CrawlEngine:
             )
         _mark("seen_merge_commit")
         if self.bloom is not None:
-            # incremental, this round's keys only; small rounds update on
-            # the driver (no extra Spark job). The cuckoo backend adds
-            # FIRST-fetch keys only: refetched keys are already in the
-            # filter, and the exactly-once insert discipline is what
-            # makes its deletions safe (frontier/cuckoo.py).
-            if self.bloom_backend == "cuckoo":
-                self.bloom.add_df(
-                    fetched_keys.filter(F.col("previousfetches") == 0),
-                    driver_threshold=2_000_000)
-                if trimmed_keys_arr is not None and len(trimmed_keys_arr):
-                    self.bloom.delete_local(trimmed_keys_arr)
-            else:
-                self.bloom.add_df(fetched_keys, driver_threshold=2_000_000)
+            # incremental, this round's FIRST-fetch keys only; small
+            # rounds update on the driver (no extra Spark job). A
+            # refetched key is already in the filter — the filter ⊇ seen
+            # at round start (init rebuilds on a stale marker, recovery
+            # commits before bloom setup) — so adding it again would
+            # only inflate n_keys, which drives overfull() growth and the
+            # driver→table promotion below.
+            self.bloom.add_df(
+                fetched_keys.filter(F.col("previousfetches") == 0),
+                driver_threshold=2_000_000)
             if (cfg.bloom_backend == "auto"
                     and self.bloom_backend == "driver"
                     and self.bloom.n_keys > cfg.driver_bloom_max_keys):
@@ -1371,12 +1271,6 @@ class CrawlEngine:
                     self.bloom.rebuild_from(
                         self.seen().select("url_hash"),
                         bits_per_bucket=self.bloom.m * 4)
-                elif self.bloom_backend == "cuckoo":
-                    from .frontier.cuckoo import PartitionedCuckoo
-
-                    self.bloom = PartitionedCuckoo.from_seen(
-                        self.seen().select("url_hash"),
-                        self.bloom.n_buckets, self.bloom.slots * 4)
                 else:
                     self.bloom = PartitionedBloom.from_seen(
                         self.seen(), self.bloom.n_buckets, self.bloom.m * 4)

@@ -1,5 +1,5 @@
 """Partitioned, incrementally-maintained bloom filter for URL-seen
-pre-filtering (north_star "partitioned cuckoo/bloom URL-seen set").
+pre-filtering (the north_rule's partitioned URL-seen set).
 
 At a 10^10-URL frontier, shuffling every candidate URL into the seen-set
 join dominates round cost, and most candidates are brand new. Design:
@@ -9,12 +9,12 @@ join dominates round cost, and most candidates are brand new. Design:
   * built distributedly (applyInPandas per bucket), merged on the driver
     (the driver already holds the dict to broadcast it);
   * maintained INCREMENTALLY: each round ORs in a delta built from that
-    round's fetched keys only — never a full seen-table rescan;
+    round's first-fetch keys only — never a full seen-table rescan;
   * serialized into the checkpoint warehouse and reloaded on resume;
     a missing/stale file falls back to a rebuild from the seen snapshot;
   * false positives fall through to the authoritative left-outer join —
     the filter can only cost a join row, never correctness
-    (SURVEY.md §7 "cuckoo filter at 10^10 scale").
+    (SURVEY.md §7, seen filter at 10^10 scale).
 
 Sizing is ADAPTIVE: the filter starts small (default 2^18 bits/bucket ×
 64 buckets = 2 MiB, ~1.6 M keys at 10 bits/key) and, when the tracked
@@ -23,8 +23,11 @@ seen snapshot (one scan, amortized over the rounds that quadrupling
 buys). A right-sized filter matters on the round critical path: the
 probe broadcasts the bitmaps every round, and a 32 MiB broadcast +
 checkpoint for a 200 k-key table cost ~1 s/round of pure Amdahl drag.
-At 10^10 keys, scale n_buckets as well (one filter shard per url_hash
-range) and probe partition-aligned instead of broadcasting.
+
+The driver bloom has one probe, the broadcast `split`. At default
+geometry its bitmaps stay at or below 32 MiB up to the engine's 20M-key
+driver budget; beyond that the engine promotes to the table backend
+(bloom_table.py: distributed bitmaps, partition-aligned probe).
 """
 
 from __future__ import annotations
@@ -55,7 +58,9 @@ class PartitionedBloom:
         self.n_buckets = n_buckets
         self.m = bits_per_bucket
         self.bitmaps: dict[int, np.ndarray] = {}
-        # inserted-key upper bound (re-adds counted again); drives growth
+        # key-count upper bound: the engine adds first-fetch keys only,
+        # but a trimmed key that is re-requested is added again; drives
+        # growth
         self.n_keys = 0
         # cached Spark broadcast of the bitmaps: re-broadcasting per
         # split() call accumulated one N-MiB broadcast block per round on
@@ -173,52 +178,6 @@ class PartitionedBloom:
         flagged = frontier.withColumn("_maybe", maybe_seen(F.col("url_hash")))
         return (flagged.filter(F.col("_maybe")).drop("_maybe"),
                 flagged.filter(~F.col("_maybe")).drop("_maybe"))
-
-    def split_aligned(self, frontier: DataFrame, spark) -> tuple[DataFrame, DataFrame]:
-        """Partition-aligned probe — the 10^10-key path. Broadcasting the
-        whole filter stops scaling once bitmaps outgrow executor memory;
-        here each bucket's bitmap ships exactly once to the task probing
-        that bucket's frontier rows: frontier cogrouped with a
-        (bucket, bitmap) DataFrame on url_hash % n_buckets. Output is
-        identical to split() (asserted in tests); cost is one shuffle of
-        the frontier keys by bucket instead of a full-filter broadcast."""
-        if not self.bitmaps:
-            return frontier.limit(0), frontier
-        nb, m = self.n_buckets, self.m
-        bm_df = spark.createDataFrame(
-            [(int(b), v.tobytes()) for b, v in self.bitmaps.items()],
-            "bucket int, bitmap binary")
-        fr = frontier.withColumn(
-            "_b", F.pmod(F.col("url_hash"), F.lit(nb)).cast("int"))
-        out_schema = T.StructType(
-            fr.schema.fields + [T.StructField("_maybe", T.BooleanType())])
-
-        def probe(key, left, right):
-            left = left.copy()
-            if len(left) == 0:
-                left["_maybe"] = pd.Series([], dtype=bool)
-                return left
-            if len(right) == 0:
-                left["_maybe"] = False
-                return left
-            bits = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
-            h = left["url_hash"].to_numpy()
-            pos = _positions(h, m)
-            hit = np.ones(len(h), dtype=bool)
-            for kk in range(_K):
-                p = pos[kk]
-                hit &= (bits[p >> 3]
-                        & (np.uint8(1) << (p & 7).astype(np.uint8))) != 0
-            left["_maybe"] = hit
-            return left
-
-        flagged = (
-            fr.groupBy("_b")
-            .cogroup(bm_df.groupBy("bucket"))
-            .applyInPandas(probe, schema=out_schema)
-        )
-        return (flagged.filter(F.col("_maybe")).drop("_maybe", "_b"),
-                flagged.filter(~F.col("_maybe")).drop("_maybe", "_b"))
 
     # -- checkpoint ---------------------------------------------------------
     def save(self, path: str) -> None:

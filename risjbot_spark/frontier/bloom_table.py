@@ -16,9 +16,8 @@ round. Here the bitmaps are a first-class *table*:
     broadcast);
   * probed partition-aligned: frontier cogrouped with the bitmap table
     on url_hash % n_buckets — each bucket's bitmap ships exactly once to
-    the task probing that bucket's rows (bloom.py:split_aligned's plan,
-    with the table side read from parquet instead of re-shipped from
-    driver memory);
+    the task probing that bucket's rows, read from parquet (the driver
+    bloom broadcasts its whole dict instead);
   * the driver holds ONLY (n_buckets, m, n_keys, version, pending
     manifest) — a few ints in `meta.json`, swapped atomically after
     each version write;
@@ -33,7 +32,7 @@ round. Here the bitmaps are a first-class *table*:
 
 False positives still fall through to the authoritative seen join —
 same correctness contract as PartitionedBloom (probe parity is locked
-by tests/test_frontier.py against split() on identical keys).
+by tests/test_scale_mechanics.py against split() on identical keys).
 """
 
 from __future__ import annotations
@@ -93,7 +92,7 @@ def _or_merge(pdf: pd.DataFrame) -> pd.DataFrame:
 
 class DistributedBloomTable:
     """Interface-compatible with PartitionedBloom where the engine needs
-    it (split / split_aligned / add_df / overfull / save / from_seen),
+    it (split / add_df / overfull / save / from_seen),
     with every bitmap byte staying executor-side."""
 
     def __init__(self, spark: SparkSession, path: str,
@@ -104,7 +103,7 @@ class DistributedBloomTable:
         self.path = path
         self.n_buckets = n_buckets
         self.m = bits_per_bucket
-        self.n_keys = 0          # inserted-key upper bound (drives growth)
+        self.n_keys = 0          # key-count upper bound (drives growth)
         self.version = 0         # 0 → empty filter (no data dir yet)
         # LSM pending layer: small rounds append their raw keys
         # (O(delta) bytes) instead of rewriting dense bitmaps; a fold

@@ -314,31 +314,16 @@ def trim_seen(
     """J3b — state compaction: delete rows too old to refetch that were
     not requested this run (refetchcontrol.py:180-193; the VACUUM becomes
     snapshot replacement). left_anti = `key not in keysrqd`."""
-    kept, _ = trim_seen_with_deletes(seen, requested, cfg, round_ts)
-    return kept
-
-
-def trim_seen_with_deletes(
-    seen: DataFrame, requested: DataFrame, cfg: RefetchConfig,
-    round_ts: datetime,
-) -> tuple[DataFrame, DataFrame | None]:
-    """trim_seen, also returning the DELETED keys (url_hash) — built
-    from the same marked plan, so kept ∪ deleted == seen exactly. The
-    cuckoo seen-filter backend uses the deleted set to remove trimmed
-    keys from the filter (a capability the blooms lack); deleted is
-    None when trimming is off."""
     if not cfg.trimdb:
-        return seen, None
+        return seen
     age = _age_secs(round_ts)
     stale = F.col("_stale")
     marked = seen.withColumn(
         "_stale", age(F.col("last_fetch")) >= cfg.age_limit_secs
     )
     keep_fresh = marked.filter(~stale)
-    req = requested.select("url_hash").distinct()
-    stale_requested = marked.filter(stale).join(req, "url_hash", "left_semi")
-    deleted = (marked.filter(stale)
-               .join(req, "url_hash", "left_anti")
-               .select("url_hash"))
-    return (keep_fresh.unionByName(stale_requested).drop("_stale"),
-            deleted)
+    stale_requested = (
+        marked.filter(stale)
+        .join(requested.select("url_hash").distinct(), "url_hash", "left_semi")
+    )
+    return keep_fresh.unionByName(stale_requested).drop("_stale")

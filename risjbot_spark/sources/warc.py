@@ -946,9 +946,14 @@ def write_cdx_cluster(spark: SparkSession, archive_dir: str,
 
     `out_dir` must be a directory openable from executors (same
     contract as write_warc); the build actually writes into the
-    SIBLING `out_dir + ".build"` (same filesystem) and atomically
-    swaps it in, so a rebuild that dies mid-build never touches the
-    live index and the swap is recovered on the next build.  Returns
+    SIBLING `out_dir + ".build"` (same filesystem) and swaps it in with
+    two renames, so a rebuild that dies mid-build never touches the
+    live index (its partial `.build` is removed) and a crash between
+    the renames is recovered on the next build.  Between the two
+    renames `out_dir` briefly does not exist: a concurrent lookup then
+    raises FileNotFoundError.  The `.build` and `.trash` siblings, like
+    `out_dir`, must hold nothing but index output — anything else is
+    refused, never deleted.  Returns
     the per-shard manifest (n_bytes = on-disk bytes).  Lookups:
     `cdx_cluster_lookup` (driver-side, no Spark jobs)."""
     import glob as _glob
@@ -962,31 +967,42 @@ def write_cdx_cluster(spark: SparkSession, archive_dir: str,
 
     import shutil as _shutil
 
-    # Build into a SIBLING dir and atomically swap at the end (the
-    # edge-log replace-commit idiom): this index serves live point
+    # Build into a SIBLING dir and swap it in at the end (the edge-log
+    # replace-commit idiom, two renames): this index serves live point
     # lookups, so a rebuild that dies mid-sort must never have
     # destroyed the previous good index.  The swap also supersedes the
     # old in-place stale-file cleanup — a fresh build dir can't carry
     # orphan shards from a previous larger-shard-count build.
     build_dir = out_dir.rstrip("/") + ".build"
     trash_dir = out_dir.rstrip("/") + ".trash"
+
+    def _refuse_strays(d: str) -> None:
+        # refuse rather than rename away or delete a user's co-located
+        # data. Index output: cdx-* shards, cluster.idx, .cluster-*
+        # parts, and the *.tmp droppings a crashed build leaves of each
+        # (cluster.idx.tmp included)
+        if not _os.path.exists(d):
+            return
+        stray = [e for e in _os.listdir(d)
+                 if not (e.startswith(("cdx-", ".cluster-"))
+                         or e.removesuffix(".tmp") == "cluster.idx")]
+        if stray:
+            raise ValueError(
+                f"write_cdx_cluster: {d!r} contains non-index "
+                f"entries {stray[:5]!r} — the rebuild swaps, moves and "
+                f"deletes WHOLE directories; point out_dir at a "
+                f"dedicated index dir")
+
     # recover an interrupted previous swap: a crash between the two
     # renames leaves the old index parked at .trash with no live dir
     if _os.path.exists(trash_dir):
         if not _os.path.exists(out_dir):
             _os.rename(trash_dir, out_dir)
         else:
+            _refuse_strays(trash_dir)
             _shutil.rmtree(trash_dir, ignore_errors=True)
-    if _os.path.exists(out_dir):
-        stray = [e for e in _os.listdir(out_dir)
-                 if not (e.startswith("cdx-") or e == "cluster.idx"
-                         or e.startswith(".cluster-"))]
-        if stray:
-            # refuse rather than rename a user's co-located data away
-            raise ValueError(
-                f"write_cdx_cluster: {out_dir!r} contains non-index "
-                f"entries {stray[:5]!r} — the rebuild swaps the WHOLE "
-                f"directory; point out_dir at a dedicated index dir")
+    _refuse_strays(out_dir)
+    _refuse_strays(build_dir)
     if _os.path.exists(build_dir):
         _shutil.rmtree(build_dir)
     _os.makedirs(build_dir)
@@ -1064,26 +1080,35 @@ def write_cdx_cluster(spark: SparkSession, archive_dir: str,
             [(name, n_lines, n_bytes, first_key, last_key)],
             columns=[f.name for f in CDX_CLUSTER_MANIFEST_SCHEMA.fields])
 
-    manifest = (
-        _cluster_sorted_index(idx, shards=shards)
-        .mapInPandas(_write, schema=CDX_CLUSTER_MANIFEST_SCHEMA)
-    ).collect()
+    try:
+        manifest = (
+            _cluster_sorted_index(idx, shards=shards)
+            .mapInPandas(_write, schema=CDX_CLUSTER_MANIFEST_SCHEMA)
+        ).collect()
 
-    # assemble cluster.idx from the per-shard samples, in shard order
-    # (shard files are range-partitioned, so concatenation IS the
-    # global order); driver cost is O(records / block) — tiny
-    parts = sorted(_glob.glob(_os.path.join(build_dir, ".cluster-*.part")))
-    with open(_os.path.join(build_dir, "cluster.idx.tmp"), "w",
-              encoding="utf-8", newline="") as out:
-        for p in parts:
-            with open(p, encoding="utf-8", newline="") as fh:
-                out.write(fh.read())
-            _os.remove(p)
-    _os.replace(_os.path.join(build_dir, "cluster.idx.tmp"),
-                _os.path.join(build_dir, "cluster.idx"))
-    # the swap: two renames; lookups against the old index stay valid
-    # to the last instant, and a crash between them is recovered by the
-    # next build (old index restored from .trash above)
+        # assemble cluster.idx from the per-shard samples, in shard
+        # order (shard files are range-partitioned, so concatenation IS
+        # the global order); driver cost is O(records / block) — tiny
+        parts = sorted(_glob.glob(_os.path.join(build_dir,
+                                                ".cluster-*.part")))
+        with open(_os.path.join(build_dir, "cluster.idx.tmp"), "w",
+                  encoding="utf-8", newline="") as out:
+            for p in parts:
+                with open(p, encoding="utf-8", newline="") as fh:
+                    out.write(fh.read())
+                _os.remove(p)
+        _os.replace(_os.path.join(build_dir, "cluster.idx.tmp"),
+                    _os.path.join(build_dir, "cluster.idx"))
+    except BaseException:
+        # a failed build owns nothing worth keeping: drop the partial
+        # tree now instead of leaving it on disk until the next rebuild
+        _shutil.rmtree(build_dir, ignore_errors=True)
+        raise
+    # the swap: two renames. Lookups read the old index until the
+    # first rename and the new one after the second; between them
+    # out_dir does not exist and a concurrent lookup raises
+    # FileNotFoundError. A crash between them is recovered by the next
+    # build (old index restored from .trash above)
     if _os.path.exists(out_dir):
         _os.rename(out_dir, trash_dir)
     _os.rename(build_dir, out_dir)

@@ -10,6 +10,7 @@ auto-resolution regression."""
 
 from datetime import datetime, timedelta, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from risjbot_spark.corpus import pages_df
@@ -32,7 +33,7 @@ def _engine(spark, tmp_path, pages, name="wh", robots=None, **cfg_kw):
 
 def test_small_scale_resolves_to_fast_paths(spark, tmp_path):
     """Defaults at sandbox scale: driver bloom, broadcast fetch, dict
-    robots, broadcast bloom probe — each recorded as an auto choice."""
+    robots — each recorded as an auto choice."""
     pages = pages_df(spark, 30, partitions=2)
     robots = spark.createDataFrame(
         [("example.com", "User-agent: *\nAllow: /")], ROBOTS_SCHEMA)
@@ -49,7 +50,6 @@ def test_small_scale_resolves_to_fast_paths(spark, tmp_path):
     assert ch["robots_scale_path"]["auto"] is True
     assert ch["broadcast_frontier"]["value"] is True
     assert ch["broadcast_frontier"]["auto"] is True
-    assert ch["bloom_aligned_probe"]["value"] is False
 
 
 def test_bloom_flips_to_table_beyond_driver_budget(spark, tmp_path):
@@ -128,18 +128,14 @@ def test_frontier_stops_broadcasting_beyond_row_budget(spark, tmp_path):
     assert eng2.backend_choices["broadcast_frontier"]["value"] is False
 
 
-def test_aligned_probe_flips_on_bitmap_bytes(spark, tmp_path):
-    pages = pages_df(spark, 30, partitions=2)
-    seeds = pages.select("url").withColumn("priority", F.lit(0))
-    eng = _engine(spark, tmp_path, pages, bloom_broadcast_max_bytes=1)
-    eng.run_round(seeds, 0, T0)            # bitmaps exist after round 0
-    # 1 s later: inside refetchsecs, so the aligned-probe round must
-    # gate every already-seen URL (a broken probe would re-fetch)
-    eng.run_round(seeds, 1, T0 + timedelta(seconds=1))
-    ch = eng.backend_choices["bloom_aligned_probe"]
-    assert ch["value"] is True and ch["auto"] is True
-    assert "driver filter" in ch["why"]
-    assert eng.articles_table.read().count() == 30
+@pytest.mark.parametrize("backend", ["cuckoo", "drvier"])
+def test_unknown_bloom_backend_rejected(spark, tmp_path, backend):
+    """Only auto/driver/table exist; anything else must fail at
+    construction instead of silently building a driver bloom with no
+    auto-promotion."""
+    pages = pages_df(spark, 10, partitions=2)
+    with pytest.raises(ValueError, match="bloom_backend"):
+        _engine(spark, tmp_path, pages, bloom_backend=backend)
 
 
 def test_auto_equals_explicit_round_output(spark, tmp_path):
@@ -151,8 +147,7 @@ def test_auto_equals_explicit_round_output(spark, tmp_path):
     for name, kw in (("auto", {}),
                      ("explicit", dict(bloom_backend="driver",
                                        broadcast_frontier=True,
-                                       robots_scale_path=False,
-                                       bloom_aligned_probe=False))):
+                                       robots_scale_path=False))):
         eng = _engine(spark, tmp_path, pages, name=f"wh_{name}", **kw)
         for rnd in range(2):
             eng.run_round(seeds, rnd, T0 + timedelta(seconds=rnd * 3600),

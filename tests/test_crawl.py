@@ -757,6 +757,58 @@ def test_trim_protects_requested_but_gate_dropped_keys(spark, tmp_path):
     assert after == before                   # not trimmed, not re-fetched
 
 
+def test_bloom_gated_trim_then_rerequest_matches_unfiltered(spark, corpus,
+                                                            tmp_path):
+    """The bloom never deletes: keys trimmed from the seen table stay in
+    the filter. When they are requested again the filter calls them
+    maybe-seen, and the authoritative join must still treat them as
+    first fetches. Series: set A, then set B x4 (the round-4 trim
+    deletes A), then A∪B x2 — identical to an unfiltered engine."""
+    a_urls, b_urls = range(0, 30), range(30, 60)
+
+    def seeds(rng):
+        return spark.createDataFrame([(url_for(i), 0) for i in rng],
+                                     "url string, priority int")
+
+    plan = [seeds(a_urls)] + [seeds(b_urls)] * 4 + [seeds(range(60))] * 2
+    runs = {}
+    for use_bloom in (True, False):
+        # refetchfromdb=False: the trawl would otherwise re-request A
+        # every round and keep it alive
+        cfg = CrawlConfig(
+            refetch=RefetchConfig(maxfetches=8, refetchsecs=3600,
+                                  agelimit=4 * 3600, trimdb=True,
+                                  refetchfromdb=False),
+            default_budget=1000, num_partitions=4, collect_lineage=False,
+            trim_every=4, use_bloom=use_bloom)
+        eng = CrawlEngine(spark, str(tmp_path / f"wh{use_bloom}"), corpus,
+                          None, cfg)
+        for rnd, s in enumerate(plan):
+            if rnd == 5 and use_bloom:
+                # the trimmed A keys are gone from seen but not from
+                # the filter: every one probes maybe-seen
+                a_keys = eng.articles_table.read().filter("round = 0")
+                a_hashes = {r.url_hash for r in a_keys.collect()}
+                seen_hashes = {r.url_hash for r in eng.seen().collect()}
+                assert a_hashes and not (a_hashes & seen_hashes)
+                _, fresh = eng.bloom.split(a_keys.select("url_hash"), spark)
+                assert fresh.count() == 0
+            eng.run_round(s, rnd, START + timedelta(seconds=3600 * rnd))
+        arts = {(r.round, r.url_canon, r.previousfetches)
+                for r in eng.articles_table.read().collect()}
+        seen = {(r.url_hash, r.fetches, r.last_fetch)
+                for r in eng.seen().collect()}
+        runs[use_bloom] = (arts, seen)
+        if use_bloom:
+            assert eng.bloom_backend == "driver"
+            # upper bound: each re-requested trimmed key is added again
+            assert eng.bloom.n_keys == len(seen) + len(a_hashes)
+    assert runs[True] == runs[False]
+    arts = runs[True][0]
+    first_a = {u for rnd, u, _ in arts if rnd == 0}
+    assert {u for rnd, u, pf in arts if rnd == 5 and pf == 0} == first_a
+
+
 def test_pages_precanonicalized_contract(spark, tmp_path):
     """ADVICE #3: the page_url fast path is gated by an explicit
     contract — True requires the column, False ignores an unrelated

@@ -135,6 +135,25 @@ def test_engine_grows_bloom_when_full(spark, tmp_path):
     assert fresh.count() == 0
 
 
+@pytest.mark.parametrize("backend", ["driver", "table"])
+def test_bloom_n_keys_counts_keys_not_refetches(spark, tmp_path, backend):
+    """Refetch rounds must not inflate the filter's key count: n_keys
+    drives overfull() growth and the driver→table promotion, so it
+    counts first-fetch keys only — refetched keys are already in the
+    filter."""
+    pages = pages_df(spark, 40, partitions=2)
+    eng = CrawlEngine(
+        spark, str(tmp_path / "wh"), pages, None,
+        CrawlConfig(refetch=RefetchConfig(maxfetches=8, refetchsecs=3600),
+                    num_partitions=4, collect_lineage=False,
+                    bloom_buckets=4, bloom_backend=backend))
+    seeds = pages.select("url").withColumn("priority", F.lit(0))
+    for rnd in range(4):                     # rounds 1-3 refetch every key
+        eng.run_round(seeds, rnd, START + timedelta(seconds=3600 * rnd))
+    assert eng.articles_table.read().filter("round = 3").count() > 0
+    assert eng.bloom.n_keys == eng.seen().count()
+
+
 def test_politeness_two_phase_equals_exact(spark):
     """The salted pre-rank cut must be bit-identical to the plain
     per-host window: a row's rank within any (host, salt) subset never
@@ -167,53 +186,6 @@ def test_politeness_two_phase_equals_exact(spark):
                 two.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert per_host["hot.example.com"] == 7
     assert all(v <= 25 for v in per_host.values())
-
-
-def test_bloom_aligned_probe_equals_broadcast_probe(spark):
-    """The partition-aligned probe (10^10-key path: bitmap shipped per
-    bucket via cogroup, no full-filter broadcast) must classify every
-    key exactly like the broadcast probe."""
-    b = PartitionedBloom(8, 1 << 14)
-    seen = spark.createDataFrame(
-        [(xxhash64(f"seen{i}"),) for i in range(300)], "url_hash long")
-    b.add_df(seen)
-    probe_keys = (
-        [(xxhash64(f"seen{i}"),) for i in range(0, 300, 3)]     # members
-        + [(xxhash64(f"new{i}"),) for i in range(200)]          # non-members
-    )
-    fr = spark.createDataFrame(probe_keys, "url_hash long")
-    m1, f1 = b.split(fr, spark)
-    m2, f2 = b.split_aligned(fr, spark)
-    key = lambda df: sorted(r.url_hash for r in df.collect())
-    assert key(m1) == key(m2)
-    assert key(f1) == key(f2)
-    # membership is complete (no false negatives) in both paths
-    members = {xxhash64(f"seen{i}") for i in range(0, 300, 3)}
-    assert members <= set(key(m1))
-
-
-def test_engine_round_same_under_aligned_probe(spark, tmp_path):
-    """A crawl round probed partition-aligned must fetch exactly the
-    same articles as the broadcast-probed round."""
-    from risjbot_spark.crawl import CrawlConfig, CrawlEngine
-    from risjbot_spark.frontier.state import RefetchConfig
-
-    pages = pages_df(spark, 120, partitions=4)
-    seeds = pages.select("url").withColumn("priority", F.lit(0))
-
-    def run(aligned, wh):
-        cfg = CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                          collect_lineage=False, use_bloom=True,
-                          bloom_buckets=8, bloom_aligned_probe=aligned)
-        eng = CrawlEngine(spark, str(tmp_path / wh), pages, None, cfg)
-        # two rounds so round 1 actually probes a populated filter
-        eng.run_round(seeds, 0, START)
-        eng.run_round(seeds, 1, START + timedelta(seconds=10801))
-        return sorted((r.url_canon, r.round)
-                      for r in eng.articles_table.read().collect())
-
-    from datetime import timedelta
-    assert run(False, "wa") == run(True, "wb")
 
 
 # ---------------------------------------------------------------------------

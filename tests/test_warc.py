@@ -793,8 +793,10 @@ def test_cluster_rebuild_failure_preserves_live_index(
     with pytest.raises(RuntimeError, match="simulated"):
         W.write_cdx_cluster(spark, seg, out, shards=2, block=4)
     monkeypatch.undo()
-    # the live index never went away
+    # the live index never went away, and the failed build removed its
+    # partial .build tree instead of leaving it for the next rebuild
     assert (pathlib.Path(out) / "cluster.idx").exists()
+    assert not pathlib.Path(out + ".build").exists()
     assert W.cdx_cluster_lookup(out, "https://ex.org/p/3")
     # and a subsequent rebuild succeeds and leaves no droppings
     W.write_cdx_cluster(spark, seg, out, shards=3, block=4)
@@ -822,3 +824,46 @@ def test_cluster_out_dir_with_stray_files_refused(spark, tmp_path):
     with pytest.raises(ValueError, match="non-index entries"):
         W.write_cdx_cluster(spark, seg, str(out), shards=1, block=4)
     assert (out / "keep.txt").read_text() == "user data"
+
+
+def _cluster_seg(spark, tmp_path, n=4):
+    rows = [(f"https://ex.org/p/{i}", _ts(i), b"<html/>") for i in range(n)]
+    df = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, payload binary")
+    seg = str(tmp_path / "seg")
+    W.write_warc(df, seg, n_files=1).collect()
+    return seg
+
+
+@pytest.mark.parametrize("sibling", [".build", ".trash"])
+def test_cluster_sibling_dir_with_stray_files_refused(spark, tmp_path,
+                                                      sibling):
+    """The rebuild deletes the .build and .trash siblings of out_dir:
+    a user directory that happens to sit at either path must be refused
+    like out_dir itself, not silently removed."""
+    seg = _cluster_seg(spark, tmp_path)
+    out = tmp_path / "cidx"
+    W.write_cdx_cluster(spark, seg, str(out), shards=1, block=4)
+    side = tmp_path / ("cidx" + sibling)
+    side.mkdir()
+    (side / "keep.txt").write_text("user data")
+    with pytest.raises(ValueError, match="non-index entries"):
+        W.write_cdx_cluster(spark, seg, str(out), shards=1, block=4)
+    assert (side / "keep.txt").read_text() == "user data"
+    assert W.cdx_cluster_lookup(str(out), "https://ex.org/p/1")
+
+
+def test_cluster_rebuild_accepts_tmp_droppings(spark, tmp_path):
+    """A crashed build can leave cluster.idx.tmp and *.tmp shard files
+    in the index dir: they are index output, so the next rebuild must
+    replace them instead of refusing the directory."""
+    import pathlib
+    seg = _cluster_seg(spark, tmp_path)
+    out = pathlib.Path(tmp_path / "cidx")
+    W.write_cdx_cluster(spark, seg, str(out), shards=1, block=4)
+    for name in ("cluster.idx.tmp", "cdx-00000.tmp", "cdx-00003.gz.tmp"):
+        (out / name).write_text("partial")
+    W.write_cdx_cluster(spark, seg, str(out), shards=1, block=4)
+    assert not list(out.glob("*.tmp"))
+    assert W.cdx_cluster_lookup(str(out), "https://ex.org/p/2")
+
