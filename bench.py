@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics as st
 import sys
 import time
 from datetime import datetime, timezone
@@ -49,6 +50,21 @@ def _burn_quantum(n: int) -> int:
     for i in range(n):
         x += i
     return x
+
+
+def mor_step_summary(series: list[float], trim_every: int) -> dict:
+    """Rounds after the first compaction that do not compact: the slope
+    of their wall (s/round; ~0 ⇔ no creep) and `compaction_step`, their
+    median over the warm pre-compaction rounds 1..trim_every-1."""
+    post = [(r, s) for r, s in enumerate(series)
+            if r > trim_every and r % trim_every]
+    head = series[1:trim_every]
+    return {"post_compaction_slope_s_per_round": (
+                round(st.linear_regression(*zip(*post)).slope, 4)
+                if len(post) >= 2 else None),
+            "compaction_step": (
+                round(st.median(s for _, s in post) / st.median(head), 3)
+                if post and head else None)}
 
 
 def main() -> None:
@@ -134,12 +150,10 @@ def main() -> None:
         timings[f"crawl_round_{r}"] = round(dt, 3)
         warm_best = dt if warm_best is None else min(warm_best, dt)
 
-    # ---- merge-on-read sustained-rounds series (VERDICT r1 #9): run a
-    # long round loop on a reduced corpus and record per-round wall time
-    # + the seen-commit phase, proving the MoR design is O(delta) write /
-    # bounded read as rounds accumulate (compaction every trim_every=4
-    # folds deltas back). Flat warm rounds = the claim holds; a rising
-    # series would expose an O(rounds) resolve cost.
+    # ---- merge-on-read sustained-rounds series (VERDICT r1 #9): a long
+    # round loop on a reduced corpus, per-round wall time + the
+    # seen-commit phase; compaction every trim_every=4 folds deltas back,
+    # and mor_step_summary reports the post-compaction step and slope.
     mor_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_MOR_ROUNDS", "32"))
     # bloom backend for the MoR series: 'driver' (broadcast probe) or
     # 'table' (bucket-keyed parquet bitmaps — the 10^10-key path); the
@@ -265,8 +279,6 @@ def main() -> None:
     if recall:
         out["ann_recall"] = recall
     if mor_series:
-        import statistics
-
         warm = mor_series[1:]
         out["mor_rounds"] = mor_series
         out["mor_seen_commit_secs"] = mor_commit
@@ -279,15 +291,10 @@ def main() -> None:
             "rounds": len(mor_series),
             "pages_per_round": mor_pages_n,
             "cold": mor_series[0],
-            "warm_median": round(statistics.median(warm), 3) if warm else None,
+            "warm_median": round(st.median(warm), 3) if warm else None,
             "warm_best": round(min(warm), 3) if warm else None,
-            "warm_last4_median": round(statistics.median(mor_series[-4:]), 3),
-            # flat ⇔ the tail is not slower than the early warm rounds
-            # beyond co-tenant noise (see BENCH/BASELINE.md methodology)
-            "tail_over_head": (
-                round(statistics.median(mor_series[-4:])
-                      / statistics.median(mor_series[1:5]), 3)
-                if len(mor_series) >= 5 else None),
+            "warm_last4_median": round(st.median(mor_series[-4:]), 3),
+            **mor_step_summary(mor_series, mor_eng.cfg.trim_every),
         }
     spark.stop()
     print(json.dumps(out))

@@ -67,9 +67,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="rank-refresh cadence in rounds (with --link-rank)")
     c.add_argument("--link-rank-iters", type=int, default=3,
                    help="PageRank iterations per refresh (with --link-rank)")
-    c.add_argument("--no-bucket-seen", action="store_true",
-                   help="compact the seen base flat instead of bucketed "
-                        "by url_hash")
     c.add_argument("--bloom-backend",
                    choices=["driver", "table", "auto"],
                    default="auto",
@@ -372,7 +369,6 @@ def main(argv=None, spark=None) -> int:
         robots_scale_path=args.robots_scale_path,
         broadcast_frontier=(None if args.no_broadcast_frontier is None
                             else not args.no_broadcast_frontier),
-        bucket_seen_base=not args.no_bucket_seen,
         bloom_backend=args.bloom_backend,
         comments_host=args.comments_host,
         comments_site=args.comments_site,

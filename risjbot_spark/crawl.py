@@ -41,7 +41,6 @@ from .frontier.state import (
     seen_filter,
     seen_state,
     seen_updates,
-    trawl_candidates,
     trawl_candidates_pruned,
     trim_seen,
 )
@@ -75,6 +74,18 @@ def _footer_row_counts(data_dir: str) -> dict:
             if n:
                 out[str(pid)] = out.get(str(pid), 0) + n
     return out
+
+
+def seen_bucket_count(n_keys: int) -> int:
+    """Buckets of the compacted seen base, which is always bucketed by
+    url_hash (Iceberg bucket(N, col)): the smallest power of two giving
+    ≤ 32,768 of n_keys per bucket, capped at 32 (from ~0.5M keys) — a
+    fixed 32 made every post-compaction round ~30% slower at 1.2k keys
+    (BENCH/seen_layout_step.json)."""
+    n = 1
+    while n < 32 and n << 15 < n_keys:
+        n *= 2
+    return n
 
 
 @dataclass(frozen=True)
@@ -163,17 +174,6 @@ class CrawlConfig:
     # count (robots_scale_hosts); the dict path broadcasts once and
     # skips a join at sandbox host counts.
     robots_scale_path: bool | None = None
-    # J3a via manifest-stat/partition pruning instead of resolving the
-    # whole seen table each round (output-identical; parity-tested)
-    pruned_trawl: bool = True
-    # compact the seen base BUCKETED by url_hash (Iceberg bucket(N,col)
-    # transform; day partitions kept for the trawl). The J1 gate and the
-    # MoR resolve then run SPLIT — frontier × bucketed base with no
-    # exchange on the base side + a small resolved-delta join — instead
-    # of an O(table) groupBy+shuffle every round. Output-identical
-    # (parity-tested); plan-asserted in tests.
-    bucket_seen_base: bool = True
-    seen_buckets: int = 32
     # S8 comment chase: when set (and a comments_api is injected into
     # the engine), pages on this host get their viafoura threads chased
     # before the articles commit — dropped/failed/ok semantics exactly
@@ -612,8 +612,8 @@ class CrawlEngine:
         """(bucketed base, post-compaction deltas) when the current seen
         snapshot has that shape — a url_hash-bucketed compacted base as
         its first data dir, flat round deltas after it. None otherwise
-        (fresh table, pre-bucketing warehouse, bucket_seen_base off) —
-        callers fall back to the generic groupBy resolve."""
+        (before the first compaction, or a flat base from an older
+        engine) — callers fall back to the generic groupBy resolve."""
         man = self.seen_table.manifest()
         if man is None or not man["files"]:
             return None
@@ -648,11 +648,11 @@ class CrawlEngine:
     def seen(self) -> DataFrame:
         """Current per-key seen state — merge-on-read: the table holds a
         compacted base plus per-round update deltas (Iceberg MoR
-        pattern). With a url_hash-bucketed base the resolve runs SPLIT —
-        deltas resolve among themselves (O(delta) shuffle) and anti-join
-        into the base with no exchange on the base side — instead of
-        re-shuffling the whole table through `seen_state`'s groupBy
-        every round. Both forms are row-identical (parity-locked)."""
+        pattern). Past the first compaction the base is url_hash-bucketed
+        and the resolve runs SPLIT — deltas resolve among themselves
+        (O(delta) shuffle) and anti-join into the base with no exchange
+        on the base side — instead of re-shuffling the whole table
+        through `seen_state`'s groupBy. Row-identical (parity-locked)."""
         return self._seen_from_parts(self._seen_parts())
 
     def _seen_from_parts(
@@ -722,9 +722,8 @@ class CrawlEngine:
         # parts resolved ONCE per round: seen(), the J1 gate, and the
         # compaction merge all read the same split (or generic) view —
         # no duplicate manifest reads / per-delta plan rebuilding
-        parts = self._seen_parts() if cfg.bucket_seen_base else None
-        seen = (self._seen_from_parts(parts) if cfg.bucket_seen_base
-                else self.seen())
+        parts = self._seen_parts()
+        seen = self._seen_from_parts(parts)
         lineage: dict[str, int] = {}
 
         # ---- frontier assembly: seeds ∪ trawl (J3a), canonical, deduped
@@ -735,16 +734,10 @@ class CrawlEngine:
             fr = fr.withColumn("discovered_ts", F.lit(round_ts).cast("timestamp"))
         fr = with_canonical(fr.select("url", "priority", "discovered_ts"))
 
-        # pruned path: reads only manifest-stat / day-partition files the
-        # window can touch instead of resolving the whole table (identical
-        # output — parity-locked in tests); the unpruned resolve remains
-        # for tables without manifests (ad-hoc seen DataFrames)
-        if cfg.pruned_trawl:
-            trawl_rows = trawl_candidates_pruned(
-                self.spark, self.seen_table, cfg.refetch, round_ts)
-        else:
-            trawl_rows = trawl_candidates(seen, cfg.refetch, round_ts)
-        trawl = trawl_rows.select(
+        # pruned trawl: reads only the manifest-stat / day-partition files
+        # the window can touch (≡ trawl_candidates(seen()), parity-locked)
+        trawl = trawl_candidates_pruned(
+            self.spark, self.seen_table, cfg.refetch, round_ts).select(
             F.col("url").alias("url"),
             F.lit(0).alias("priority"),
             F.col("last_fetch").alias("discovered_ts"),
@@ -1196,9 +1189,13 @@ class CrawlEngine:
                 new_seen = trim_seen(
                     new_seen, requested_keys, cfg.refetch, round_ts)
             # base partitions by last-fetch day (the pruned trawl skips
-            # day directories outside its window — SURVEY §4) and, on
-            # the bucketed path, clusters by url_hash so next rounds'
-            # gate joins and resolves read it exchange-free
+            # day directories outside its window — SURVEY §4) and
+            # clusters by url_hash so next rounds' gate joins and
+            # resolves read it exchange-free; keys ≤ footer rows of the
+            # dirs folded + this round's delta (no Spark job)
+            man = self.seen_table.manifest() or {"files": []}
+            est = sum(sum(_footer_row_counts(d).values())
+                      for d in man["files"] + [delta_dir])
             self.seen_table.commit(
                 new_seen.withColumn("lf_day", F.to_date("last_fetch")),
                 lineage={"round": round_no,
@@ -1207,8 +1204,8 @@ class CrawlEngine:
                          "counters": lineage, "compacted": True},
                 mode="replace",
                 partition_by=["lf_day"],
-                bucket_by="url_hash" if cfg.bucket_seen_base else None,
-                n_buckets=cfg.seen_buckets,
+                bucket_by="url_hash",
+                n_buckets=seen_bucket_count(est),
             )
             if cfg.expire_keep_last > 0:
                 # maintenance rides the compaction commit: pre-compaction

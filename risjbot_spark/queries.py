@@ -2694,8 +2694,8 @@ ORACLE_SQL = {
 #       streaming §2.9 keeps a driver gate via sessionize plus the
 #       pytest suite.
 #   politeness_budget_scale (politeness_window) — the scale twin of W1;
-#       its executed-plan guarantees are asserted in PLANS.md and
-#       tests/test_politeness.py.
+#       its executed-plan guarantees are asserted in PLANS.md and its
+#       budgets_df parity in tests/test_robots_scale.py.
 RETIRED_FROM_DRIVER: tuple = (
     "ivf_centroids", "ivf_assign", "ivf_search", "ivf_kmeans",
     "minhash_signature", "simhash_fingerprint",

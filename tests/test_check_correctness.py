@@ -13,13 +13,17 @@ def test_type_class_separates_integer_widths_and_floats():
     assert twin.type_class("bigint") == twin.type_class("BIGINT")
     assert twin.type_class("int") == twin.type_class("INTEGER")
     assert twin.type_class("HUGEINT") != twin.type_class("bigint")
-    assert twin.type_class("INTEGER") != twin.type_class("bigint")
+    # int8-int64 are one class (the driver ignores that width); HUGEINT
+    # stays apart
+    assert twin.type_class("INTEGER") == twin.type_class("bigint")
+    assert twin.type_class("tinyint") == twin.type_class("BIGINT")
     assert twin.type_class("DOUBLE") != twin.type_class("bigint")
     assert twin.type_class("FLOAT") != twin.type_class("double")
     assert twin.type_class("DECIMAL(18,3)") == twin.type_class(
         "decimal(10,2)")
     assert twin.type_class("DOUBLE[]") == twin.type_class("array<double>")
-    assert twin.type_class("BIGINT[]") != twin.type_class("array<int>")
+    assert twin.type_class("BIGINT[]") == twin.type_class("array<int>")
+    assert twin.type_class("HUGEINT[]") != twin.type_class("array<bigint>")
     assert twin.type_class("VARCHAR") == twin.type_class("string")
     assert twin.type_class("TIMESTAMP") == twin.type_class("timestamp")
 
@@ -28,8 +32,16 @@ def test_type_mismatches_reports_only_differing_shared_columns():
     spark = [("doc_id", "bigint"), ("n", "bigint"), ("x", "double"),
              ("only_spark", "int")]
     duck = [("doc_id", "BIGINT"), ("n", "HUGEINT"), ("x", "DOUBLE")]
-    assert twin.type_mismatches(spark, duck) == [("n", "int64", "int128")]
+    assert twin.type_mismatches(spark, duck) == [("n", "int", "int128")]
     assert twin.type_mismatches(spark[:1], duck[:1]) == []
+
+
+def test_int32_spark_column_passes_bigint_oracle():
+    """politeness_window.rnk / wordcount.wc: Spark int32 against a
+    DuckDB BIGINT, values equal — the driver's gate passes them."""
+    spark = [("host", "string"), ("rnk", "int"), ("wc", "int")]
+    duck = [("host", "VARCHAR"), ("rnk", "BIGINT"), ("wc", "BIGINT")]
+    assert twin.type_mismatches(spark, duck) == []
 
 
 def test_twin_flags_uncast_corpus_stats_sums():

@@ -6,8 +6,9 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import functions as F
 
-from risjbot_spark.corpus import pages_df, url_for
-from risjbot_spark.crawl import CrawlConfig, CrawlEngine
+from risjbot_spark.corpus import host_lang_for, pages_df, pathway_for, url_for
+from risjbot_spark.crawl import CrawlConfig, CrawlEngine, seen_bucket_count
+from risjbot_spark.frontier.oracle import CrawlOracle
 from risjbot_spark.frontier.state import (
     RefetchConfig,
     resolve_split,
@@ -16,6 +17,9 @@ from risjbot_spark.frontier.state import (
     seen_state,
 )
 from risjbot_spark.frontier.xxhash import xxhash64
+from risjbot_spark.schema import SEEN_SCHEMA
+from risjbot_spark.store import SnapshotTable
+from risjbot_spark.urlnorm import canonicalize_py, host_py
 
 START = datetime(2017, 4, 1, tzinfo=timezone.utc)
 
@@ -86,32 +90,118 @@ def test_seen_filter_split_equals_seen_filter(spark):
     assert got[xxhash64("https://h1.example.com/zz")] == 0
 
 
-def _run_engine(spark, wh, pages, seeds, bucketed, rounds=6):
+def _run_engine(spark, wh, pages, seeds, rounds=6):
     cfg = CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                      collect_lineage=False, trim_every=2,
-                      bucket_seen_base=bucketed, seen_buckets=8)
+                      collect_lineage=False, trim_every=2)
     eng = CrawlEngine(spark, wh, pages, None, cfg)
     for r in range(rounds):
         eng.run_round(seeds, r, START + timedelta(seconds=10801 * r))
     return eng
 
 
+def _oracle(cfg, n_pages):
+    pages = {canonicalize_py(url_for(i)) for i in range(n_pages)}
+    fake404 = {canonicalize_py(url_for(i)) for i in range(n_pages)
+               if pathway_for(i, host_lang_for(i)[0]) == "fake404"}
+    return CrawlOracle(pages, {}, cfg.refetch, cfg.default_budget,
+                       cfg.round_seconds, fake404=fake404)
+
+
+def _fetched(eng, rnd):
+    return {r.url_canon for r in eng.articles_table.read()
+            .filter(F.col("round") == rnd).select("url_canon").collect()}
+
+
+def _seen_fetches(eng):
+    return {r.url: r.fetches for r in eng.seen().collect()}
+
+
 def test_bucketed_run_parity_with_generic(spark, tmp_path):
-    """Six rounds through two compactions: articles and resolved seen
-    state must be identical with and without the bucketed base."""
-    pages = pages_df(spark, 90, partitions=4)
+    """Six rounds through two compactions: the fetched URL set of every
+    round and the final seen url → fetches equal the in-memory
+    CrawlOracle's (the generic reference state machine)."""
+    n = 90
+    pages = pages_df(spark, n, partitions=4)
     seeds = pages.select("url").withColumn("priority", F.lit(0))
-    a = _run_engine(spark, str(tmp_path / "flat"), pages, seeds, False)
-    b = _run_engine(spark, str(tmp_path / "bucketed"), pages, seeds, True)
-    arts = lambda e: sorted(
-        (r.url_canon, r.round) for r in e.articles_table.read().collect())
-    seen = lambda e: sorted(
-        (r.url_hash, r.fetches, r.last_fetch) for r in e.seen().collect())
-    assert arts(a) == arts(b)
-    assert seen(a) == seen(b)
-    # the bucketed engine actually produced the split shape
-    assert b._seen_parts() is not None
-    assert a._seen_parts() is None
+    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds)
+    orc = _oracle(eng.cfg, n)
+    seed_rows = [{"url": url_for(i), "priority": 0} for i in range(n)]
+    requested = {canonicalize_py(s["url"]) for s in seed_rows}
+    for r in range(6):
+        ts = START + timedelta(seconds=10801 * r)
+        log = orc.run_round([dict(s, discovered_ts=ts) for s in seed_rows],
+                            r, ts)
+        assert _fetched(eng, r) == {u for (_, u, _) in log}, f"round {r}"
+        if r % eng.cfg.trim_every == 0:
+            orc.trim(requested, ts)
+    assert _seen_fetches(eng) == {u: nf for u, (nf, _) in orc.seen.items()}
+    # the engine actually produced the split shape
+    assert eng._seen_parts() is not None
+
+
+def test_seen_bucket_count_sized_from_keys():
+    """No Spark: one bucket at the 1.2k-page probe, today's 32 at the
+    scale receipts' ≥1M keys, powers of two in between."""
+    assert seen_bucket_count(90) == 1
+    assert seen_bucket_count(1_200) == 1
+    assert seen_bucket_count(1_000_000) == 32
+    assert seen_bucket_count(10 ** 10) == 32
+    counts = [seen_bucket_count(10 ** k) for k in range(11)]
+    assert counts == sorted(counts)
+    assert all(c & (c - 1) == 0 for c in counts)
+
+
+def test_resume_from_flat_base_compacts_bucketed(spark, tmp_path):
+    """A warehouse whose compacted base was written flat (lf_day
+    partitions, no buckets — what older engines wrote with bucketing
+    off) resumes through the generic resolve: seen() equals seen_state
+    over the same rows, the next round gates as the oracle does, and
+    the next compaction writes the url_hash-bucketed base."""
+    n = 60
+    cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=2),
+                      num_partitions=4, collect_lineage=False,
+                      trim_every=3)
+    orc = _oracle(cfg, n)
+    seed_rows = [{"url": url_for(i), "priority": 0} for i in range(n)]
+    ts = [START + timedelta(seconds=10801 * r) for r in range(4)]
+    # rounds 0-1 in the oracle: every URL once, the first half twice
+    # (maxed at maxfetches=2, so the gate must drop them later)
+    orc.run_round([dict(s, discovered_ts=ts[0]) for s in seed_rows], 0,
+                  ts[0])
+    orc.run_round([dict(s, discovered_ts=ts[1]) for s in seed_rows[:n // 2]],
+                  1, ts[1])
+    rows = spark.createDataFrame(
+        [(xxhash64(u), u, host_py(u), nf, t)
+         for u, (nf, t) in orc.seen.items()], SEEN_SCHEMA)
+    wh = str(tmp_path / "wh")
+    SnapshotTable(spark, wh, "seen").commit(
+        rows.withColumn("lf_day", F.to_date("last_fetch")),
+        lineage={"round": 1, "round_ts": ts[1].isoformat(),
+                 "seen_format": CrawlEngine.SEEN_FORMAT, "compacted": True},
+        mode="replace", partition_by=["lf_day"])
+
+    pages = pages_df(spark, n, partitions=4)
+    seeds = pages.select("url").withColumn("priority", F.lit(0))
+    eng = CrawlEngine(spark, wh, pages, None, cfg)
+    assert eng._seen_parts() is None             # flat: generic resolve
+    key = lambda df: sorted(map(tuple, df.select(*eng._SEEN_COLS).collect()))
+    assert key(eng.seen()) == key(seen_state(rows))
+
+    maxed = {u for u, (nf, _) in orc.seen.items() if nf >= 2}
+    for r in (2, 3):                             # round 3 compacts
+        eng.run_round(seeds, r, ts[r])
+        log = orc.run_round([dict(s, discovered_ts=ts[r]) for s in seed_rows],
+                            r, ts[r])
+        assert _fetched(eng, r) == {u for (_, u, _) in log}, f"round {r}"
+    # the gate did drop work: the keys maxed in the flat base
+    assert maxed and not maxed & _fetched(eng, 2)
+    man = eng.seen_table.manifest()
+    assert man["files"] and man["lineage"]["compacted"]
+    meta = man["file_meta"][man["files"][0]]
+    assert meta["bucket_table"] and meta["n_buckets"] == 1
+    assert eng._seen_parts() is not None
+    orc.trim({canonicalize_py(s["url"]) for s in seed_rows}, ts[3])
+    assert _seen_fetches(eng) == {u: nf for u, (nf, _) in orc.seen.items()}
 
 
 def test_gate_plan_no_exchange_on_base_side(spark, tmp_path):
@@ -120,8 +210,7 @@ def test_gate_plan_no_exchange_on_base_side(spark, tmp_path):
     Exchange hashpartitioning in the plan belongs to the frontier."""
     pages = pages_df(spark, 90, partitions=4)
     seeds = pages.select("url").withColumn("priority", F.lit(0))
-    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds, True,
-                      rounds=4)                   # compaction at 2 + delta
+    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds, rounds=4)                   # compaction at 2 + delta
     base, deltas = eng._seen_parts()
     newer = seen_state(deltas)
     frontier = spark.createDataFrame(
@@ -166,8 +255,7 @@ def test_bucketed_base_survives_catalog_loss(spark, tmp_path):
     partition recovery) and the engine must resume losslessly."""
     pages = pages_df(spark, 60, partitions=4)
     seeds = pages.select("url").withColumn("priority", F.lit(0))
-    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds, True,
-                      rounds=3)
+    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds, rounds=3)
     before = sorted((r.url_hash, r.fetches) for r in eng.seen().collect())
     man = eng.seen_table.manifest()
     tbl = man["file_meta"][man["files"][0]]["bucket_table"]
@@ -175,8 +263,7 @@ def test_bucketed_base_survives_catalog_loss(spark, tmp_path):
     eng2 = CrawlEngine(
         spark, str(tmp_path / "wh"), pages, None,
         CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                    collect_lineage=False, trim_every=2,
-                    bucket_seen_base=True, seen_buckets=8))
+                    collect_lineage=False, trim_every=2))
     after = sorted((r.url_hash, r.fetches) for r in eng2.seen().collect())
     assert before == after
     # and the next round still runs (gate + trawl against the re-

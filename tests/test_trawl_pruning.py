@@ -66,7 +66,7 @@ def _mk_table(spark, tmp_path):
     return t
 
 
-def test_pruned_trawl_matches_full_resolve(spark, tmp_path):
+def test_trawl_pruning_matches_full_resolve(spark, tmp_path):
     t = _mk_table(spark, tmp_path)
     full = {
         r.url for r in
@@ -80,7 +80,7 @@ def test_pruned_trawl_matches_full_resolve(spark, tmp_path):
     assert got["https://h2/delta-eligible"][0] == 2
 
 
-def test_pruned_trawl_skips_out_of_window_files(spark, tmp_path):
+def test_trawl_pruning_skips_out_of_window_files(spark, tmp_path):
     """The stale delta's directory must not appear in the plan at all
     (manifest-range whole-file skip), and the base scan must carry a
     partition filter on lf_day (day-directory pruning)."""
@@ -101,7 +101,7 @@ def test_pruned_trawl_skips_out_of_window_files(spark, tmp_path):
     assert "lf_day" in plan
 
 
-def test_pruned_trawl_empty_and_refetchfromdb_off(spark, tmp_path):
+def test_trawl_pruning_empty_and_refetchfromdb_off(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path), "seen")
     assert trawl_candidates_pruned(spark, t, CFG, T0).count() == 0
     t2 = _mk_table(spark, tmp_path / "b")
@@ -138,7 +138,7 @@ def test_seen_updates_derives_previousfetches_from_seen(spark):
     assert got == {"https://h1/a": 5, "https://h1/new": 1}
 
 
-def test_pruned_trawl_correct_under_non_utc_driver_tz(tmp_path):
+def test_trawl_pruning_correct_under_non_utc_driver_tz(tmp_path):
     """REGRESSION: the window cutoffs were naive datetimes, which PySpark
     converts through the driver's OS timezone — on a non-UTC driver the
     pruned trawl shifted its window and diverged from the full resolve.

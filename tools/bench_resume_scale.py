@@ -140,7 +140,6 @@ def _engine(spark, wh):
             use_bloom=True,
             bloom_backend="table",
             broadcast_frontier=False,
-            bucket_seen_base=True,
             pages_unique_per_url=True,
         ),
     )

@@ -150,7 +150,6 @@ def main() -> None:
             use_bloom=True,
             bloom_backend="table",       # distributed bitmaps
             broadcast_frontier=False,    # SMJ against the bucketed table
-            bucket_seen_base=True,       # url_hash-bucketed seen compaction
             # the generator emits exactly one row per URL and the
             # bucketed ingest preserves that, so the engine can skip
             # the corpus-sized html dedup exchange (the production
@@ -208,7 +207,7 @@ def main() -> None:
         "articles_total": n_articles,
         "cold_urls_per_sec": round(N_PAGES / timings["round_0"], 1),
         "config": "broadcast_frontier=False bloom_backend=table "
-                  "bucket_seen_base=True pages_unique_per_url=True"
+                  "pages_unique_per_url=True"
                   + (" prune_articles=True" if prune_articles else ""),
         "ts": datetime.now(timezone.utc).isoformat(),
     }

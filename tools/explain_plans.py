@@ -420,8 +420,7 @@ def main() -> None:
     wh2 = tempfile.mkdtemp()
     eng2 = CrawlEngine(spark, wh2, pages, None,
                        CrawlConfig(refetch=_RC(), num_partitions=8,
-                                   collect_lineage=False, trim_every=2,
-                                   seen_buckets=8))
+                                   collect_lineage=False, trim_every=2))
     seeds2 = pages.select("url").withColumn("priority", F.lit(0))
     start = datetime(2017, 4, 1, tzinfo=timezone.utc)
     for r in range(4):
