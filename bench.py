@@ -155,11 +155,8 @@ def main() -> None:
     # seen-commit phase; compaction every trim_every=4 folds deltas back,
     # and mor_step_summary reports the post-compaction step and slope.
     mor_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_MOR_ROUNDS", "32"))
-    # bloom backend for the MoR series: 'driver' (broadcast probe) or
-    # 'table' (bucket-keyed parquet bitmaps — the 10^10-key path); the
-    # table run also tracks driver-Python RSS to show the filter no
-    # longer grows driver memory per round
-    mor_bloom = os.environ.get("SPARK_GRAFT_BENCH_BLOOM", "auto")
+    # driver-Python RSS per round shows whether the seen pre-filter
+    # grows driver memory as the series accumulates keys
     mor_series: list[float] = []
     mor_commit: list[float] = []
     mor_rss: list[int] = []
@@ -185,7 +182,7 @@ def main() -> None:
                 refetch=RefetchConfig(maxfetches=mor_rounds + 1,
                                       refetchsecs=3600),
                 num_partitions=max(CPUS, 8), collect_lineage=False,
-                use_bloom=True, bloom_backend=mor_bloom),
+                use_bloom=True),
         )
         for r in range(mor_rounds):
             perf: dict = {}
@@ -282,10 +279,6 @@ def main() -> None:
         warm = mor_series[1:]
         out["mor_rounds"] = mor_series
         out["mor_seen_commit_secs"] = mor_commit
-        out["mor_bloom_backend"] = mor_bloom
-        # read AFTER the round loop: mid-run driver->table promotion can
-        # flip the resolved backend inside a round
-        out["mor_bloom_resolved"] = mor_eng.bloom_backend
         out["mor_driver_rss_mb"] = mor_rss
         out["mor_summary"] = {
             "rounds": len(mor_series),

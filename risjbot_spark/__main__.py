@@ -67,14 +67,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="rank-refresh cadence in rounds (with --link-rank)")
     c.add_argument("--link-rank-iters", type=int, default=3,
                    help="PageRank iterations per refresh (with --link-rank)")
-    c.add_argument("--bloom-backend",
-                   choices=["driver", "table", "auto"],
-                   default="auto",
-                   help="'table' keeps bloom bitmaps as a bucket-keyed "
-                        "parquet table built/probed distributed (the "
-                        "10^10-key path); 'driver' broadcasts them; "
-                        "'auto' (default) picks driver/table by key "
-                        "count vs the driver budget")
     c.add_argument("--comments-host", default="",
                    help="chase viafoura comment threads for pages on "
                         "this host (e.g. liverpoolecho.co.uk) via the "
@@ -369,7 +361,6 @@ def main(argv=None, spark=None) -> int:
         robots_scale_path=args.robots_scale_path,
         broadcast_frontier=(None if args.no_broadcast_frontier is None
                             else not args.no_broadcast_frontier),
-        bloom_backend=args.bloom_backend,
         comments_host=args.comments_host,
         comments_site=args.comments_site,
         comments_delay_secs=args.comments_delay,

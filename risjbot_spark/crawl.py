@@ -95,40 +95,27 @@ class CrawlConfig:
     round_seconds: int = 3600            # politeness budget horizon
     num_partitions: int = 32
     salt: int = 0                 # >0 → salted-host fetch layout (HTTP mode)
-    # Scale-backend selection (broadcast_frontier, bloom_backend,
-    # robots_scale_path): each accepts an explicit value as an override,
-    # but the DEFAULT is auto — the
-    # engine picks the 100×-safe backend from observed scale (bloom key
-    # count vs a driver budget, frontier rows vs a broadcast budget,
-    # robots host count) and records each choice + the evidence in
-    # `engine.backend_choices`. A 10^10-frontier run that keeps the
-    # defaults therefore gets the table bloom / SMJ fetch / DataFrame
-    # robots path WITHOUT asking; the sandbox-scale defaults resolve to
-    # the broadcast/driver fast paths. (r3 verdict item #3: the manual
-    # flags were the last way to OOM the driver by default.)
+    # Scale-backend selection (broadcast_frontier, robots_scale_path):
+    # each accepts an explicit value as an override, but the DEFAULT is
+    # auto — the engine picks the 100×-safe backend from observed scale
+    # (frontier rows vs a broadcast budget, robots host count) and
+    # records each choice + the evidence in `engine.backend_choices`
+    # (the seen pre-filter below records its on/off choice there too).
+    # A 10^10-frontier run that keeps the defaults therefore gets the
+    # SMJ fetch / DataFrame robots path and no driver bitmaps WITHOUT
+    # asking; the sandbox-scale defaults resolve to the broadcast/driver
+    # fast paths. (r3 verdict item #3: the manual flags were the last
+    # way to OOM the driver by default.)
     broadcast_frontier: bool | None = None   # None → auto per round
+    # Seen pre-filter in front of the authoritative seen join (J1): a
+    # driver PartitionedBloom, broadcast-probed; a false positive costs
+    # one join row, never output. It runs while the seen key count is at
+    # most driver_bloom_max_keys — at ~10 bits/key the filter broadcasts
+    # n_keys×1.25 B every round, so 20M keys ≈ 25 MB is comfortable.
+    # Past that budget (at construction, or when a round's adds cross
+    # it) the engine drops the filter and the split seen join gates
+    # alone: a filter pays only where it prunes join work.
     use_bloom: bool = True
-    # Seen pre-filter in front of the authoritative seen join (J1); a
-    # false positive costs one join row, never output. Two backends,
-    # one probe each:
-    # "driver": PartitionedBloom — bitmaps in a driver dict, broadcast
-    #   probe; right while the filter fits comfortably in driver memory
-    #   (at default geometry the bitmaps stay ≤ 32 MiB below the
-    #   20M-key budget).
-    # "table": DistributedBloomTable — bitmaps as a bucket-keyed parquet
-    #   table, built/merged/probed distributed, partition-aligned probe;
-    #   the 10^10-key path (the driver holds only n_buckets/m/n_keys).
-    #   Output-identical (parity-tested); per-round cost adds one small
-    #   Spark job.
-    # "auto": driver up to driver_bloom_max_keys expected keys, table
-    #   above it; a driver bloom that outgrows the budget is promoted to
-    #   the table backend mid-run or at the next engine construction
-    #   (rebuild from the seen snapshot — durable, one-time).
-    # Any other value raises ValueError at engine construction.
-    bloom_backend: str = "auto"
-    # auto-mode thresholds. driver_bloom_max_keys: a driver bloom at
-    # ~10 bits/key costs n_keys×1.25 B broadcast every round — 20M keys
-    # ≈ 25 MB is comfortable, 10^8+ belongs in the table.
     driver_bloom_max_keys: int = 20_000_000
     # frontier rows above which the fetch join stops broadcasting the
     # scheduled side (~100 B/row → 1M rows ≈ 100 MB per-round broadcast;
@@ -226,10 +213,6 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
-        if self.cfg.bloom_backend not in ("auto", "driver", "table"):
-            raise ValueError(
-                f"bloom_backend must be 'auto', 'driver' or 'table', "
-                f"got {self.cfg.bloom_backend!r}")
         self.fetcher = fetcher
         self._round_caches: list = []   # per-round persists, see run_round
         self._rules_bc = None           # robots dict Broadcast, built once
@@ -331,77 +314,17 @@ class CrawlEngine:
         # crash recovery BEFORE bloom setup: if a prior run died between
         # the articles commit and the seen commit, roll the round forward
         self._recover_incomplete_round()
-        # bloom: reload from checkpoint; rebuild from the seen snapshot when
-        # missing OR when the checkpoint was taken against a different seen
-        # snapshot (time-travel resume / rollback). A bloom MISSING seen
-        # keys is a correctness bug — false negatives bypass the
-        # authoritative join and re-fetch early — so staleness in either
-        # direction forces a rebuild; empty table → empty filter.
         self._bloom_dir = os.path.join(warehouse, "bloom")
         # W1+ link-graph state (config link_rank): the edge log and the
         # latest rank snapshot live beside the other warehouse tables
         self._link_edges_dir = os.path.join(warehouse, "link_edges")
         self._link_ranks_dir = os.path.join(warehouse, "link_ranks")
         self.bloom = None
-        self.bloom_backend = self._resolve_bloom_backend()
         if self.cfg.use_bloom:
-            cur = self.seen_table.current_snapshot_id()
-            if self.bloom_backend == "table":
-                from .frontier.bloom_table import DistributedBloomTable
-
-                loaded = (self._preloaded_bloom
-                          if isinstance(self._preloaded_bloom,
-                                        DistributedBloomTable)
-                          else DistributedBloomTable.load(
-                              spark, self._bloom_dir))
-                if (loaded is not None
-                        and self._bloom_marker() == (cur, "table")):
-                    self.bloom = loaded
-                elif loaded is not None:
-                    # stale vs the seen snapshot (rollback/time travel):
-                    # rebuild IN PLACE — next version on the same table,
-                    # grown size kept, old versions GC'd by the commit
-                    loaded.rebuild_from(self.seen().select("url_hash"))
-                    self.bloom = loaded
-                    # the rebuild is DURABLE (unlike the driver backend's
-                    # in-memory one): stamp the marker now, or every
-                    # later engine construction that doesn't reach a
-                    # round commit repeats the full seen scan + version
-                    # rewrite
-                    self._write_bloom_marker()
-                else:
-                    # fresh table sized for the keys it is about to hold
-                    # (auto promotion knows the driver checkpoint's
-                    # n_keys / the seen count — arriving saturated would
-                    # burn grow-4x rebuilds immediately)
-                    self.bloom = DistributedBloomTable(
-                        spark, self._bloom_dir, self.cfg.bloom_buckets,
-                        self._bloom_bits_for(self._bloom_est_keys,
-                                             self.cfg.bloom_buckets))
-                    if cur is not None:
-                        self.bloom.rebuild_from(
-                            self.seen().select("url_hash"))
-                        self._write_bloom_marker()
-            else:
-                loaded = (self._preloaded_bloom
-                          if isinstance(self._preloaded_bloom,
-                                        PartitionedBloom)
-                          else PartitionedBloom.load(self._bloom_dir))
-                self.bloom = loaded
-                if (self.bloom is not None
-                        and self._bloom_marker() != (cur, "driver")):
-                    self.bloom = None
-                if self.bloom is None:
-                    # a stale checkpoint's SIZE is still the right size:
-                    # the filter grew adaptively to fit this table, and
-                    # rebuilding at the small configured default would
-                    # produce a saturated (useless) filter that burns a
-                    # full seen scan per 4x re-growth step
-                    nb = loaded.n_buckets if loaded else self.cfg.bloom_buckets
-                    m = loaded.m if loaded else self.cfg.bloom_bits_per_bucket
-                    self.bloom = PartitionedBloom(nb, m)
-                    if cur is not None:
-                        self.bloom.add_df(self.seen().select("url_hash"))
+            self._init_bloom()
+        else:
+            self.backend_choices["bloom"] = {
+                "value": False, "auto": False, "why": "explicit"}
         # link-following resume: the last committed articles delta seeds
         # discovered_frontier() so a resumed run's first round still
         # unions the previous invocation's outlinks
@@ -481,76 +404,64 @@ class CrawlEngine:
             stats={"last_fetch_range": [a_ts, a_ts]},
         )
 
-    def _resolve_bloom_backend(self) -> str:
-        """Pick "driver" vs "table" for bloom_backend="auto".
+    def _init_bloom(self) -> None:
+        """Driver bloom while the seen key count fits
+        driver_bloom_max_keys, else none (the split seen join gates
+        alone). The count is a current checkpoint's n_keys or, without
+        one, the seen snapshot's parquet-footer rows (no Spark job).
 
-        Evidence, cheapest first: an existing TABLE checkpoint is sticky
-        (its bitmaps are already distributed; demoting would pull them
-        into the driver for nothing); a driver checkpoint knows its own
-        n_keys from meta; otherwise an empty seen table means zero keys,
-        and only a non-empty table with no checkpoint at all pays a
-        one-time count — which the subsequent rebuild scans anyway.
-        A driver-backed warehouse whose keys crossed the budget resolves
-        to "table" here: the table path then finds no table checkpoint,
-        rebuilds from the seen snapshot once (durable), and the marker
-        records the promotion. Whatever checkpoint this method loads is
-        stashed (_preloaded_bloom) so __init__ reuses the object instead
-        of paying a second full bitmap read, and the key-count evidence
-        is kept (_bloom_est_keys) so fresh table construction can size
-        its bitmaps to the keys it is about to hold."""
-        self._preloaded_bloom = None
-        self._bloom_est_keys = 0
-        if self.cfg.bloom_backend != "auto":
-            self.backend_choices["bloom_backend"] = {
-                "value": self.cfg.bloom_backend, "auto": False,
-                "why": "explicit"}
-            return self.cfg.bloom_backend
+        A checkpoint is current only when its marker names this seen
+        snapshot and the driver filter; otherwise (rollback / time
+        travel, a filter dropped mid-run, an older engine's table-backend
+        marker) it is rebuilt from the seen snapshot. A bloom MISSING
+        seen keys is a correctness bug — false negatives bypass the
+        authoritative join and re-fetch early — so staleness in either
+        direction forces a rebuild; empty table → empty filter."""
+        cur = self.seen_table.current_snapshot_id()
+        loaded = PartitionedBloom.load(self._bloom_dir)
+        if loaded is not None and self._bloom_marker() == (cur, "driver"):
+            if self._bloom_fits(loaded.n_keys,
+                                f"checkpoint n_keys={loaded.n_keys}"):
+                self.bloom = loaded
+            return
+        n = self._seen_rows_estimate()
+        if not self._bloom_fits(n, f"seen footer rows={n}"):
+            return
+        # a stale checkpoint's SIZE is still the right size: the filter
+        # grew adaptively to fit this table, and rebuilding at the small
+        # configured default would produce a saturated (useless) filter
+        # that burns a full seen scan per 4x re-growth step
+        nb = loaded.n_buckets if loaded else self.cfg.bloom_buckets
+        m = loaded.m if loaded else self.cfg.bloom_bits_per_bucket
+        self.bloom = PartitionedBloom(nb, m)
+        if cur is not None:
+            self.bloom.add_df(self.seen().select("url_hash"))
+
+    def _bloom_fits(self, n_keys: int, evidence: str) -> bool:
+        """Record the pre-filter choice for n_keys; past the driver
+        budget drop the filter AND its marker, so no later engine (say,
+        under a larger budget) trusts the checkpoint left beside it —
+        it stopped tracking seen when the filter went."""
         budget = self.cfg.driver_bloom_max_keys
+        fits = n_keys <= budget
+        self.backend_choices["bloom"] = {
+            "value": fits, "auto": True,
+            "why": f"{evidence} vs driver budget {budget} keys"}
+        if not fits:
+            self.bloom = None
+            try:
+                os.remove(os.path.join(self._bloom_dir, "seen_snapshot"))
+            except FileNotFoundError:
+                pass
+        return fits
 
-        def pick(est: int, why: str) -> str:
-            val = "table" if est > budget else "driver"
-            self._bloom_est_keys = est
-            self.backend_choices["bloom_backend"] = {
-                "value": val, "auto": True,
-                "why": f"{why} vs driver budget {budget} keys"}
-            return val
-
-        if not self.cfg.use_bloom:
-            self.backend_choices["bloom_backend"] = {
-                "value": "driver", "auto": True, "why": "bloom disabled"}
-            return "driver"
-        from .frontier.bloom_table import DistributedBloomTable
-
-        t = DistributedBloomTable.load(self.spark, self._bloom_dir)
-        if t is not None:
-            self._preloaded_bloom = t
-            self.backend_choices["bloom_backend"] = {
-                "value": "table", "auto": True,
-                "why": f"existing table checkpoint ({t.n_keys} keys) "
-                       "is sticky"}
-            return "table"
-        d = PartitionedBloom.load(self._bloom_dir)
-        if d is not None:
-            self._preloaded_bloom = d
-            return pick(d.n_keys, f"driver checkpoint n_keys={d.n_keys}")
-        if self.seen_table.current_snapshot_id() is None:
-            return pick(0, "empty seen table")
-        n = self.seen().count()
-        return pick(n, f"seen-table count={n}")
-
-    def _bloom_bits_for(self, n_keys: int, n_buckets: int) -> int:
-        """bits_per_bucket sized for n_keys at ~10 bits/key (the
-        overfull() threshold), floor = the configured default, rounded
-        up to a power of two — a fresh table built for keys ALREADY
-        known (promotion, big-warehouse rebuild) must not arrive
-        saturated and burn grow-4× full-table rebuilds (same trap the
-        driver reload path documents: a stale checkpoint's grown SIZE
-        is the right size)."""
-        m = self.cfg.bloom_bits_per_bucket
-        need = (10 * max(0, n_keys)) // max(1, n_buckets) + 1
-        while m < need:
-            m *= 4
-        return m
+    def _seen_rows_estimate(self, *extra_dirs: str) -> int:
+        """Rows in the current seen snapshot's data dirs (plus
+        extra_dirs), from parquet footers — no Spark job. An upper bound
+        on its keys: round deltas repeat refetched keys."""
+        man = self.seen_table.manifest() or {"files": []}
+        return sum(sum(_footer_row_counts(d).values())
+                   for d in man["files"] + list(extra_dirs))
 
     def _resolve_broadcast_frontier(self) -> bool:
         """Per-round broadcast-vs-SMJ choice for the fetch join when
@@ -576,33 +487,27 @@ class CrawlEngine:
             "value": val, "auto": True, "why": why}
         return val
 
-    def _bloom_marker(self) -> "tuple[int | None, str | None]":
-        """(seen-snapshot id, backend) the bloom checkpoint was written
-        against. The id is None when the marker was stamped over an
-        empty/rolled-back table (current_snapshot_id() was None) — it
-        must round-trip as None, not fail int(), or an engine over an
-        empty table repeats the full rebuild on every construction."""
+    def _bloom_marker(self) -> "tuple[int, str] | None":
+        """(seen-snapshot id, filter name) the bloom checkpoint was
+        written against; None when absent or unreadable. Only
+        (current snapshot id, "driver") vouches for bloom.npz."""
         try:
             with open(os.path.join(self._bloom_dir, "seen_snapshot")) as f:
-                parts = f.read().split()
-            sid = None if parts[0] == "None" else int(parts[0])
-            backend = parts[1] if len(parts) > 1 else None
-            return sid, backend
-        except (FileNotFoundError, ValueError, IndexError):
-            return None, None
+                sid, name = f.read().split()
+            return int(sid), name
+        except (FileNotFoundError, ValueError):
+            return None
 
     def _write_bloom_marker(self) -> None:
-        # the marker records WHICH backend's checkpoint it validates:
-        # the two backends keep separate on-disk state (meta.json vs
-        # bloom.npz) in the same dir, and a backend switch mid-warehouse
-        # would otherwise accept the OTHER backend's stale filter as
-        # fresh — keys fetched under the other backend would read
-        # definite-new and bypass the authoritative seen join
+        # the marker names the filter it validates: an older engine could
+        # promote a warehouse to a table-backed filter mid-run, leaving
+        # a stale bloom.npz beside a "<sid>\ntable" marker; only a
+        # "driver" marker vouches for bloom.npz, so such a warehouse
+        # rebuilds instead of reading those rounds' keys definite-new
         path = os.path.join(self._bloom_dir, "seen_snapshot")
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            f.write(f"{self.seen_table.current_snapshot_id()}\n"
-                    f"{self.bloom_backend}")
+            f.write(f"{self.seen_table.current_snapshot_id()}\ndriver")
         os.replace(tmp, path)
 
     # ------------------------------------------------------------------
@@ -1100,10 +1005,10 @@ class CrawlEngine:
                     # AQE's empty-stage propagation can replace an
                     # all-empty runtime subtree with an EmptyRelation,
                     # eliminating its CollectMetrics node — obs.get then
-                    # yields an empty row (seen under the table bloom's
-                    # cogroup probe when a round gates every URL). The
-                    # write action DID execute the plan, so the faithful
-                    # count for the vanished node is 0.
+                    # yields an empty row (e.g. a round whose seen gate
+                    # drops every URL). The write action DID execute the
+                    # plan, so the faithful count for the vanished node
+                    # is 0.
                     row = {}
                 if name == "article_counts":
                     for k in ("fetched", "extracted", "fake404_dropped",
@@ -1193,9 +1098,7 @@ class CrawlEngine:
             # clusters by url_hash so next rounds' gate joins and
             # resolves read it exchange-free; keys ≤ footer rows of the
             # dirs folded + this round's delta (no Spark job)
-            man = self.seen_table.manifest() or {"files": []}
-            est = sum(sum(_footer_row_counts(d).values())
-                      for d in man["files"] + [delta_dir])
+            est = self._seen_rows_estimate(delta_dir)
             self.seen_table.commit(
                 new_seen.withColumn("lf_day", F.to_date("last_fetch")),
                 lineage={"round": round_no,
@@ -1231,50 +1134,26 @@ class CrawlEngine:
             # at round start (init rebuilds on a stale marker, recovery
             # commits before bloom setup) — so adding it again would
             # only inflate n_keys, which drives overfull() growth and the
-            # driver→table promotion below.
+            # driver-budget check below.
             self.bloom.add_df(
                 fetched_keys.filter(F.col("previousfetches") == 0),
                 driver_threshold=2_000_000)
-            if (cfg.bloom_backend == "auto"
-                    and self.bloom_backend == "driver"
-                    and self.bloom.n_keys > cfg.driver_bloom_max_keys):
-                # MID-RUN promotion driver→table: a brand-new big crawl
-                # starts with an empty seen table (auto resolves driver)
-                # and can cross the driver budget inside round 0 — don't
-                # wait for the next engine construction to stop growing
-                # driver-resident bitmaps. One seen scan rebuilds the
-                # distributed table from the authoritative key set; the
-                # marker records the new backend so resume is sticky.
-                from .frontier.bloom_table import DistributedBloomTable
-
-                nb = max(self.cfg.bloom_buckets, self.bloom.n_buckets)
-                t = DistributedBloomTable(
-                    self.spark, self._bloom_dir, nb,
-                    self._bloom_bits_for(self.bloom.n_keys, nb))
-                t.rebuild_from(self.seen().select("url_hash"))
-                self.bloom = t
-                self.bloom_backend = "table"
-                self.backend_choices["bloom_backend"] = {
-                    "value": "table", "auto": True,
-                    "why": (f"promoted mid-run: driver bloom n_keys="
-                            f"{t.n_keys} crossed budget "
-                            f"{cfg.driver_bloom_max_keys}")}
-            if self.bloom.overfull():
-                # adaptive growth: rebuild 4× larger from the seen
-                # snapshot (one scan, amortized over the rounds the
-                # quadrupling buys); keeps the per-round broadcast +
-                # checkpoint sized to the table, not worst-case
-                if self.bloom_backend == "table":
-                    self.bloom.rebuild_from(
-                        self.seen().select("url_hash"),
-                        bits_per_bucket=self.bloom.m * 4)
-                else:
+            n = self.bloom.n_keys
+            # a brand-new big crawl starts with an empty seen table and
+            # can cross the budget inside round 0: stop growing
+            # driver-resident bitmaps now, not at the next construction
+            if self._bloom_fits(n, f"n_keys={n} after round {round_no}"):
+                if self.bloom.overfull():
+                    # adaptive growth: rebuild 4× larger from the seen
+                    # snapshot (one scan, amortized over the rounds the
+                    # quadrupling buys); keeps the per-round broadcast +
+                    # checkpoint sized to the table, not worst-case
                     self.bloom = PartitionedBloom.from_seen(
                         self.seen(), self.bloom.n_buckets, self.bloom.m * 4)
-            _mark("bloom_update")
-            self.bloom.save(self._bloom_dir)  # checkpointed with the round
-            self._write_bloom_marker()        # ties bloom ↔ seen snapshot
-            _mark("bloom_save")
+                _mark("bloom_update")
+                self.bloom.save(self._bloom_dir)  # checkpointed with the round
+                self._write_bloom_marker()        # ties bloom ↔ seen snapshot
+                _mark("bloom_save")
         if cfg.link_rank:
             self._update_link_graph(round_no)
             _mark("link_rank")

@@ -11,8 +11,8 @@ O(corpus): at 10^10 stored docs, re-running the batch family over
 (corpus ∪ batch) per crawl round is impossible, while probing a
 band-keyed signature table is a bounded bucket join.
 
-Design (the engine's proven LSM/seen-set shape, `frontier/state.py` /
-`frontier/bloom_table.py`):
+Design (the engine's proven LSM/seen-set shape, `frontier/state.py` and
+the crawl's bucketed seen base + round deltas):
 
   * `bands_base`  — compacted (band, doc_id) rows, ONE bucketed
     snapshot (`bucketBy(n_buckets, band)` + sortBy, registered as an

@@ -24,10 +24,10 @@ buys). A right-sized filter matters on the round critical path: the
 probe broadcasts the bitmaps every round, and a 32 MiB broadcast +
 checkpoint for a 200 k-key table cost ~1 s/round of pure Amdahl drag.
 
-The driver bloom has one probe, the broadcast `split`. At default
-geometry its bitmaps stay at or below 32 MiB up to the engine's 20M-key
-driver budget; beyond that the engine promotes to the table backend
-(bloom_table.py: distributed bitmaps, partition-aligned probe).
+The driver bloom has one probe, the broadcast `split`, and is the
+engine's only seen pre-filter. At default geometry its bitmaps stay at
+or below 32 MiB up to the engine's 20M-key driver budget; beyond that
+the engine drops the filter and the split seen join gates alone.
 """
 
 from __future__ import annotations

@@ -10,9 +10,10 @@ Reimplements the reference's RefetchControl rules
 
 Scale notes (the 100 TB story):
   * J1 is an equi join on url_hash — hash-partitioned both sides; AQE
-    converts to broadcast when the frontier round is small. The bloom
-    pre-filter (frontier.bloom) removes definite-new URLs *before* this
-    shuffle.
+    converts to broadcast when the frontier round is small. The driver
+    bloom pre-filter (frontier.bloom) removes definite-new URLs *before*
+    this shuffle while the seen keys fit its driver budget; past it the
+    (split, bucketed-base) join gates alone.
   * J2 is expressed as union + hash aggregation (map-side combinable)
     rather than a full-outer join — one shuffle, no join, and exactly the
     Iceberg `MERGE INTO ... WHEN MATCHED UPDATE fetches+1` in SQL form.

@@ -1930,8 +1930,9 @@ ORACLE_SQL = {
                                / len(grams), 6)
                END AS dup_ngram_frac
         FROM g ORDER BY doc_id""",
-    # quality gate applied: same per-row signal expressions, thresholds
-    # with NULL-passes (coalesce TRUE) semantics, original columns kept
+    # quality gate applied: same per-row signal expressions, no-token
+    # docs rejected, thresholds with NULL-passes (coalesce TRUE)
+    # semantics, original columns kept
     "quality_gate_docs": f"""
         WITH tok AS (
           SELECT doc_id, text, lang, source, n_chars,
@@ -1965,7 +1966,8 @@ ORACLE_SQL = {
                  END AS dup_ngram_frac
           FROM g)
         SELECT * FROM sig
-        WHERE coalesce(dup_ngram_frac <= 0.08, TRUE)
+        WHERE n_tokens > 0
+          AND coalesce(dup_ngram_frac <= 0.08, TRUE)
           AND coalesce(top_token_frac <= 0.15, TRUE)
           AND coalesce(distinct_token_ratio >= 0.35, TRUE)
         ORDER BY doc_id""",

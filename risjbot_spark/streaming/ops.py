@@ -289,8 +289,9 @@ def stream_quality_gate(docs: DataFrame, eval_docs: DataFrame,
     contamination is then size(array_intersect(doc_grams, eval_grams))
     computed inside the row — no streaming aggregate, no state store.
 
-    Gate semantics: NULL-text docs are dropped (nothing to train on);
-    docs too short to judge a signal (NULL fraction) pass that check —
+    Gate semantics: NULL-text docs and docs with no tokens are dropped
+    (nothing to train on); docs too short to judge a signal (NULL
+    fraction) pass that check —
     the batch pipeline over the accumulated table stays authoritative,
     the same layering as the crawl's bloom-then-join gate.
 
@@ -335,8 +336,9 @@ def stream_quality_gate(docs: DataFrame, eval_docs: DataFrame,
         *(expr.alias(name) for name, expr in sig.items()),
         hit_frac.alias("eval_hit_frac"), *clf_cols)
     passes = (
-        F.coalesce(F.col("dup_ngram_frac") <= max_dup_ngram_frac,
-                   F.lit(True))
+        (F.col("n_tokens") > 0)
+        & F.coalesce(F.col("dup_ngram_frac") <= max_dup_ngram_frac,
+                     F.lit(True))
         & F.coalesce(F.col("top_token_frac") <= max_top_token_frac,
                      F.lit(True))
         & F.coalesce(F.col("distinct_token_ratio") >= min_distinct_ratio,

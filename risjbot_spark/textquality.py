@@ -171,9 +171,10 @@ def quality_filter(df: DataFrame, text_col: str,
     against caller-column collisions).
 
     Gate semantics match the streaming twin (`stream_quality_gate`):
-    NULL-text rows are dropped (nothing to train on), and a document
-    too short to judge a signal (NULL fraction — e.g. no n-grams)
-    passes that check rather than being silently discarded.
+    NULL-text rows and documents with no tokens (`''`, whitespace) are
+    dropped (nothing to train on), and a document too short to judge a
+    signal (NULL fraction — e.g. a single token has no n-grams) passes
+    that check rather than being silently discarded.
 
     Plan shape at 100 TB: a pure projection + filter — ZERO exchanges,
     no join, no aggregation. The token array and its sort are computed
@@ -195,8 +196,9 @@ def quality_filter(df: DataFrame, text_col: str,
          .withColumn(_TOKS, tokens_expr(F.col(text_col))))
     sig = repetition_exprs(F.col(_TOKS), ngram=ngram, round_dp=round_dp)
     passes = (
-        F.coalesce(sig["dup_ngram_frac"] <= max_dup_ngram_frac,
-                   F.lit(True))
+        (sig["n_tokens"] > 0)
+        & F.coalesce(sig["dup_ngram_frac"] <= max_dup_ngram_frac,
+                     F.lit(True))
         & F.coalesce(sig["top_token_frac"] <= max_top_token_frac,
                      F.lit(True))
         & F.coalesce(sig["distinct_token_ratio"] >= min_distinct_ratio,

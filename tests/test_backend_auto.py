@@ -1,22 +1,24 @@
 """Scale-backend auto-selection (r3 verdict item #3): with the default
 "auto" config the engine must pick the 100×-safe backend from OBSERVED
-scale — bloom key count vs the driver budget, robots host count, frontier
-rows vs the broadcast budget — without the caller asking, record the
-choice + evidence in `engine.backend_choices`, and keep the explicit
-flags as overrides. At sandbox scale the autos must resolve to the same
-fast paths the pre-auto defaults hard-coded (driver bloom, broadcast
-fetch, dict robots), so every existing parity test doubles as an
-auto-resolution regression."""
+scale — seen key count vs the driver bloom budget, robots host count,
+frontier rows vs the broadcast budget — without the caller asking,
+record the choice + evidence in `engine.backend_choices`, and keep the
+explicit flags as overrides. At sandbox scale the autos must resolve to
+the same fast paths the pre-auto defaults hard-coded (driver bloom,
+broadcast fetch, dict robots), so every existing parity test doubles as
+an auto-resolution regression."""
 
 from datetime import datetime, timedelta, timezone
 
-import pytest
 from pyspark.sql import functions as F
 
-from risjbot_spark.corpus import pages_df
+from risjbot_spark.corpus import host_lang_for, pages_df, pathway_for, url_for
 from risjbot_spark.crawl import CrawlConfig, CrawlEngine
+from risjbot_spark.frontier.bloom import PartitionedBloom
+from risjbot_spark.frontier.oracle import CrawlOracle
 from risjbot_spark.frontier.state import RefetchConfig
 from risjbot_spark.schema import ROBOTS_SCHEMA
+from risjbot_spark.urlnorm import canonicalize_py
 
 T0 = datetime(2017, 4, 1, tzinfo=timezone.utc)
 
@@ -38,48 +40,79 @@ def test_small_scale_resolves_to_fast_paths(spark, tmp_path):
     robots = spark.createDataFrame(
         [("example.com", "User-agent: *\nAllow: /")], ROBOTS_SCHEMA)
     eng = _engine(spark, tmp_path, pages, robots=robots)
-    assert eng.bloom_backend == "driver"
+    assert isinstance(eng.bloom, PartitionedBloom)
+    assert eng.backend_choices["bloom"] == {
+        "value": True, "auto": True,
+        "why": "seen footer rows=0 vs driver budget 20000000 keys"}
     assert eng.rules_map and eng.rules_df is None
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     eng.run_round(seeds, 0, T0)
     ch = eng.backend_choices
-    assert ch["bloom_backend"] == {
-        "value": "driver", "auto": True,
-        "why": "empty seen table vs driver budget 20000000 keys"}
+    assert ch["bloom"] == {
+        "value": True, "auto": True,
+        "why": "n_keys=30 after round 0 vs driver budget 20000000 keys"}
+    assert isinstance(eng.bloom, PartitionedBloom)
     assert ch["robots_scale_path"]["value"] is False
     assert ch["robots_scale_path"]["auto"] is True
     assert ch["broadcast_frontier"]["value"] is True
     assert ch["broadcast_frontier"]["auto"] is True
 
 
-def test_bloom_flips_to_table_beyond_driver_budget(spark, tmp_path):
-    """A warehouse whose seen table outgrows driver_bloom_max_keys must
-    resolve bloom_backend=auto to the table backend on the NEXT engine
-    construction (promotion: durable rebuild from the seen snapshot),
-    and gate identically afterwards."""
-    from risjbot_spark.frontier.bloom_table import DistributedBloomTable
+def _oracle(cfg, n_pages):
+    pages = {canonicalize_py(url_for(i)) for i in range(n_pages)}
+    fake404 = {canonicalize_py(url_for(i)) for i in range(n_pages)
+               if pathway_for(i, host_lang_for(i)[0]) == "fake404"}
+    return CrawlOracle(pages, {}, cfg.refetch, cfg.default_budget,
+                       cfg.round_seconds, fake404=fake404)
 
+
+def _round_vs_oracle(spark, eng, orc, ids, rnd, ts):
+    """Run one engine round and one oracle round over seeds url_for(i),
+    i in ids; the fetched URL sets must match."""
+    eng.run_round(spark.createDataFrame([(url_for(i), 0) for i in ids],
+                                        "url string, priority int"),
+                  rnd, ts)
+    log = orc.run_round([{"url": url_for(i), "priority": 0,
+                          "discovered_ts": ts} for i in ids], rnd, ts)
+    got = {r.url_canon for r in eng.articles_table.read()
+           .filter(F.col("round") == rnd).select("url_canon").collect()}
+    assert got == {u for (_, u, _) in log}, f"round {rnd}"
+    if rnd > 0 and rnd % eng.cfg.trim_every == 0:       # compaction round
+        orc.trim({canonicalize_py(url_for(i)) for i in ids}, ts)
+
+
+def _seen_matches(eng, orc):
+    return ({r.url: r.fetches for r in eng.seen().collect()}
+            == {u: nf for u, (nf, _) in orc.seen.items()})
+
+
+def test_bloom_off_beyond_driver_budget(spark, tmp_path):
+    """A warehouse whose seen keys outgrow driver_bloom_max_keys builds
+    no filter at the next construction — evidence from a current
+    checkpoint's n_keys, else from the seen snapshot's footer rows — and
+    the seen join alone gates exactly like the oracle afterwards."""
     pages = pages_df(spark, 40, partitions=2)
-    seeds = pages.select("url").withColumn("priority", F.lit(0))
-    # write the over-budget warehouse under an EXPLICIT driver backend
-    # (auto would already promote mid-run — covered by its own test);
-    # this scenario is resuming an old driver-pinned warehouse with auto
-    eng = _engine(spark, tmp_path, pages, bloom_backend="driver")
-    assert eng.bloom_backend == "driver"
-    eng.run_round(seeds, 0, T0)                 # 40 keys now seen
+    eng = _engine(spark, tmp_path, pages)
+    orc = _oracle(eng.cfg, 40)
+    _round_vs_oracle(spark, eng, orc, range(40), 0, T0)   # 40 keys seen
+    assert isinstance(eng.bloom, PartitionedBloom)
     eng2 = _engine(spark, tmp_path, pages, driver_bloom_max_keys=25)
-    assert eng2.bloom_backend == "table"
-    assert isinstance(eng2.bloom, DistributedBloomTable)
-    why = eng2.backend_choices["bloom_backend"]["why"]
-    assert "n_keys=40" in why and "budget 25" in why
-    # promoted filter must still know every seen key (no false negatives)
-    hs = eng2.seen().select("url_hash")
-    maybe, fresh = eng2.bloom.split(hs, spark)
-    assert maybe.count() == 40 and fresh.count() == 0
-    # a THIRD construction is sticky on the table checkpoint
+    assert eng2.bloom is None
+    assert eng2.backend_choices["bloom"] == {
+        "value": False, "auto": True,
+        "why": "checkpoint n_keys=40 vs driver budget 25 keys"}
+    # gated (1 s later) and refetch-eligible (1 h later) rounds
+    _round_vs_oracle(spark, eng2, orc, range(40), 1,
+                     T0 + timedelta(seconds=1))
+    _round_vs_oracle(spark, eng2, orc, range(40), 2,
+                     T0 + timedelta(seconds=3601))
+    assert eng2.bloom is None and _seen_matches(eng2, orc)
+    # the drop took the marker with it: a third construction reads the
+    # seen footers (40 round-0 + 40 round-2 delta rows), not the
+    # round-0 checkpoint
     eng3 = _engine(spark, tmp_path, pages, driver_bloom_max_keys=25)
-    assert eng3.bloom_backend == "table"
-    assert "sticky" in eng3.backend_choices["bloom_backend"]["why"]
+    assert eng3.bloom is None
+    assert "seen footer rows=80" in eng3.backend_choices["bloom"]["why"]
 
 
 def test_robots_flips_to_dataframe_beyond_host_budget(spark, tmp_path):
@@ -128,16 +161,6 @@ def test_frontier_stops_broadcasting_beyond_row_budget(spark, tmp_path):
     assert eng2.backend_choices["broadcast_frontier"]["value"] is False
 
 
-@pytest.mark.parametrize("backend", ["cuckoo", "drvier"])
-def test_unknown_bloom_backend_rejected(spark, tmp_path, backend):
-    """Only auto/driver/table exist; anything else must fail at
-    construction instead of silently building a driver bloom with no
-    auto-promotion."""
-    pages = pages_df(spark, 10, partitions=2)
-    with pytest.raises(ValueError, match="bloom_backend"):
-        _engine(spark, tmp_path, pages, bloom_backend=backend)
-
-
 def test_auto_equals_explicit_round_output(spark, tmp_path):
     """The auto engine's articles + seen state must be identical to the
     old explicit defaults (driver bloom, broadcast fetch)."""
@@ -145,8 +168,7 @@ def test_auto_equals_explicit_round_output(spark, tmp_path):
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     results = {}
     for name, kw in (("auto", {}),
-                     ("explicit", dict(bloom_backend="driver",
-                                       broadcast_frontier=True,
+                     ("explicit", dict(broadcast_frontier=True,
                                        robots_scale_path=False))):
         eng = _engine(spark, tmp_path, pages, name=f"wh_{name}", **kw)
         for rnd in range(2):
@@ -161,24 +183,66 @@ def test_auto_equals_explicit_round_output(spark, tmp_path):
     assert results["auto"] == results["explicit"]
 
 
-def test_bloom_promotes_mid_run_when_budget_crossed(spark, tmp_path):
-    """A brand-new crawl (empty seen table → auto picks driver) whose
-    round-0 key count crosses driver_bloom_max_keys must promote to the
-    table backend INSIDE the round — not wait for the next engine
-    construction — and keep gating correctly afterwards."""
-    from risjbot_spark.frontier.bloom_table import DistributedBloomTable
+def test_bloom_dropped_past_budget_resumes_table_era_warehouse(spark,
+                                                               tmp_path):
+    """Resume safety of the one seen pre-filter. An older engine could
+    promote a warehouse from the driver bloom to a table-backed filter
+    mid-run, leaving a stale bloom.npz beside a "<sid>\ntable" marker
+    that names the CURRENT seen snapshot. That bloom.npz must never load
+    as fresh — the keys it lacks would read definite-new, skip the seen
+    join and be re-fetched early. The engine rebuilds it under the
+    budget, leaves it off past the budget, drops it mid-run when a
+    round's adds cross the budget, and a later construction under a
+    larger budget does not trust the checkpoint taken before the drop.
+    Every round's fetched set and the final seen state match the
+    oracle."""
+    import os
 
-    pages = pages_df(spark, 50, partitions=2)
-    seeds = pages.select("url").withColumn("priority", F.lit(0))
+    pages = pages_df(spark, 60, partitions=2)
+    wh = tmp_path / "wh"
+    marker = wh / "bloom" / "seen_snapshot"
+    eng = _engine(spark, tmp_path, pages)
+    orc = _oracle(eng.cfg, 60)
+    _round_vs_oracle(spark, eng, orc, range(10), 0, T0)   # bloom.npz: 10
+    # round 1 adds 10 keys the checkpoint never sees, then the older
+    # engine's promotion marker names the current snapshot
+    eng = _engine(spark, tmp_path, pages, use_bloom=False)
+    _round_vs_oracle(spark, eng, orc, range(20), 1,
+                     T0 + timedelta(seconds=1))
+    marker.write_text(f"{eng.seen_table.current_snapshot_id()}\ntable")
+
+    # past the budget at construction: no filter, the seen join gates
+    off = _engine(spark, tmp_path, pages, driver_bloom_max_keys=15)
+    assert off.bloom is None
+    assert "seen footer rows=20" in off.backend_choices["bloom"]["why"]
+    assert not marker.exists()
+    marker.write_text(f"{off.seen_table.current_snapshot_id()}\ntable")
+
+    # under the budget: rebuilt from seen (20 keys), not loaded (10)
     eng = _engine(spark, tmp_path, pages, driver_bloom_max_keys=30)
-    assert eng.bloom_backend == "driver"
-    eng.run_round(seeds, 0, T0)                # 50 keys > 30 budget
-    assert eng.bloom_backend == "table"
-    assert isinstance(eng.bloom, DistributedBloomTable)
-    assert "promoted mid-run" in eng.backend_choices["bloom_backend"]["why"]
-    # next round (1 s later): everything gated, zero refetches
-    eng.run_round(seeds, 1, T0 + timedelta(seconds=1))
-    assert eng.articles_table.read().count() == 50
-    # a fresh construction is sticky on the promoted table checkpoint
-    eng2 = _engine(spark, tmp_path, pages, driver_bloom_max_keys=30)
-    assert eng2.bloom_backend == "table"
+    assert isinstance(eng.bloom, PartitionedBloom) and eng.bloom.n_keys == 20
+    hs = eng.seen().select("url_hash")
+    assert eng.bloom.split(hs, spark)[1].count() == 0
+    _round_vs_oracle(spark, eng, orc, range(25), 2,
+                     T0 + timedelta(seconds=2))
+    assert eng.bloom.n_keys == 25                         # saved, current
+    assert marker.read_text().split()[1] == "driver"
+    # round 3's adds cross the budget: dropped mid-run, marker with it
+    _round_vs_oracle(spark, eng, orc, range(40), 3,
+                     T0 + timedelta(seconds=3))
+    assert eng.bloom is None and not marker.exists()
+    why = eng.backend_choices["bloom"]["why"]
+    assert why == "n_keys=40 after round 3 vs driver budget 30 keys"
+    _round_vs_oracle(spark, eng, orc, range(50), 4,
+                     T0 + timedelta(seconds=4))      # seen join alone
+
+    # a larger budget later: bloom.npz still holds round 2's 25 keys,
+    # so it is rebuilt from seen, never trusted
+    assert os.path.exists(wh / "bloom" / "bloom.npz")
+    eng = _engine(spark, tmp_path, pages, driver_bloom_max_keys=1000)
+    assert eng.bloom.n_keys == 50
+    hs = eng.seen().select("url_hash")
+    assert eng.bloom.split(hs, spark)[1].count() == 0
+    _round_vs_oracle(spark, eng, orc, range(60), 5,
+                     T0 + timedelta(seconds=5))
+    assert _seen_matches(eng, orc)

@@ -800,7 +800,7 @@ def test_bloom_gated_trim_then_rerequest_matches_unfiltered(spark, corpus,
                 for r in eng.seen().collect()}
         runs[use_bloom] = (arts, seen)
         if use_bloom:
-            assert eng.bloom_backend == "driver"
+            assert eng.backend_choices["bloom"]["value"] is True
             # upper bound: each re-requested trimmed key is added again
             assert eng.bloom.n_keys == len(seen) + len(a_hashes)
     assert runs[True] == runs[False]

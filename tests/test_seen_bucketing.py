@@ -90,9 +90,9 @@ def test_seen_filter_split_equals_seen_filter(spark):
     assert got[xxhash64("https://h1.example.com/zz")] == 0
 
 
-def _run_engine(spark, wh, pages, seeds, rounds=6):
+def _run_engine(spark, wh, pages, seeds, rounds=6, **cfg_kw):
     cfg = CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                      collect_lineage=False, trim_every=2)
+                      collect_lineage=False, trim_every=2, **cfg_kw)
     eng = CrawlEngine(spark, wh, pages, None, cfg)
     for r in range(rounds):
         eng.run_round(seeds, r, START + timedelta(seconds=10801 * r))
@@ -120,10 +120,23 @@ def test_bucketed_run_parity_with_generic(spark, tmp_path):
     """Six rounds through two compactions: the fetched URL set of every
     round and the final seen url → fetches equal the in-memory
     CrawlOracle's (the generic reference state machine)."""
+    _parity_with_oracle(spark, tmp_path)
+
+
+def test_bucketed_run_parity_past_bloom_budget(spark, tmp_path):
+    """The same series with round 0's keys crossing a small driver bloom
+    budget: the filter is dropped mid-run and the (split, bucketed) seen
+    join gates alone — still the oracle's fetches and seen state."""
+    eng = _parity_with_oracle(spark, tmp_path, driver_bloom_max_keys=40)
+    assert eng.bloom is None
+    assert eng.backend_choices["bloom"]["value"] is False
+
+
+def _parity_with_oracle(spark, tmp_path, **cfg_kw):
     n = 90
     pages = pages_df(spark, n, partitions=4)
     seeds = pages.select("url").withColumn("priority", F.lit(0))
-    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds)
+    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds, **cfg_kw)
     orc = _oracle(eng.cfg, n)
     seed_rows = [{"url": url_for(i), "priority": 0} for i in range(n)]
     requested = {canonicalize_py(s["url"]) for s in seed_rows}
@@ -137,6 +150,7 @@ def test_bucketed_run_parity_with_generic(spark, tmp_path):
     assert _seen_fetches(eng) == {u: nf for u, (nf, _) in orc.seen.items()}
     # the engine actually produced the split shape
     assert eng._seen_parts() is not None
+    return eng
 
 
 def test_seen_bucket_count_sized_from_keys():

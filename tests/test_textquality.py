@@ -139,28 +139,48 @@ def test_decontaminate_plan_broadcasts_eval(contaminated):
 
 
 def test_quality_filter_keeps_and_drops(corpus):
-    """The applied gate: NULL text dropped, too-short-to-judge passes
-    (NULL fractions), threshold violations dropped, all caller columns
-    survive, signals appended on request."""
+    """The applied gate: NULL text and no-token docs dropped,
+    too-short-to-judge passes (NULL fractions), threshold violations
+    dropped, all caller columns survive, signals appended on request."""
     kept = textquality.quality_filter(
         corpus, "body", max_top_token_frac=0.5, with_signals=True)
     rows = {r["pk"]: r for r in kept.collect()}
     # 1: ttf 0.4 ≤ 0.5 → keep; 2: ttf 1.0 → drop; 3: NULL text → drop;
-    # 4: empty → all-NULL signals pass; 5: "solo" ttf 1.0 → drop;
+    # 4: empty → no tokens → drop; 5: "solo" ttf 1.0 → drop;
     # 6: ttf 1/3 → keep
-    assert set(rows) == {1, 4, 6}
+    assert set(rows) == {1, 6}
     assert kept.columns == ["pk", "body", "n_tokens",
                             "distinct_token_ratio", "top_token_frac",
                             "dup_ngram_frac"]
     r1 = rows[1]
     assert (r1["body"], r1["n_tokens"], r1["dup_ngram_frac"]) == (
         "a b a b c", 5, 0.25)
-    assert rows[4]["distinct_token_ratio"] is None
     # without signals: original schema, same row set
     bare = textquality.quality_filter(corpus, "body",
                                       max_top_token_frac=0.5)
     assert bare.columns == ["pk", "body"]
-    assert {r["pk"] for r in bare.collect()} == {1, 4, 6}
+    assert {r["pk"] for r in bare.collect()} == {1, 6}
+
+
+def test_zero_token_docs_fail_both_quality_gates(spark):
+    """A doc with no tokens has nothing to train on: the batch gate and
+    its streaming twin reject it as a fixed rule, even with thresholds
+    that pass everything else — its NULL signals must not pass through
+    the NULL-passes coalesce, while a one-token doc (NULL n-gram
+    fraction) still passes."""
+    from risjbot_spark.streaming import stream_quality_gate
+
+    docs = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "\t\n "), (4, "solo"), (5, "a b c")],
+        "doc_id long, text string")
+    lax = dict(max_dup_ngram_frac=1.0, max_top_token_frac=1.0,
+               min_distinct_ratio=0.0)
+    kept = textquality.quality_filter(docs, "text", **lax)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [4, 5]
+    ev = spark.createDataFrame([(100, "unrelated eval text here ok")],
+                               "doc_id long, text string")
+    streamed = stream_quality_gate(docs, ev, **lax)
+    assert sorted(r["doc_id"] for r in streamed.collect()) == [4, 5]
 
 
 def test_quality_filter_zero_exchanges(corpus):

@@ -87,8 +87,9 @@ def _session():
 
 def _engine(spark, wh):
     """Scale-path configuration, bench_scale_path.py's shape: bucketed
-    pages (SMJ fetch), table bloom, bucketed seen base — so the kill
-    also exercises the distributed filter's crash consistency, not just
+    pages (SMJ fetch), bucketed seen base, and the engine's default seen
+    pre-filter (the driver bloom below its key budget) — so the kill
+    also exercises the bloom checkpoint's seen-snapshot marker, not just
     the snapshot tables'."""
     from risjbot_spark.bucketing import (read_bucketed_pages,
                                          register_bucketed_pages,
@@ -138,7 +139,6 @@ def _engine(spark, wh):
             num_partitions=BUCKETS,
             collect_lineage=False,
             use_bloom=True,
-            bloom_backend="table",
             broadcast_frontier=False,
             pages_unique_per_url=True,
         ),

@@ -3,15 +3,17 @@
 The driver bench (bench.py) measures the default small/medium-crawl
 path: broadcast frontier join + driver-resident bloom. The 10^10-URL
 north-star deployment instead runs the scale path — bucketed pages
-table (SMJ fetch join, one Exchange on the frontier side only),
-url_hash-bucketed seen base, and the table-backed distributed bloom —
-which no timed surface exercised end-to-end beyond unit parity tests.
+table (SMJ fetch join, one Exchange on the frontier side only) and the
+url_hash-bucketed seen base — which no timed surface exercised
+end-to-end beyond unit parity tests. The seen pre-filter is the engine
+default: the driver bloom while the seen keys fit
+driver_bloom_max_keys, none past it.
 
 This tool runs N crawl rounds at 10^6 pages (5× the scaling-leg corpus)
 through exactly that configuration and reports cold + warm throughput,
-per-round seconds, and driver-Python RSS (which must stay flat: the
-table bloom keeps no bitmaps on the driver). Results → one JSON line on
-stdout and BENCH/scale_path_1m.json.
+per-round seconds, and driver-Python RSS (bounded by the driver bloom's
+key budget). Results → one JSON line on stdout and
+BENCH/scale_path_1m.json.
 
     SPARK_GRAFT_SP_PAGES=1000000 SPARK_GRAFT_SP_ROUNDS=4 \
         python tools/bench_scale_path.py
@@ -148,7 +150,6 @@ def main() -> None:
             num_partitions=BUCKETS,
             collect_lineage=False,
             use_bloom=True,
-            bloom_backend="table",       # distributed bitmaps
             broadcast_frontier=False,    # SMJ against the bucketed table
             # the generator emits exactly one row per URL and the
             # bucketed ingest preserves that, so the engine can skip
@@ -206,8 +207,8 @@ def main() -> None:
         "articles_round0": n_round0,
         "articles_total": n_articles,
         "cold_urls_per_sec": round(N_PAGES / timings["round_0"], 1),
-        "config": "broadcast_frontier=False bloom_backend=table "
-                  "pages_unique_per_url=True"
+        "config": "broadcast_frontier=False pages_unique_per_url=True "
+                  f"bloom={eng.backend_choices['bloom']['value']}"
                   + (" prune_articles=True" if prune_articles else ""),
         "ts": datetime.now(timezone.utc).isoformat(),
     }

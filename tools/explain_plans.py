@@ -439,21 +439,6 @@ def main() -> None:
     check("seen_gate_bucketed", p.count("Exchange hashpartitioning") == 2,
           "exchanges = frontier + delta resolve only; base side in place")
 
-    # --- table-backed bloom probe (r3): partition-aligned cogroup of
-    # frontier and the bitmap TABLE — no bitmap broadcast, no driver
-    # round-trip in the plan
-    from risjbot_spark.frontier.bloom_table import DistributedBloomTable
-    bt = DistributedBloomTable(spark, tempfile.mkdtemp(), 8, 1 << 14)
-    bt.add_df(spark.range(1000).select(F.xxhash64("id").alias("url_hash")))
-    maybe, _new = bt.split_aligned(
-        spark.range(100).select(F.xxhash64("id").alias("url_hash")))
-    p = plan_of(maybe)
-    sections.append(("bloom table probe (cogrouped bitmaps)", p))
-    check("bloom_table_probe", "FlatMapCoGroupsInPandas" in p,
-          "probe is a cogroup with the parquet bitmap table")
-    check("bloom_table_probe", "Scan parquet" in p or "FileScan parquet" in p,
-          "bitmaps read from the table, not shipped from the driver")
-
     # --- ivf_kmeans: every Lloyd iteration broadcasts the K-row
     # centroid table into the assignment join; vectors never shuffle
     # for assignment (only the K-row centroid recompute aggregates)
