@@ -183,66 +183,46 @@ def test_auto_equals_explicit_round_output(spark, tmp_path):
     assert results["auto"] == results["explicit"]
 
 
-def test_bloom_dropped_past_budget_resumes_table_era_warehouse(spark,
-                                                               tmp_path):
-    """Resume safety of the one seen pre-filter. An older engine could
-    promote a warehouse from the driver bloom to a table-backed filter
-    mid-run, leaving a stale bloom.npz beside a "<sid>\ntable" marker
-    that names the CURRENT seen snapshot. That bloom.npz must never load
-    as fresh — the keys it lacks would read definite-new, skip the seen
-    join and be re-fetched early. The engine rebuilds it under the
-    budget, leaves it off past the budget, drops it mid-run when a
-    round's adds cross the budget, and a later construction under a
-    larger budget does not trust the checkpoint taken before the drop.
-    Every round's fetched set and the final seen state match the
-    oracle."""
+def test_bloom_promotes_mid_run_when_budget_crossed(spark, tmp_path):
+    """A crawl whose round adds carry the seen key count past
+    driver_bloom_max_keys hands gating to the seen join alone INSIDE
+    that round: the driver bloom is dropped with its marker, not kept
+    until the next construction, and every later round still fetches
+    what the oracle fetches. The drop is sticky at the same budget, and
+    a later construction under a larger budget rebuilds the filter from
+    seen instead of trusting the checkpoint taken before the drop."""
     import os
 
     pages = pages_df(spark, 60, partitions=2)
     wh = tmp_path / "wh"
     marker = wh / "bloom" / "seen_snapshot"
-    eng = _engine(spark, tmp_path, pages)
-    orc = _oracle(eng.cfg, 60)
-    _round_vs_oracle(spark, eng, orc, range(10), 0, T0)   # bloom.npz: 10
-    # round 1 adds 10 keys the checkpoint never sees, then the older
-    # engine's promotion marker names the current snapshot
-    eng = _engine(spark, tmp_path, pages, use_bloom=False)
-    _round_vs_oracle(spark, eng, orc, range(20), 1,
-                     T0 + timedelta(seconds=1))
-    marker.write_text(f"{eng.seen_table.current_snapshot_id()}\ntable")
-
-    # past the budget at construction: no filter, the seen join gates
-    off = _engine(spark, tmp_path, pages, driver_bloom_max_keys=15)
-    assert off.bloom is None
-    assert "seen footer rows=20" in off.backend_choices["bloom"]["why"]
-    assert not marker.exists()
-    marker.write_text(f"{off.seen_table.current_snapshot_id()}\ntable")
-
-    # under the budget: rebuilt from seen (20 keys), not loaded (10)
     eng = _engine(spark, tmp_path, pages, driver_bloom_max_keys=30)
-    assert isinstance(eng.bloom, PartitionedBloom) and eng.bloom.n_keys == 20
-    hs = eng.seen().select("url_hash")
-    assert eng.bloom.split(hs, spark)[1].count() == 0
-    _round_vs_oracle(spark, eng, orc, range(25), 2,
-                     T0 + timedelta(seconds=2))
-    assert eng.bloom.n_keys == 25                         # saved, current
+    orc = _oracle(eng.cfg, 60)
+    _round_vs_oracle(spark, eng, orc, range(25), 0, T0)
+    assert isinstance(eng.bloom, PartitionedBloom) and eng.bloom.n_keys == 25
     assert marker.read_text().split()[1] == "driver"
-    # round 3's adds cross the budget: dropped mid-run, marker with it
-    _round_vs_oracle(spark, eng, orc, range(40), 3,
-                     T0 + timedelta(seconds=3))
+    # round 1's adds cross the budget: dropped mid-run, marker with it
+    _round_vs_oracle(spark, eng, orc, range(40), 1,
+                     T0 + timedelta(seconds=1))
     assert eng.bloom is None and not marker.exists()
-    why = eng.backend_choices["bloom"]["why"]
-    assert why == "n_keys=40 after round 3 vs driver budget 30 keys"
-    _round_vs_oracle(spark, eng, orc, range(50), 4,
-                     T0 + timedelta(seconds=4))      # seen join alone
+    assert eng.backend_choices["bloom"] == {
+        "value": False, "auto": True,
+        "why": "n_keys=40 after round 1 vs driver budget 30 keys"}
+    _round_vs_oracle(spark, eng, orc, range(50), 2,
+                     T0 + timedelta(seconds=2))      # seen join alone
 
-    # a larger budget later: bloom.npz still holds round 2's 25 keys,
+    # same budget: a fresh construction stays off (no marker to trust)
+    eng = _engine(spark, tmp_path, pages, driver_bloom_max_keys=30)
+    assert eng.bloom is None
+    assert "seen footer rows=" in eng.backend_choices["bloom"]["why"]
+
+    # a larger budget later: bloom.npz still holds round 0's 25 keys,
     # so it is rebuilt from seen, never trusted
     assert os.path.exists(wh / "bloom" / "bloom.npz")
     eng = _engine(spark, tmp_path, pages, driver_bloom_max_keys=1000)
     assert eng.bloom.n_keys == 50
     hs = eng.seen().select("url_hash")
     assert eng.bloom.split(hs, spark)[1].count() == 0
-    _round_vs_oracle(spark, eng, orc, range(60), 5,
-                     T0 + timedelta(seconds=5))
+    _round_vs_oracle(spark, eng, orc, range(60), 3,
+                     T0 + timedelta(seconds=3))
     assert _seen_matches(eng, orc)

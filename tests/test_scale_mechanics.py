@@ -151,6 +151,56 @@ def test_bloom_n_keys_counts_keys_not_refetches(spark, tmp_path):
     assert eng.bloom.n_keys == eng.seen().count()
 
 
+def test_bloom_marker_is_backend_scoped(spark, tmp_path):
+    """The seen_snapshot marker names the filter it validates, and only
+    a "<sid>\ndriver" marker vouches for bloom.npz. An older engine
+    could promote a warehouse to a table-backed filter, leaving a stale
+    bloom.npz beside a "<sid>\ntable" marker that names the CURRENT
+    seen snapshot; loading that bloom.npz would read the keys it lacks
+    as definite-new, skip the authoritative seen join and re-fetch them
+    early. Past the budget no filter is built and the foreign marker is
+    removed; under it the filter is rebuilt from seen."""
+    pages = pages_df(spark, 30, partitions=2)
+    marker = tmp_path / "wh" / "bloom" / "seen_snapshot"
+
+    def engine(**kw):
+        return CrawlEngine(
+            spark, str(tmp_path / "wh"), pages, None,
+            CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
+                        collect_lineage=False, bloom_buckets=4, **kw))
+
+    def seeds(n):
+        return spark.createDataFrame([(url_for(i), 0) for i in range(n)],
+                                     "url string, priority int")
+
+    eng = engine()
+    eng.run_round(seeds(10), 0, START)              # bloom.npz: 10 keys
+    assert marker.read_text().split()[1] == "driver"
+    # round 1 adds 10 keys the checkpoint never sees, then the older
+    # engine's table marker names the current snapshot
+    eng = engine(use_bloom=False)
+    eng.run_round(seeds(20), 1, START + timedelta(seconds=1))
+    marker.write_text(f"{eng.seen_table.current_snapshot_id()}\ntable")
+
+    off = engine(driver_bloom_max_keys=15)
+    assert off.bloom is None and not marker.exists()
+    assert "seen footer rows=20" in off.backend_choices["bloom"]["why"]
+    marker.write_text(f"{off.seen_table.current_snapshot_id()}\ntable")
+
+    eng = engine()
+    assert eng.bloom.n_keys == 20                   # rebuilt, not loaded
+    seen_before = {r.url for r in eng.seen().collect()}
+    assert len(seen_before) == 20
+    maybe, fresh = eng.bloom.split(eng.seen().select("url_hash"), spark)
+    assert maybe.count() == 20 and fresh.count() == 0
+    # 2 s later nothing seen is due: round 2 fetches only new URLs
+    eng.run_round(seeds(25), 2, START + timedelta(seconds=2))
+    got = {r.url_canon for r in eng.articles_table.read()
+           .filter("round = 2").select("url_canon").collect()}
+    assert got and not got & seen_before
+    assert marker.read_text().split()[1] == "driver"
+
+
 def test_politeness_two_phase_equals_exact(spark):
     """The salted pre-rank cut must be bit-identical to the plain
     per-host window: a row's rank within any (host, salt) subset never
