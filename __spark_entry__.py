@@ -55,8 +55,7 @@ def _crawl_articles(spark: SparkSession, sf_dir: str) -> DataFrame:
     _TEMP_WAREHOUSES.append(wh)
     eng = CrawlEngine(
         spark, wh, pages, robots=None,
-        cfg=CrawlConfig(refetch=RefetchConfig(), num_partitions=8,
-                        collect_lineage=False),
+        cfg=CrawlConfig(refetch=RefetchConfig(), num_partitions=8),
     )
     eng.run_round(seeds, 0, datetime(2017, 4, 1, tzinfo=timezone.utc))
     return eng.articles_table.read()

@@ -127,8 +127,7 @@ def main() -> None:
     eng = CrawlEngine(
         spark, wh, pages, robots=None,
         cfg=CrawlConfig(refetch=RefetchConfig(maxfetches=max(8, n_rounds + 1)),
-                        num_partitions=max(CPUS, 8),
-                        collect_lineage=False, use_bloom=True),
+                        num_partitions=max(CPUS, 8)),
     )
     start = datetime(2017, 4, 1, tzinfo=timezone.utc)
     t0 = time.monotonic()
@@ -181,8 +180,7 @@ def main() -> None:
             cfg=CrawlConfig(
                 refetch=RefetchConfig(maxfetches=mor_rounds + 1,
                                       refetchsecs=3600),
-                num_partitions=max(CPUS, 8), collect_lineage=False,
-                use_bloom=True),
+                num_partitions=max(CPUS, 8)),
         )
         for r in range(mor_rounds):
             perf: dict = {}

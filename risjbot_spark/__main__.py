@@ -49,11 +49,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="shuffle/round partition count; default: the "
                         "session's spark.sql.shuffle.partitions (so "
                         "spark-submit --conf wins), else 32")
-    c.add_argument("--robots-scale-path", action="store_true",
-                   default=None,
-                   help="force robots rules/budgets into DataFrames "
-                        "joined on host instead of the broadcast dict; "
-                        "default: auto by host count")
     c.add_argument("--no-broadcast-frontier", action="store_true",
                    default=None,
                    help="force a shuffle-join fetch instead of "
@@ -358,7 +353,6 @@ def main(argv=None, spark=None) -> int:
         link_rank=args.link_rank,
         link_rank_every=args.link_rank_every,
         link_rank_iterations=args.link_rank_iters,
-        robots_scale_path=args.robots_scale_path,
         broadcast_frontier=(None if args.no_broadcast_frontier is None
                             else not args.no_broadcast_frontier),
         comments_host=args.comments_host,

@@ -95,17 +95,15 @@ class CrawlConfig:
     round_seconds: int = 3600            # politeness budget horizon
     num_partitions: int = 32
     salt: int = 0                 # >0 → salted-host fetch layout (HTTP mode)
-    # Scale-backend selection (broadcast_frontier, robots_scale_path):
-    # each accepts an explicit value as an override, but the DEFAULT is
-    # auto — the engine picks the 100×-safe backend from observed scale
-    # (frontier rows vs a broadcast budget, robots host count) and
-    # records each choice + the evidence in `engine.backend_choices`
-    # (the seen pre-filter below records its on/off choice there too).
-    # A 10^10-frontier run that keeps the defaults therefore gets the
-    # SMJ fetch / DataFrame robots path and no driver bitmaps WITHOUT
-    # asking; the sandbox-scale defaults resolve to the broadcast/driver
-    # fast paths. (r3 verdict item #3: the manual flags were the last
-    # way to OOM the driver by default.)
+    # Scale backends are chosen from observed scale — frontier rows vs
+    # broadcast_frontier_max_rows, robots host count vs
+    # robots_scale_hosts, seen keys vs driver_bloom_max_keys — and each
+    # choice + its evidence lands in `engine.backend_choices`. A
+    # 10^10-frontier run therefore gets the SMJ fetch / DataFrame robots
+    # path and no driver bitmaps WITHOUT asking; sandbox scale resolves
+    # to the broadcast/dict/driver fast paths. Only broadcast_frontier
+    # takes an explicit override: round 0 has no frontier evidence, so
+    # a seed list already past the budget needs broadcast_frontier=False.
     broadcast_frontier: bool | None = None   # None → auto per round
     # Seen pre-filter in front of the authoritative seen join (J1): a
     # driver PartitionedBloom, broadcast-probed; a false positive costs
@@ -122,7 +120,10 @@ class CrawlConfig:
     # beyond that the SMJ on the bucketed pages side wins — the shape
     # scale_path_10m benched).
     broadcast_frontier_max_rows: int = 1_000_000
-    # robots host count at which rules stop being a driver dict
+    # robots host count at which rules/budgets move from a driver dict
+    # (broadcast once, no join) into DataFrames joined on host —
+    # output-identical (parity-tested); needed when hosts outgrow driver
+    # memory (10^6-10^8 hosts — a 10^10-URL frontier)
     robots_scale_hosts: int = 200_000
     bloom_buckets: int = 64
     bloom_bits_per_bucket: int = 1 << 18  # adaptive: grows 4× when full
@@ -132,7 +133,6 @@ class CrawlConfig:
     # Generous default so time-travel resume stays available across
     # recent rounds; the checkpoint a rollback targets must still exist.
     expire_keep_last: int = 8
-    collect_lineage: bool = True
     # S6 link following: discovered outlinks feed the next round's frontier
     follow_links: bool = False
     link_allow: str = ""                 # regex; empty → allow all
@@ -154,13 +154,6 @@ class CrawlConfig:
     link_rank_iterations: int = 3
     link_rank_unit: int = 10_000         # rank mass per priority point
     link_rank_checkpoint_dir: str = ""   # reliable ckpt for rank iters
-    # robots/budget scale path: keep parsed rules in a DataFrame joined
-    # on host instead of a driver dict + plan literal. Output-identical
-    # (parity-tested); needed when hosts outgrow driver memory
-    # (10^6-10^8 hosts — a 10^10-URL frontier). None → auto by host
-    # count (robots_scale_hosts); the dict path broadcasts once and
-    # skips a join at sandbox host counts.
-    robots_scale_path: bool | None = None
     # S8 comment chase: when set (and a comments_api is injected into
     # the engine), pages on this host get their viafoura threads chased
     # before the articles commit — dropped/failed/ok semantics exactly
@@ -215,6 +208,7 @@ class CrawlEngine:
         self.cfg = cfg or CrawlConfig()
         self.fetcher = fetcher
         self._round_caches: list = []   # per-round persists, see run_round
+        self._round_obs: dict = {}      # per-round lineage Observations
         self._rules_bc = None           # robots dict Broadcast, built once
         # scale-backend auto-selection audit trail: each resolved flag
         # lands here as {"value", "auto", "why"} — tests and operators
@@ -271,25 +265,19 @@ class CrawlEngine:
         self.rules_df = None
         self.budgets_df = None
         self._max_budget: int | None = None
-        # robots backend: explicit override, else count hosts — the dict
-        # path collects EVERY host's rules to the driver (build_rules_map)
-        # so the count job is strictly cheaper than what it prevents
-        if self.cfg.robots_scale_path is not None:
-            robots_scale = self.cfg.robots_scale_path
-            self.backend_choices["robots_scale_path"] = {
-                "value": robots_scale, "auto": False, "why": "explicit"}
-        elif robots is None:
-            robots_scale = False
-            self.backend_choices["robots_scale_path"] = {
-                "value": False, "auto": True, "why": "no robots table"}
+        # robots backend by host count — the dict path collects EVERY
+        # host's rules to the driver (build_rules_map), so the count job
+        # is strictly cheaper than what it prevents
+        if robots is None:
+            robots_scale, why = False, "no robots table"
         else:
             n_hosts = robots.count()
             robots_scale = n_hosts >= self.cfg.robots_scale_hosts
-            self.backend_choices["robots_scale_path"] = {
-                "value": robots_scale, "auto": True,
-                "why": (f"{n_hosts} robots hosts vs threshold "
-                        f"{self.cfg.robots_scale_hosts}")}
-        if robots is not None and robots_scale:
+            why = (f"{n_hosts} robots hosts vs threshold "
+                   f"{self.cfg.robots_scale_hosts}")
+        self.backend_choices["robots_dataframe"] = {
+            "value": robots_scale, "auto": True, "why": why}
+        if robots_scale:
             # scale path: rules stay distributed — parse once per host
             # (persisted so the parse runs once per engine, not per
             # round), budgets join on host. The only driver-side scalar
@@ -466,11 +454,10 @@ class CrawlEngine:
     def _resolve_broadcast_frontier(self) -> bool:
         """Per-round broadcast-vs-SMJ choice for the fetch join when
         broadcast_frontier=None. Evidence costs no extra job: the
-        previous round's frontier size (the frontier_in Observation that
-        rode that round's commit — created for auto mode even with
-        lineage collection off); a first round with no evidence
-        broadcasts — the frontier is the seed list then, and seed lists
-        that already exceed the budget warrant an explicit override."""
+        previous round's frontier size (the frontier_in counter that rode
+        that round's commit); a first round with no evidence broadcasts —
+        the frontier is the seed list then, and seed lists that already
+        exceed the budget warrant an explicit override."""
         if self.cfg.broadcast_frontier is not None:
             self.backend_choices["broadcast_frontier"] = {
                 "value": self.cfg.broadcast_frontier, "auto": False,
@@ -580,16 +567,22 @@ class CrawlEngine:
         round_no: int,
         round_ts: datetime,
         with_order_audit: bool = False,
-        perf: dict | None = None,  # optional phase-timing sink (debug)
+        perf: dict | None = None,
     ) -> dict:
         """Execute one crawl round; commits seen+articles snapshots and
         returns the round's lineage dict.
+
+        `perf`, when given, receives each phase's wall seconds by label;
+        perfbench/layers.py `CRAWL_PHASES` reads its plan_build,
+        extract_and_commit_articles, seen_merge_commit and bloom_update
+        labels.
 
         Unpersist is exception-safe: every DataFrame the round persists
         registers in `_round_caches`, released in the finally — a round
         that throws mid-commit (transient executor loss) must not pin its
         html-bearing cached blocks for the engine's remaining lifetime."""
         self._round_caches: list = []
+        self._round_obs = {}
         try:
             return self._run_round(seeds, round_no, round_ts,
                                    with_order_audit, perf)
@@ -606,8 +599,8 @@ class CrawlEngine:
         seeds: DataFrame,
         round_no: int,
         round_ts: datetime,
-        with_order_audit: bool = False,
-        perf: dict | None = None,
+        with_order_audit: bool,
+        perf: dict | None,
     ) -> dict:
         import time as _time
 
@@ -623,15 +616,75 @@ class CrawlEngine:
         # predicate and stored last_fetch on a non-UTC machine
         if round_ts.tzinfo is None:
             round_ts = round_ts.replace(tzinfo=timezone.utc)
-        cfg = self.cfg
         # parts resolved ONCE per round: seen(), the J1 gate, and the
         # compaction merge all read the same split (or generic) view —
         # no duplicate manifest reads / per-delta plan rebuilding
         parts = self._seen_parts()
         seen = self._seen_from_parts(parts)
-        lineage: dict[str, int] = {}
 
-        # ---- frontier assembly: seeds ∪ trawl (J3a), canonical, deduped
+        fr = self._assemble_frontier(seeds, round_ts)
+        # keysrqd parity (refetchcontrol.py:231-232): the reference
+        # registers every key the spider REQUESTS — before its own gate,
+        # before robots, before download slots — and trim protects that
+        # set. Capture the requested keys here (pre-robots, pre-gate):
+        # protecting only post-gate `scheduled` keys would let trim
+        # delete a stale-but-still-seeded key's row, resetting its fetch
+        # history and re-fetching it from scratch every agelimit cycle
+        requested_keys = fr.select("url_hash")
+        eligible = self._observe(
+            self._seen_gate(self._robots_filter(fr), parts, seen, round_ts),
+            "after_seen_gate")
+        scheduled = self._observe(
+            self._politeness(eligible, with_order_audit), "scheduled")
+        items = self._extract(self._fetch(scheduled), round_no,
+                              with_order_audit)
+
+        # ---- commit articles FIRST, then derive the seen MERGE input from
+        # the committed files: extraction runs exactly once per round (the
+        # Iceberg pattern — MERGE reads the committed table, no recompute).
+        _mark("plan_build")
+        lineage = self._commit_articles(items, round_no, round_ts)
+        _mark("extract_and_commit_articles")
+        # next round's broadcast-frontier evidence, off a counter already
+        # paid for (the frontier_in Observation riding the commit)
+        self._last_frontier_rows = lineage["frontier_in"]
+        self.last_delta_dir = self.articles_table.manifest()["files"][-1]
+        fetched_keys = self.spark.read.parquet(self.last_delta_dir).select(
+            "url_hash", "url_canon", "host",
+            "previousfetches")  # column-pruned delta scan
+        self._commit_seen(parts, seen, fetched_keys, requested_keys,
+                          lineage, round_no, round_ts)
+        _mark("seen_merge_commit")
+        if self._update_bloom(fetched_keys, lineage, round_no):
+            _mark("bloom_update")
+            self.bloom.save(self._bloom_dir)  # checkpointed with the round
+            self._write_bloom_marker()        # ties bloom ↔ seen snapshot
+            _mark("bloom_save")
+        if self.cfg.link_rank:
+            self._update_link_graph(round_no)
+            _mark("link_rank")
+        return lineage
+
+    # ---- the round's layers, in plan order ---------------------------
+    def _observe(self, df: DataFrame, name: str, **metrics) -> DataFrame:
+        """Attach lineage counters to df as an Observation that rides the
+        round's commit action (eager .count()s re-ran the whole frontier
+        assembly per counter); each metric lands in the lineage under its
+        own name, default one row count named `name`. (Caveat: a lost
+        executor recomputing evicted cache blocks would re-fire them —
+        lineage counters are metrics, not state, and tolerate that.)"""
+        from pyspark.sql import Observation
+
+        metrics = metrics or {name: F.count(F.lit(1))}
+        obs = Observation(name)
+        self._round_obs[name] = (obs, list(metrics))
+        return df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
+
+    def _assemble_frontier(self, seeds: DataFrame,
+                           round_ts: datetime) -> DataFrame:
+        """Frontier assembly: seeds ∪ trawl (J3a), canonical, deduped to
+        one best-ordered row per key, link-rank merged, and cached."""
+        cfg = self.cfg
         fr = seeds
         if "priority" not in fr.columns:
             fr = fr.withColumn("priority", F.lit(0))
@@ -688,65 +741,24 @@ class CrawlEngine:
                 fr = prioritize_frontier(
                     fr, _ranks, url_col="url_canon",
                     unit=cfg.link_rank_unit)
-        # lineage counters: EVERY count attaches as an Observation metric
-        # riding the commit action (eager .count()s re-ran the whole
-        # frontier assembly per counter). frontier_in's observe node
-        # lives INSIDE the cached frontier plan: the bloom split's
-        # union-of-filters evaluates its upstream once per branch, but
-        # both branches read the cache, so the metrics fire exactly once
-        # at materialization. (Caveat: a lost executor recomputing
-        # evicted cache blocks would re-fire them — lineage counters are
-        # metrics, not state, and tolerate that.)
-        observations = {}
+        # cached because several consumers evaluate it: the bloom split's
+        # union-of-filters executes its upstream once per branch, and
+        # trim rounds read it again via trim_seen's requested-keys
+        # protection — without the cache the whole
+        # canonicalize+trawl+dedup assembly re-runs per consumer (worse:
+        # requested_keys would re-evaluate AFTER this round's articles
+        # commit, so a frontier that reads crawl state could protect a
+        # different key set than was actually requested). frontier_in
+        # observes INSIDE the cached plan: the cache materializes once
+        # (a consumer under the commit action), the CollectMetrics node
+        # fires with it, and later cache readers never re-fire it.
+        fr = self._observe(fr, "frontier_in").cache()
+        self._round_caches.append(fr)
+        return fr
 
-        def _observe(df, name):
-            if not cfg.collect_lineage:
-                return df
-            from pyspark.sql import Observation
-
-            obs = Observation(name)
-            observations[name] = obs
-            return df.observe(obs, F.count(F.lit(1)).alias("n"))
-
-        # cache the assembled frontier whenever something downstream will
-        # evaluate it more than once: the bloom split's union-of-filters
-        # executes its upstream once per branch, and trim rounds read it
-        # again via trim_seen's requested-keys protection — without the
-        # cache the whole canonicalize+trawl+dedup assembly re-runs per
-        # consumer (worse: requested_keys would re-evaluate AFTER this
-        # round's articles commit, so a frontier that reads crawl state
-        # could protect a different key set than was actually requested)
-        fr_cached = None
-        trim_round = (cfg.refetch.trimdb and cfg.trim_every > 0
-                      and round_no > 0 and round_no % cfg.trim_every == 0)
-        if (cfg.collect_lineage or trim_round
-                or (cfg.use_bloom and self.bloom is not None)
-                or cfg.broadcast_frontier is None):
-            if cfg.collect_lineage or cfg.broadcast_frontier is None:
-                # frontier_in rides the round's commit as an Observation
-                # INSIDE the cached plan: the cache materializes once (a
-                # consumer under the commit action), the CollectMetrics
-                # node fires with it, and later cache readers (bloom
-                # split branches, trim's requested_keys) never re-fire
-                # it — the r3 shape paid an eager count() job here
-                from pyspark.sql import Observation
-
-                obs_fr = Observation("frontier_in")
-                observations["frontier_in"] = obs_fr
-                fr = fr.observe(obs_fr, F.count(F.lit(1)).alias("n"))
-            fr_cached = fr.cache()
-            self._round_caches.append(fr_cached)
-            fr = fr_cached
-        # keysrqd parity (refetchcontrol.py:231-232): the reference
-        # registers every key the spider REQUESTS — before its own gate,
-        # before robots, before download slots — and trim protects that
-        # set. Capture the requested keys here (pre-robots, pre-gate):
-        # protecting only post-gate `scheduled` keys would let trim
-        # delete a stale-but-still-seeded key's row, resetting its fetch
-        # history and re-fetching it from scratch every agelimit cycle
-        requested_keys = fr.select("url_hash")
-
-        # ---- robots (F11/J5)
+    def _robots_filter(self, fr: DataFrame) -> DataFrame:
+        """Robots (F11/J5): the broadcast rules dict, or the rules
+        DataFrame joined on host past robots_scale_hosts."""
         if self.rules_map:
             if self._rules_bc is None:
                 # broadcast ONCE per engine, not per round: re-shipping
@@ -755,18 +767,21 @@ class CrawlEngine:
                 from .frontier.politeness import broadcast_rules
 
                 self._rules_bc = broadcast_rules(self.spark, self.rules_map)
-            fr = robots_filter(fr, self.rules_map, self.spark,
-                               bc=self._rules_bc)
-        elif self.rules_df is not None:
-            fr = robots_filter_df(fr, self.rules_df)
+            return robots_filter(fr, self.rules_map, self.spark,
+                                 bc=self._rules_bc)
+        if self.rules_df is not None:
+            return robots_filter_df(fr, self.rules_df)
+        return fr
 
-        # ---- seen-set gate: bloom pre-filter + authoritative join (J1).
-        # Definite-new URLs skip the join shuffle entirely; the filter is
-        # maintained incrementally across rounds (no per-round rebuild).
-        # With a bucketed compacted base the gate runs SPLIT (frontier ×
-        # base with no exchange on the base side + small resolved-delta
-        # join) instead of joining the union-resolved table; `parts` was
-        # resolved once at round start.
+    def _seen_gate(self, fr: DataFrame, parts, seen: DataFrame,
+                   round_ts: datetime) -> DataFrame:
+        """Seen-set gate: bloom pre-filter + authoritative join (J1).
+        Definite-new URLs skip the join shuffle entirely; the filter is
+        maintained incrementally across rounds (no per-round rebuild).
+        With a bucketed compacted base the gate runs SPLIT (frontier ×
+        base with no exchange on the base side + small resolved-delta
+        join) instead of joining the union-resolved table."""
+        cfg = self.cfg
         if parts is not None:
             from .frontier.state import seen_filter_split
 
@@ -781,104 +796,36 @@ class CrawlEngine:
             def gate(f):
                 return seen_filter(f, seen, cfg.refetch, round_ts)
 
-        if cfg.use_bloom and self.bloom is not None:
-            maybe, fresh = self.bloom.split(fr, self.spark)
-            gated = gate(maybe)
-            eligible = gated.unionByName(
-                fresh.withColumn("previousfetches", F.lit(0).cast("int"))
-            )
-        else:
-            eligible = gate(fr)
-        eligible = _observe(eligible, "after_seen_gate")
+        if self.bloom is None:
+            return gate(fr)
+        maybe, fresh = self.bloom.split(fr, self.spark)
+        return gate(maybe).unionByName(
+            fresh.withColumn("previousfetches", F.lit(0).cast("int")))
 
-        # ---- politeness (W1/W3) + deterministic order. Live-fetch mode
-        # rides crawl_delay on the budget join (one budgets_df join per
-        # round, not two keyed by the same normalized host)
+    def _politeness(self, eligible: DataFrame,
+                    with_order_audit: bool) -> DataFrame:
+        """Politeness (W1/W3) + deterministic order. Live-fetch mode
+        rides crawl_delay on the budget join (one budgets_df join per
+        round, not two keyed by the same normalized host)."""
         scheduled = politeness_schedule(
-            eligible, self.budgets, cfg.default_budget, self.spark,
+            eligible, self.budgets, self.cfg.default_budget, self.spark,
             budgets_df=self.budgets_df, max_budget=self._max_budget,
             keep_crawl_delay=(self.fetcher is not None
                               and self.budgets_df is not None),
         )
         if with_order_audit:
             scheduled = fetch_order_key(scheduled)
-        scheduled = _observe(scheduled, "scheduled")
+        return scheduled
 
-        # ---- fetch stage. Corpus-join mode (this harness): the per-round
-        # frontier (bounded by politeness budgets) broadcasts into the
-        # pages scan — pages NEVER shuffle (the 100 TB side stays put),
-        # and the join output inherits the scan's uniform partitioning,
-        # so extraction balances on file splits, not host skew. Left to
-        # itself AQE broadcast the PAGES (html!) side here. At frontier
-        # sizes beyond broadcast limits set broadcast_frontier=False →
-        # shuffled hash join (or pre-bucket both sides by url_canon).
+    def _fetch(self, scheduled: DataFrame) -> DataFrame:
+        """Fetch stage: paced HTTP fetch when a fetcher is injected, else
+        the corpus join; both end in the same columns plus the meta_json
+        the extraction UDF reads."""
         if self.fetcher is not None:
-            # paced-fetch mode: salted layout + in-task Crawl-delay pacing;
-            # non-2xx responses drop here (Scrapy's HttpError default —
-            # they never reach the spider, so no item and no seen upsert).
-            # Scale path: the per-row crawl_delay rides the politeness
-            # budget join (keep_crawl_delay above — Crawl-delay hosts
-            # only, small) instead of a second join or a host→delay
-            # dict shipped to every task.
-            fetched = (
-                fetch_stage(
-                    scheduled, self.fetcher, rules_map=self.rules_map,
-                    num_partitions=cfg.num_partitions, salt=cfg.salt or 8,
-                )
-                .filter((F.col("status") >= 200) & (F.col("status") < 300))
-                .drop("status")
-            )
-            if self.budgets_df is not None:
-                fetched = fetched.drop("crawl_delay")
-            # RFC-1123 Date header → timestamp; weekday prefix stripped
-            # ('EEE' is a format-only symbol — Spark's parser rejects it)
-            fetched = fetched.withColumn(
-                "warc_ts",
-                F.to_timestamp(
-                    F.substring_index("fetchtime_str", ", ", -1),
-                    "dd MMM yyyy HH:mm:ss 'GMT'"))
+            fetched = self._fetch_paced(scheduled)
         else:
-            bcast = self._resolve_broadcast_frontier()
-            sched_side = F.broadcast(scheduled) if bcast else scheduled
-            fetched = self.pages.join(
-                sched_side, self.pages.page_url == sched_side.url_canon,
-                "inner",
-            ).drop("page_url")
-            # one fetch per key per round: a Common-Crawl-style corpus
-            # can hold several rows for one canonical URL (snapshots over
-            # time; raw-URL variants collapsing under canonicalization),
-            # and the join would emit one article per copy. Keep a
-            # deterministic survivor — newest warc_ts, content hash as
-            # tiebreak (the reference fetches live: one response per
-            # request). The dedup shuffles the JOIN OUTPUT, O(round
-            # keys), never the 100 TB pages side — but the rows carry
-            # the html payload, so at full-corpus rounds this exchange
-            # is corpus-sized. An ingest that already guarantees ONE
-            # row per canonical URL (dedup at ingest into the bucketed
-            # table — what a production CC pipeline does) can declare
-            # it with pages_unique_per_url=True and skip the shuffle
-            # entirely; output-identical under the guarantee
-            # (parity-tested).
-            if not cfg.pages_unique_per_url:
-                others = [c for c in fetched.columns
-                          if c not in ("url_hash", "_ord")]
-                fetched = (
-                    fetched.withColumn(
-                        "_ord", F.struct(F.col("warc_ts"), F.md5("html")))
-                    .groupBy("url_hash")
-                    .agg(*[F.max_by(c, "_ord").alias(c) for c in others])
-                )
-            # corpus-join mode skips the salted shuffle unless asked
-            # (salt>0) — it would only move the html payload
-            if cfg.salt > 0:
-                fetched = salted_repartition(
-                    fetched, cfg.num_partitions, cfg.salt)
-            # HTTP Date header analogue: the page's warc_ts (fetch time)
-            fetched = fetched.withColumn(
-                "fetchtime_str",
-                F.date_format("warc_ts", HTTP_DATE_FMT),
-            )
-        fetched = fetched.withColumn(
+            fetched = self._fetch_corpus(scheduled)
+        return fetched.withColumn(
             "meta_json",
             F.to_json(
                 F.struct(F.col("url_canon").alias("originalurl"),
@@ -886,29 +833,105 @@ class CrawlEngine:
             ),
         )
 
-        # ---- S8 gate decided up front: the chase needs the bootstrap
-        # uuid — a failed bootstrap crawls WITHOUT comment collection
+    def _fetch_paced(self, scheduled: DataFrame) -> DataFrame:
+        """Paced-fetch mode: salted layout + in-task Crawl-delay pacing;
+        non-2xx responses drop here (Scrapy's HttpError default — they
+        never reach the spider, so no item and no seen upsert). Scale
+        path: the per-row crawl_delay rides the politeness budget join
+        (keep_crawl_delay — Crawl-delay hosts only, small) instead of a
+        second join or a host→delay dict shipped to every task."""
+        cfg = self.cfg
+        fetched = (
+            fetch_stage(
+                scheduled, self.fetcher, rules_map=self.rules_map,
+                num_partitions=cfg.num_partitions, salt=cfg.salt or 8,
+            )
+            .filter((F.col("status") >= 200) & (F.col("status") < 300))
+            .drop("status")
+        )
+        if self.budgets_df is not None:
+            fetched = fetched.drop("crawl_delay")
+        # RFC-1123 Date header → timestamp; weekday prefix stripped
+        # ('EEE' is a format-only symbol — Spark's parser rejects it)
+        return fetched.withColumn(
+            "warc_ts",
+            F.to_timestamp(
+                F.substring_index("fetchtime_str", ", ", -1),
+                "dd MMM yyyy HH:mm:ss 'GMT'"))
+
+    def _fetch_corpus(self, scheduled: DataFrame) -> DataFrame:
+        """Corpus-join mode: the per-round frontier (bounded by
+        politeness budgets) broadcasts into the pages scan — pages NEVER
+        shuffle (the 100 TB side stays put), and the join output inherits
+        the scan's uniform partitioning, so extraction balances on file
+        splits, not host skew. Left to itself AQE broadcast the PAGES
+        (html!) side here. Past broadcast_frontier_max_rows the frontier
+        side shuffles instead (SMJ against the bucketed pages side)."""
+        cfg = self.cfg
+        bcast = self._resolve_broadcast_frontier()
+        sched_side = F.broadcast(scheduled) if bcast else scheduled
+        fetched = self.pages.join(
+            sched_side, self.pages.page_url == sched_side.url_canon,
+            "inner",
+        ).drop("page_url")
+        # one fetch per key per round: a Common-Crawl-style corpus can
+        # hold several rows for one canonical URL (snapshots over time;
+        # raw-URL variants collapsing under canonicalization), and the
+        # join would emit one article per copy. Keep a deterministic
+        # survivor — newest warc_ts, content hash as tiebreak (the
+        # reference fetches live: one response per request). The dedup
+        # shuffles the JOIN OUTPUT, O(round keys), never the 100 TB pages
+        # side — but the rows carry the html payload, so at full-corpus
+        # rounds this exchange is corpus-sized. An ingest that already
+        # guarantees ONE row per canonical URL (dedup at ingest into the
+        # bucketed table — what a production CC pipeline does) can
+        # declare it with pages_unique_per_url=True and skip the shuffle
+        # entirely; output-identical under the guarantee (parity-tested).
+        if not cfg.pages_unique_per_url:
+            others = [c for c in fetched.columns
+                      if c not in ("url_hash", "_ord")]
+            fetched = (
+                fetched.withColumn(
+                    "_ord", F.struct(F.col("warc_ts"), F.md5("html")))
+                .groupBy("url_hash")
+                .agg(*[F.max_by(c, "_ord").alias(c) for c in others])
+            )
+        # corpus-join mode skips the salted shuffle unless asked (salt>0)
+        # — it would only move the html payload
+        if cfg.salt > 0:
+            fetched = salted_repartition(
+                fetched, cfg.num_partitions, cfg.salt)
+        # HTTP Date header analogue: the page's warc_ts (fetch time)
+        return fetched.withColumn(
+            "fetchtime_str",
+            F.date_format("warc_ts", HTTP_DATE_FMT),
+        )
+
+    def _extract(self, fetched: DataFrame, round_no: int,
+                 with_order_audit: bool) -> DataFrame:
+        """Extraction (one vectorized UDF: fake404/prune/batteries/NLP)
+        → the items the articles commit writes, with the four article
+        counters, the S8 comment chase, and the first-fetch counter."""
+        cfg = self.cfg
+        # S8 gate decided up front: the chase needs the bootstrap uuid —
+        # a failed bootstrap crawls WITHOUT comment collection
         # (liverpoolecho.py:42-47), it must not stamp every host article
         # with a false 'No comments section' note via chase_one's
         # uuid-missing short-circuit
         chase_active = (self.comments_api is not None
                         and bool(cfg.comments_host)
                         and self._comments_site_uuid is not None)
-        fetched_cached = None
         if chase_active:
             # the chase adds a second consumer of the fetch stage
             # (extraction + chase), and the eager chase materialization
-            # below is an extra action on top of the commit. Cache the
-            # stage so each URL is fetched (live mode: an HTTP side
-            # effect) or joined (corpus mode: the pages join + dedup
-            # shuffle) exactly once per round, whichever branch
-            # materializes first (MEMORY_AND_DISK — spills, never
-            # recomputes)
-            fetched_cached = fetched.persist()
-            self._round_caches.append(fetched_cached)
-            fetched = fetched_cached
+            # is an extra action on top of the commit. Cache the stage so
+            # each URL is fetched (live mode: an HTTP side effect) or
+            # joined (corpus mode: the pages join + dedup shuffle)
+            # exactly once per round, whichever branch materializes
+            # first (MEMORY_AND_DISK — spills, never recomputes)
+            fetched = fetched.persist()
+            self._round_caches.append(fetched)
 
-        # ---- extraction (one vectorized UDF: fake404/prune/batteries/NLP)
         extracted = fetched.withColumn(
             "article",
             extract_article_udf(
@@ -921,203 +944,127 @@ class CrawlEngine:
             "url_canon", "url_hash", "host", "priority", "discovered_ts",
             "warc_ts", *audit_cols, "article.*",
         ).withColumn("round", F.lit(round_no))
+        # the four article counters RIDE the commit write as one
+        # Observation — the write is the only consumer, so no cache and
+        # no extra job. no_bodytext is F9 CheckContent
+        # (pipelines/checkcontent.py:6-12): items without bodytext
+        # unless the URL is picture/video/gallery
+        not404 = F.col("status") != "fake404"
+        articles = self._observe(
+            articles, "article_counts",
+            fetched=F.count(F.lit(1)),
+            extracted=F.sum((F.col("status") == "ok").cast("long")),
+            fake404_dropped=F.sum((~not404).cast("long")),
+            no_bodytext=F.sum(
+                (not404 & F.col("bodytext").isNull()
+                 & ~F.col("url_canon").rlike("picture|video|gallery"))
+                .cast("long")),
+        )
         # Items = everything that produced a NewsItem. fake404 responses
         # raise before the item path in the reference, so they neither
         # export nor upsert the seen DB (fake404.py:48-58 +
         # refetchcontrol.py:281-316) — they will be re-tried next round.
-        items = articles.filter(F.col("status") != "fake404")
-        art_obs = None
-        if cfg.collect_lineage:
-            # the four article counters RIDE the commit write as one
-            # Observation (resolved by the commit's lineage_fn) — the r3
-            # shape cached the whole html-bearing articles table just to
-            # run a separate agg job over it; now the write is the only
-            # consumer, so no cache and no extra job. no_bodytext is F9
-            # CheckContent (pipelines/checkcontent.py:6-12): items
-            # without bodytext unless the URL is picture/video/gallery
-            from pyspark.sql import Observation
-
-            not404 = F.col("status") != "fake404"
-            art_obs = Observation("article_counts")
-            articles = articles.observe(
-                art_obs,
-                F.count(F.lit(1)).alias("fetched"),
-                F.sum((F.col("status") == "ok").cast("long"))
-                .alias("extracted"),
-                F.sum((~not404).cast("long")).alias("fake404_dropped"),
-                F.sum((not404 & F.col("bodytext").isNull()
-                       & ~F.col("url_canon").rlike("picture|video|gallery"))
-                      .cast("long")).alias("no_bodytext"),
-            )
-            observations["article_counts"] = art_obs
-            items = articles.filter(F.col("status") != "fake404")
-
-        # ---- S8 comment chase (host-gated): runs BEFORE the commit, as
-        # the reference chases inline before yielding the item — so a
-        # 'dropped' chase (bad contentcontainer payload) removes the
-        # article from the round exactly like the reference's
-        # StopIteration. The chase re-derives the host subset from
-        # `fetched` (it needs the raw html); a single-host subset of the
-        # round is small, and the API parallelism is bounded
-        # (comments.chase_comments politeness notes).
-        chased_cached = None
+        items = articles.filter(not404)
         if chase_active:
-            from .comments import chase_comments, join_comments
+            items = self._chase_comments(fetched, items)
+        # first fetches among exactly the rows the commit writes (after
+        # the fake404 drop and the chase's drops): the bloom update's
+        # budget check reads it BEFORE adding any key
+        return self._observe(
+            items, "first_fetched",
+            first_fetched=F.sum(
+                (F.col("previousfetches") == 0).cast("long")))
 
-            chased = chase_comments(
-                fetched.select("url_canon", "host", "html", "warc_ts"),
-                self.comments_api, self._comments_site_uuid,
-                host_filter=cfg.comments_host,
-                limit=cfg.comments_limit,
-                max_parallelism=cfg.comments_parallelism,
-                delay_secs=cfg.comments_delay_secs,
-            )
-            # the chase issues live API requests — it must run EXACTLY
-            # once per round. items is evaluated by up to two actions
-            # (the per-partition lineage collect and the commit), so
-            # persist+count materializes the chase here and both actions
-            # read the cached rows instead of re-issuing every
-            # container/comments GET
-            chased_cached = chased.persist()
-            self._round_caches.append(chased_cached)
-            chased_cached.count()
-            items = join_comments(items, chased_cached)
+    def _chase_comments(self, fetched: DataFrame,
+                        items: DataFrame) -> DataFrame:
+        """S8 comment chase (host-gated): runs BEFORE the commit, as the
+        reference chases inline before yielding the item — so a
+        'dropped' chase (bad contentcontainer payload) removes the
+        article from the round exactly like the reference's
+        StopIteration. The chase re-derives the host subset from
+        `fetched` (it needs the raw html); a single-host subset of the
+        round is small, and the API parallelism is bounded
+        (comments.chase_comments politeness notes)."""
+        from .comments import chase_comments, join_comments
 
-        # ---- commit articles FIRST, then derive the seen MERGE input from
-        # the committed files: extraction runs exactly once per round (the
-        # Iceberg pattern — MERGE reads the committed table, no recompute).
-        _mark("plan_build")
+        cfg = self.cfg
+        chased = chase_comments(
+            fetched.select("url_canon", "host", "html", "warc_ts"),
+            self.comments_api, self._comments_site_uuid,
+            host_filter=cfg.comments_host,
+            limit=cfg.comments_limit,
+            max_parallelism=cfg.comments_parallelism,
+            delay_secs=cfg.comments_delay_secs,
+        )
+        # the chase issues live API requests — it must run EXACTLY once
+        # per round, so persist+count materializes it here and the
+        # commit reads the cached rows instead of re-issuing every
+        # container/comments GET
+        chased = chased.persist()
+        self._round_caches.append(chased)
+        chased.count()
+        return join_comments(items, chased)
 
-        def _resolve_lineage(data_dir: str) -> dict:
-            """Runs inside commit(), after the data write and before the
-            manifest write: every Observation riding the round's plan is
-            resolvable now, and the freshly written files' parquet
-            footers give exact per-write-task item counts driver-side —
-            collect_lineage=True adds ZERO extra Spark jobs per round
-            (the r3 shape paid three: an eager frontier count, an
-            article-counters agg, and a per-partition groupBy+collect)."""
-            if not cfg.collect_lineage:
-                return {}
-            for name, obs in observations.items():
-                try:
-                    row = obs.get      # dict of this obs's metric values
-                except Exception:
-                    # AQE's empty-stage propagation can replace an
-                    # all-empty runtime subtree with an EmptyRelation,
-                    # eliminating its CollectMetrics node — obs.get then
-                    # yields an empty row (e.g. a round whose seen gate
-                    # drops every URL). The write action DID execute the
-                    # plan, so the faithful count for the vanished node
-                    # is 0.
-                    row = {}
-                if name == "article_counts":
-                    for k in ("fetched", "extracted", "fake404_dropped",
-                              "no_bodytext"):
-                        lineage[k] = int(row.get(k) or 0)
-                else:
-                    lineage[name] = int(row.get("n") or 0)
-            lineage["per_partition_extracted"] = _footer_row_counts(
-                data_dir)
-            return dict(lineage)
+    def _commit_articles(self, items: DataFrame, round_no: int,
+                         round_ts: datetime) -> dict:
+        """Append the round's items; returns its lineage counters.
+        round_ts rides the manifest: the articles commit doubles as the
+        round's write-ahead record, and crash recovery (see
+        _recover_incomplete_round) replays the seen MERGE from it."""
+        lineage: dict = {}
 
-        # round_ts rides the manifest: the articles commit doubles as the
-        # round's write-ahead record, and crash recovery (see
-        # _recover_incomplete_round) replays the seen MERGE from it
+        def resolve(data_dir: str) -> dict:
+            lineage.update(self._resolve_lineage(data_dir))
+            return lineage
+
         self.articles_table.commit(
             items, lineage={"round": round_no,
                             "round_ts": round_ts.isoformat()},
-            lineage_fn=_resolve_lineage,
+            lineage_fn=resolve,
             mode="append",
         )
-        _mark("extract_and_commit_articles")
-        # next round's broadcast-frontier evidence, off counters already
-        # paid for (the frontier_in Observation riding the commit)
-        est = lineage.get("frontier_in", lineage.get("after_seen_gate"))
-        if est is None and "frontier_in" in observations:
-            # collect_lineage off but broadcast_frontier auto: the
-            # observation was still attached (free) — read it directly
+        return lineage
+
+    def _resolve_lineage(self, data_dir: str) -> dict:
+        """The round's counters. Runs inside the articles commit, after
+        the data write and before the manifest write: every Observation
+        riding the round's plan is resolvable now, and the freshly
+        written files' parquet footers give exact per-write-task item
+        counts driver-side — so the counters add ZERO Spark jobs per
+        round (tests/test_lineage_jobs.py pins the count)."""
+        out: dict = {}
+        for obs, keys in self._round_obs.values():
             try:
-                est = observations["frontier_in"].get.get("n")
+                row = obs.get      # dict of this obs's metric values
             except Exception:
-                est = None
-        if est is not None:
-            self._last_frontier_rows = int(est)
-        # fr_cached stays persisted until after the seen commit: trim
-        # rounds read it again via `requested_keys`; it is unpersisted
-        # at the end of the round
-        delta_dir = self.articles_table.manifest()["files"][-1]
-        self.last_delta_dir = delta_dir
-        fetched_keys = self.spark.read.parquet(delta_dir).select(
-            "url_hash", "url_canon", "host",
-            "previousfetches")  # column-pruned delta scan
+                # AQE's empty-stage propagation can replace an all-empty
+                # runtime subtree with an EmptyRelation, eliminating its
+                # CollectMetrics node — obs.get then yields an empty row
+                # (e.g. a round whose seen gate drops every URL). The
+                # write action DID execute the plan, so the faithful
+                # count for the vanished node is 0.
+                row = {}
+            for k in keys:
+                out[k] = int(row.get(k) or 0)
+        out["per_partition_extracted"] = _footer_row_counts(data_dir)
+        return out
 
-        # ---- seen MERGE (J2): merge-on-read. Normal rounds append only
-        # this round's delta — the write is O(round keys), never
-        # O(table) (at 10^10 keys a full rewrite per round is the
-        # dominant cost; Iceberg MoR has the same shape). Trim rounds
-        # (J3b) materialize full state anyway, so they double as the
-        # compaction: one replace-commit folds base + deltas back into
-        # a single snapshot.
-        # trim_every=0 → never compact (like expire_keep_last=0's
-        # keep-forever), not a ZeroDivisionError
-        compact = (cfg.trim_every > 0 and round_no > 0
-                   and round_no % cfg.trim_every == 0)
-        if compact:
-            if parts is not None:
-                # split-form MERGE: this round's resolved updates are
-                # strictly newer than every pre-round row, so the
-                # compacted state is updates ∪ (seen ∖ update-keys) —
-                # skips re-shuffling the full table through the groupBy
-                # (the bucketed WRITE below clusters it once anyway).
-                # Row-identical to merge_seen (parity-locked).
-                from .frontier.state import resolve_split
-
-                new_seen = resolve_split(
-                    seen, seen_updates(fetched_keys, round_ts))
-            else:
-                new_seen = merge_seen(seen, fetched_keys, round_ts)
-            if cfg.refetch.trimdb:
-                # protect REQUESTED keys, as the reference's keysrqd does
-                # (refetchcontrol.py:150-193, updated at :231-232 BEFORE
-                # the gate decision) — the protection set is the
-                # PRE-GATE frontier, not post-gate `scheduled`: a
-                # stale-but-still-seeded key is gate-dropped every round
-                # (age > agelimit), and protecting only scheduled keys
-                # would trim its row, reset its fetch history, and
-                # re-fetch it from scratch each agelimit cycle — the
-                # reference keeps such keys alive and never re-fetches.
-                # `requested_keys` reads the cached frontier (trim
-                # rounds always cache it — see trim_round above): no
-                # pipeline recompute, and the protected set is exactly
-                # what this round requested even if the frontier
-                # assembly reads state the round has since committed.
-                new_seen = trim_seen(
-                    new_seen, requested_keys, cfg.refetch, round_ts)
-            # base partitions by last-fetch day (the pruned trawl skips
-            # day directories outside its window — SURVEY §4) and
-            # clusters by url_hash so next rounds' gate joins and
-            # resolves read it exchange-free; keys ≤ footer rows of the
-            # dirs folded + this round's delta (no Spark job)
-            est = self._seen_rows_estimate(delta_dir)
-            self.seen_table.commit(
-                new_seen.withColumn("lf_day", F.to_date("last_fetch")),
-                lineage={"round": round_no,
-                         "round_ts": round_ts.isoformat(),
-                         "seen_format": self.SEEN_FORMAT,
-                         "counters": lineage, "compacted": True},
-                mode="replace",
-                partition_by=["lf_day"],
-                bucket_by="url_hash",
-                n_buckets=seen_bucket_count(est),
-            )
-            if cfg.expire_keep_last > 0:
-                # maintenance rides the compaction commit: pre-compaction
-                # delta snapshots age out once K newer ones exist
-                self.seen_table.expire_snapshots(cfg.expire_keep_last)
-        else:
+    def _commit_seen(self, parts, seen: DataFrame, fetched_keys: DataFrame,
+                     requested_keys: DataFrame, lineage: dict,
+                     round_no: int, round_ts: datetime) -> None:
+        """Seen MERGE (J2), merge-on-read. Normal rounds append only this
+        round's delta — the write is O(round keys), never O(table) (at
+        10^10 keys a full rewrite per round is the dominant cost; Iceberg
+        MoR has the same shape). Trim rounds (J3b) materialize full state
+        anyway, so they double as the compaction: one replace-commit
+        folds base + deltas back into a single snapshot. trim_every=0 →
+        never compact (like expire_keep_last=0's keep-forever)."""
+        cfg = self.cfg
+        rts_iso = round_ts.isoformat()
+        if not (cfg.trim_every > 0 and round_no > 0
+                and round_no % cfg.trim_every == 0):
             # delta stats: every row's last_fetch IS round_ts, so the
             # manifest range enables whole-delta skips on pruned reads
-            rts_iso = round_ts.isoformat()
             self.seen_table.commit(
                 seen_updates(fetched_keys, round_ts),
                 lineage={"round": round_no, "round_ts": rts_iso,
@@ -1126,38 +1073,80 @@ class CrawlEngine:
                 mode="append",
                 stats={"last_fetch_range": [rts_iso, rts_iso]},
             )
-        _mark("seen_merge_commit")
-        if self.bloom is not None:
-            # incremental, this round's FIRST-fetch keys only; small
-            # rounds update on the driver (no extra Spark job). A
-            # refetched key is already in the filter — the filter ⊇ seen
-            # at round start (init rebuilds on a stale marker, recovery
-            # commits before bloom setup) — so adding it again would
-            # only inflate n_keys, which drives overfull() growth and the
-            # driver-budget check below.
-            self.bloom.add_df(
-                fetched_keys.filter(F.col("previousfetches") == 0),
-                driver_threshold=2_000_000)
-            n = self.bloom.n_keys
-            # a brand-new big crawl starts with an empty seen table and
-            # can cross the budget inside round 0: stop growing
-            # driver-resident bitmaps now, not at the next construction
-            if self._bloom_fits(n, f"n_keys={n} after round {round_no}"):
-                if self.bloom.overfull():
-                    # adaptive growth: rebuild 4× larger from the seen
-                    # snapshot (one scan, amortized over the rounds the
-                    # quadrupling buys); keeps the per-round broadcast +
-                    # checkpoint sized to the table, not worst-case
-                    self.bloom = PartitionedBloom.from_seen(
-                        self.seen(), self.bloom.n_buckets, self.bloom.m * 4)
-                _mark("bloom_update")
-                self.bloom.save(self._bloom_dir)  # checkpointed with the round
-                self._write_bloom_marker()        # ties bloom ↔ seen snapshot
-                _mark("bloom_save")
-        if cfg.link_rank:
-            self._update_link_graph(round_no)
-            _mark("link_rank")
-        return lineage
+            return
+        if parts is not None:
+            # split-form MERGE: this round's resolved updates are strictly
+            # newer than every pre-round row, so the compacted state is
+            # updates ∪ (seen ∖ update-keys) — skips re-shuffling the full
+            # table through the groupBy (the bucketed WRITE below
+            # clusters it once anyway). Row-identical to merge_seen
+            # (parity-locked).
+            from .frontier.state import resolve_split
+
+            new_seen = resolve_split(seen, seen_updates(fetched_keys, round_ts))
+        else:
+            new_seen = merge_seen(seen, fetched_keys, round_ts)
+        if cfg.refetch.trimdb:
+            # protect the PRE-GATE requested keys, as the reference's
+            # keysrqd does (refetchcontrol.py:150-193; see _run_round).
+            # `requested_keys` reads the cached frontier: no pipeline
+            # recompute, and the protected set is exactly what this
+            # round requested even if the frontier assembly reads state
+            # the round has since committed.
+            new_seen = trim_seen(new_seen, requested_keys, cfg.refetch,
+                                 round_ts)
+        # base partitions by last-fetch day (the pruned trawl skips day
+        # directories outside its window — SURVEY §4) and clusters by
+        # url_hash so next rounds' gate joins and resolves read it
+        # exchange-free; keys ≤ footer rows of the dirs folded + this
+        # round's delta (no Spark job)
+        est = self._seen_rows_estimate(self.last_delta_dir)
+        self.seen_table.commit(
+            new_seen.withColumn("lf_day", F.to_date("last_fetch")),
+            lineage={"round": round_no, "round_ts": rts_iso,
+                     "seen_format": self.SEEN_FORMAT,
+                     "counters": lineage, "compacted": True},
+            mode="replace",
+            partition_by=["lf_day"],
+            bucket_by="url_hash",
+            n_buckets=seen_bucket_count(est),
+        )
+        if cfg.expire_keep_last > 0:
+            # maintenance rides the compaction commit: pre-compaction
+            # delta snapshots age out once K newer ones exist
+            self.seen_table.expire_snapshots(cfg.expire_keep_last)
+
+    def _update_bloom(self, fetched_keys: DataFrame, lineage: dict,
+                      round_no: int) -> bool:
+        """Add this round's FIRST-fetch keys to the driver bloom; True
+        when a filter remains to checkpoint. A refetched key is already
+        in the filter — the filter ⊇ seen at round start (init rebuilds
+        on a stale marker, recovery commits before bloom setup) — so
+        adding it again would only inflate n_keys, which drives
+        overfull() growth and the driver-budget check."""
+        if self.bloom is None:
+            return False
+        # the budget check runs BEFORE the add, off the first_fetched
+        # counter that rode the commit: a brand-new big crawl starts
+        # with an empty seen table and can cross the budget inside round
+        # 0, and adding first would pull up to 2M keys to the driver (or
+        # run a distributed bitmap build) only to drop the filter. An
+        # over-count can only drop the filter early, never lose a key.
+        n = self.bloom.n_keys + lineage["first_fetched"]
+        if not self._bloom_fits(n, f"n_keys={n} after round {round_no}"):
+            return False
+        # small rounds update on the driver (no extra Spark job)
+        self.bloom.add_df(
+            fetched_keys.filter(F.col("previousfetches") == 0),
+            driver_threshold=2_000_000)
+        if self.bloom.overfull():
+            # adaptive growth: rebuild 4× larger from the seen snapshot
+            # (one scan, amortized over the rounds the quadrupling buys);
+            # keeps the per-round broadcast + checkpoint sized to the
+            # table, not worst-case
+            self.bloom = PartitionedBloom.from_seen(
+                self.seen(), self.bloom.n_buckets, self.bloom.m * 4)
+        return True
 
     # ---- W1+ link-graph state (config link_rank) ---------------------
     def _load_link_ranks(self) -> DataFrame | None:

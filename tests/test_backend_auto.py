@@ -2,11 +2,12 @@
 "auto" config the engine must pick the 100×-safe backend from OBSERVED
 scale — seen key count vs the driver bloom budget, robots host count,
 frontier rows vs the broadcast budget — without the caller asking,
-record the choice + evidence in `engine.backend_choices`, and keep the
-explicit flags as overrides. At sandbox scale the autos must resolve to
-the same fast paths the pre-auto defaults hard-coded (driver bloom,
-broadcast fetch, dict robots), so every existing parity test doubles as
-an auto-resolution regression."""
+record the choice + evidence in `engine.backend_choices`. Only
+broadcast_frontier keeps an explicit override, because round 0 has no
+frontier evidence. At sandbox scale the autos must resolve to the same
+fast paths the pre-auto defaults hard-coded (driver bloom, broadcast
+fetch, dict robots), so every existing parity test doubles as an
+auto-resolution regression."""
 
 from datetime import datetime, timedelta, timezone
 
@@ -27,7 +28,6 @@ def _engine(spark, tmp_path, pages, name="wh", robots=None, **cfg_kw):
     cfg_kw.setdefault("refetch", RefetchConfig(maxfetches=3,
                                                refetchsecs=3600))
     cfg_kw.setdefault("num_partitions", 4)
-    cfg_kw.setdefault("collect_lineage", True)
     cfg_kw.setdefault("bloom_buckets", 8)
     return CrawlEngine(spark, str(tmp_path / name), pages, robots,
                        CrawlConfig(**cfg_kw))
@@ -52,8 +52,8 @@ def test_small_scale_resolves_to_fast_paths(spark, tmp_path):
         "value": True, "auto": True,
         "why": "n_keys=30 after round 0 vs driver budget 20000000 keys"}
     assert isinstance(eng.bloom, PartitionedBloom)
-    assert ch["robots_scale_path"]["value"] is False
-    assert ch["robots_scale_path"]["auto"] is True
+    assert ch["robots_dataframe"]["value"] is False
+    assert ch["robots_dataframe"]["auto"] is True
     assert ch["broadcast_frontier"]["value"] is True
     assert ch["broadcast_frontier"]["auto"] is True
 
@@ -123,14 +123,9 @@ def test_robots_flips_to_dataframe_beyond_host_budget(spark, tmp_path):
     eng = _engine(spark, tmp_path, pages, robots=robots,
                   robots_scale_hosts=10)
     assert eng.rules_df is not None and not eng.rules_map
-    ch = eng.backend_choices["robots_scale_path"]
+    ch = eng.backend_choices["robots_dataframe"]
     assert ch["value"] is True and ch["auto"] is True
     assert "20 robots hosts" in ch["why"]
-    # explicit override beats the evidence
-    eng2 = _engine(spark, tmp_path, pages, name="wh2", robots=robots,
-                   robots_scale_hosts=10, robots_scale_path=False)
-    assert eng2.rules_map and eng2.rules_df is None
-    assert eng2.backend_choices["robots_scale_path"]["auto"] is False
 
 
 def test_frontier_stops_broadcasting_beyond_row_budget(spark, tmp_path):
@@ -149,16 +144,6 @@ def test_frontier_stops_broadcasting_beyond_row_budget(spark, tmp_path):
     assert "60 rows" in ch["why"]
     # both the broadcast and the SMJ round fetched + extracted all 60
     assert eng.articles_table.read().count() == 120
-    # with lineage OFF the evidence still flows: the frontier_in
-    # Observation is attached whenever broadcast_frontier is auto (it
-    # costs no job), so round 1 flips without any caller help
-    eng2 = _engine(spark, tmp_path, pages, name="wh2",
-                   broadcast_frontier_max_rows=10, collect_lineage=False)
-    eng2.run_round(seeds, 0, T0)
-    assert eng2.backend_choices["broadcast_frontier"]["value"] is True
-    assert eng2._last_frontier_rows == 60
-    eng2.run_round(seeds, 1, T0 + timedelta(seconds=3600))
-    assert eng2.backend_choices["broadcast_frontier"]["value"] is False
 
 
 def test_auto_equals_explicit_round_output(spark, tmp_path):
@@ -168,8 +153,7 @@ def test_auto_equals_explicit_round_output(spark, tmp_path):
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     results = {}
     for name, kw in (("auto", {}),
-                     ("explicit", dict(broadcast_frontier=True,
-                                       robots_scale_path=False))):
+                     ("explicit", dict(broadcast_frontier=True))):
         eng = _engine(spark, tmp_path, pages, name=f"wh_{name}", **kw)
         for rnd in range(2):
             eng.run_round(seeds, rnd, T0 + timedelta(seconds=rnd * 3600),
@@ -183,16 +167,27 @@ def test_auto_equals_explicit_round_output(spark, tmp_path):
     assert results["auto"] == results["explicit"]
 
 
-def test_bloom_promotes_mid_run_when_budget_crossed(spark, tmp_path):
+def test_bloom_promotes_mid_run_when_budget_crossed(spark, tmp_path,
+                                                    monkeypatch):
     """A crawl whose round adds carry the seen key count past
     driver_bloom_max_keys hands gating to the seen join alone INSIDE
     that round: the driver bloom is dropped with its marker, not kept
     until the next construction, and every later round still fetches
-    what the oracle fetches. The drop is sticky at the same budget, and
-    a later construction under a larger budget rebuilds the filter from
-    seen instead of trusting the checkpoint taken before the drop."""
+    what the oracle fetches. The budget check reads the round's
+    first-fetch counter, so the crossing round adds no key at all. The
+    drop is sticky at the same budget, and a later construction under a
+    larger budget rebuilds the filter from seen instead of trusting the
+    checkpoint taken before the drop."""
     import os
 
+    adds = []
+    real_add_df = PartitionedBloom.add_df
+
+    def counting_add_df(self, *a, **kw):
+        adds.append(1)
+        return real_add_df(self, *a, **kw)
+
+    monkeypatch.setattr(PartitionedBloom, "add_df", counting_add_df)
     pages = pages_df(spark, 60, partitions=2)
     wh = tmp_path / "wh"
     marker = wh / "bloom" / "seen_snapshot"
@@ -201,10 +196,13 @@ def test_bloom_promotes_mid_run_when_budget_crossed(spark, tmp_path):
     _round_vs_oracle(spark, eng, orc, range(25), 0, T0)
     assert isinstance(eng.bloom, PartitionedBloom) and eng.bloom.n_keys == 25
     assert marker.read_text().split()[1] == "driver"
-    # round 1's adds cross the budget: dropped mid-run, marker with it
+    assert len(adds) == 1
+    # round 1's adds cross the budget: dropped mid-run, marker with it,
+    # and none of its 15 first-fetch keys is added before the drop
     _round_vs_oracle(spark, eng, orc, range(40), 1,
                      T0 + timedelta(seconds=1))
     assert eng.bloom is None and not marker.exists()
+    assert len(adds) == 1
     assert eng.backend_choices["bloom"] == {
         "value": False, "auto": True,
         "why": "n_keys=40 after round 1 vs driver budget 30 keys"}

@@ -55,7 +55,7 @@ def test_bucketed_engine_output_matches_broadcast_path(spark, bucketed_table,
     raw = pages_df(spark, 80, partitions=4)
     seeds = raw.select("url").withColumn("priority", F.lit(0))
     base = dict(refetch=RefetchConfig(), num_partitions=4,
-                collect_lineage=False, use_bloom=False)
+                use_bloom=False)
     outs = {}
     for name, pages, bcast in (
         ("broadcast", raw, True),

@@ -38,8 +38,8 @@ def test_cli_extract(spark, tmp_path):
 
 
 def test_cli_scale_flags(spark, tmp_path):
-    """--robots-scale-path and --no-broadcast-frontier reach the config;
-    table:<name> pages resolve through the catalog."""
+    """--no-broadcast-frontier reaches the config; table:<name> pages
+    resolve through the catalog."""
     import risjbot_spark.__main__ as M
     from risjbot_spark.bucketing import write_bucketed_pages
     from risjbot_spark.corpus import pages_df, robots_rows, seed_urls
@@ -62,7 +62,7 @@ def test_cli_scale_flags(spark, tmp_path):
             "--warehouse", str(tmp_path / "wh"),
             "--rounds", "1", "--partitions", "2",
             "--robots", robots_path,
-            "--robots-scale-path", "--no-broadcast-frontier",
+            "--no-broadcast-frontier",
         ], spark=spark)
         assert rc == 0
         arts = spark.read.parquet(

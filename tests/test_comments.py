@@ -368,7 +368,6 @@ def test_engine_round_chases_comments_end_to_end(spark, tmp_path):
     eng = CrawlEngine(
         spark, str(tmp_path / "wh"), pages, None,
         CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                    collect_lineage=False,
                     comments_host="liverpoolecho.co.uk"),
         comments_api=api,
     )
@@ -452,7 +451,6 @@ def test_chase_api_called_exactly_once_per_round(spark, tmp_path):
     eng = CrawlEngine(
         spark, str(tmp_path / "wh"), pages, None,
         CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                    collect_lineage=True,       # the two-action shape
                     comments_host="liverpoolecho.co.uk"),
         comments_api=api,
     )
@@ -501,7 +499,6 @@ def test_failed_bootstrap_crawls_without_comment_collection(spark, tmp_path):
     eng = CrawlEngine(
         spark, str(tmp_path / "wh"), pages, None,
         CrawlConfig(refetch=RefetchConfig(), num_partitions=2,
-                    collect_lineage=False,
                     comments_host="liverpoolecho.co.uk"),
         comments_api=api,
     )

@@ -194,7 +194,6 @@ def test_link_following_discovers_new_pages(spark, corpus, tmp_path):
     cfg = CrawlConfig(
         refetch=RefetchConfig(maxfetches=3, refetchsecs=3600),
         default_budget=1000, num_partitions=4, follow_links=True,
-        collect_lineage=False,
     )
     eng = CrawlEngine(spark, str(tmp_path / "whl"), corpus, None, cfg)
     # seed only a handful of pages; their links point at other corpus pages
@@ -212,7 +211,7 @@ def test_link_following_discovers_new_pages(spark, corpus, tmp_path):
 def test_salted_layout_round_trip(spark, corpus, tmp_path):
     """salt>0 (HTTP-mode layout) still produces correct results."""
     cfg = CrawlConfig(refetch=RefetchConfig(), default_budget=1000,
-                      num_partitions=4, salt=8, collect_lineage=False)
+                      num_partitions=4, salt=8)
     eng = CrawlEngine(spark, str(tmp_path / "whs"), corpus, None, cfg)
     seeds = spark.createDataFrame(
         [(url_for(i), 0) for i in range(40)], "url string, priority int")
@@ -225,8 +224,7 @@ def test_seen_merge_on_read_deltas_and_compaction(spark, corpus, tmp_path):
     table rewrite); the trim round folds base + deltas into one compacted
     snapshot; the resolved view is identical either way."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=8, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=False, trim_every=4)
+                      num_partitions=4, use_bloom=False, trim_every=4)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), corpus, None, cfg)
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
     for r in range(4):
@@ -257,8 +255,7 @@ def test_resume_from_any_snapshot_time_travel(spark, corpus, tmp_path):
     extra keys is only a false positive, but the marker forces a clean
     rebuild either way."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=8, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=True, bloom_buckets=8)
+                      num_partitions=4, use_bloom=True, bloom_buckets=8)
     wh = str(tmp_path / "wh")
     eng = CrawlEngine(spark, wh, corpus, None, cfg)
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
@@ -292,8 +289,8 @@ def test_engine_expires_old_seen_snapshots(spark, corpus, tmp_path):
     import os
 
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=16, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=False, trim_every=2, expire_keep_last=2)
+                      num_partitions=4, use_bloom=False, trim_every=2,
+                      expire_keep_last=2)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), corpus, None, cfg)
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
     for r in range(5):
@@ -380,8 +377,7 @@ def test_fetcher_mode_matches_corpus_join_mode(spark, corpus, tmp_path):
     injected paced fetcher produces the same articles and the same seen
     state as the corpus-join round (same seeds, same budgets)."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=3, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=False)
+                      num_partitions=4, use_bloom=False)
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
 
     eng_join = CrawlEngine(spark, str(tmp_path / "wh_join"), corpus, None, cfg)
@@ -416,8 +412,7 @@ def test_fetcher_mode_drops_non_2xx(spark, corpus, tmp_path):
     """Non-2xx responses never become items nor seen upserts (the
     reference's HttpError default) — they stay eligible for retry."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=3, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=False)
+                      num_partitions=4, use_bloom=False)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), corpus, None, cfg,
                       fetcher=lambda u: (503, None, ""))
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
@@ -432,7 +427,7 @@ def test_follow_links_with_bare_url_seeds(spark, corpus, tmp_path):
     crash selecting the missing column on round 1."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=3, refetchsecs=3600),
                       default_budget=1000, num_partitions=4,
-                      follow_links=True, collect_lineage=False)
+                      follow_links=True)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), corpus, None, cfg)
     eng.run(corpus.select("url"), rounds=2, start_ts=START)  # bare url col
     assert eng.articles_table.read().count() > 0
@@ -468,8 +463,7 @@ def test_crash_between_commits_recovers_without_duplicates(spark, corpus,
     from risjbot_spark.store.snapshots import SnapshotTable
 
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=3, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=True, bloom_buckets=8)
+                      num_partitions=4, use_bloom=True, bloom_buckets=8)
     wh = str(tmp_path / "wh")
     eng = CrawlEngine(spark, wh, corpus, None, cfg)
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
@@ -539,8 +533,7 @@ def test_recovery_token_not_masked_by_round_ordinal_reset(spark, corpus,
     from risjbot_spark.store.snapshots import SnapshotTable
 
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=5, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=True, bloom_buckets=8)
+                      num_partitions=4, use_bloom=True, bloom_buckets=8)
     wh = str(tmp_path / "wh")
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
     eng = CrawlEngine(spark, wh, corpus, None, cfg)
@@ -579,8 +572,7 @@ def test_recovery_refuses_multi_commit_divergence(spark, corpus, tmp_path):
     rollback) cannot be repaired by replaying the newest delta — engine
     init must refuse instead of silently corrupting fetch counts."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=5, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=False)
+                      num_partitions=4, use_bloom=False)
     wh = str(tmp_path / "wh")
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
     eng = CrawlEngine(spark, wh, corpus, None, cfg)
@@ -596,8 +588,7 @@ def test_run_resumes_round_numbering(spark, corpus, tmp_path):
     """run() on a reused warehouse continues round numbers and the round
     clock instead of restarting at 0 (ADVICE r1)."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=5, refetchsecs=3600),
-                      num_partitions=4, collect_lineage=False,
-                      use_bloom=False)
+                      num_partitions=4, use_bloom=False)
     wh = str(tmp_path / "wh")
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
     CrawlEngine(spark, wh, corpus, None, cfg).run(seeds, 2, start_ts=START)
@@ -616,7 +607,7 @@ def test_engine_refuses_increment_format_seen_table(spark, corpus, tmp_path):
     import json
 
     cfg = CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                      collect_lineage=False, use_bloom=False)
+                      use_bloom=False)
     wh = str(tmp_path / "wh")
     eng = CrawlEngine(spark, wh, corpus, None, cfg)
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
@@ -642,7 +633,7 @@ def test_duplicate_corpus_pages_fetch_once(spark, tmp_path):
              .withColumn("html", F.lit(b"<html><body>old</body></html>")))
     dup_corpus = base.unionByName(older)
     cfg = CrawlConfig(refetch=RefetchConfig(), num_partitions=2,
-                      collect_lineage=False, use_bloom=False)
+                      use_bloom=False)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), dup_corpus, None, cfg)
     seeds = base.select("url").withColumn("priority", F.lit(0))
     eng.run_round(seeds, 0, START)
@@ -660,7 +651,7 @@ def test_engine_requires_utc_session_tz(spark, corpus, tmp_path):
     try:
         with pytest.raises(RuntimeError, match="session.timeZone"):
             CrawlEngine(spark, str(tmp_path / "wh"), corpus, None,
-                        CrawlConfig(collect_lineage=False))
+                        CrawlConfig())
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
@@ -669,7 +660,7 @@ def test_naive_round_ts_coerced_to_utc(spark, corpus, tmp_path):
     """run_round accepts a naive round_ts and treats it as UTC — the
     stored last_fetch must be the exact UTC instant, not an OS-tz shift."""
     cfg = CrawlConfig(refetch=RefetchConfig(), num_partitions=2,
-                      collect_lineage=False, use_bloom=False)
+                      use_bloom=False)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), corpus, None, cfg)
     seeds = corpus.select("url").withColumn("priority", F.lit(0)).limit(5)
     eng.run_round(seeds, 0, START.replace(tzinfo=None))   # naive
@@ -686,8 +677,7 @@ def test_trim_every_zero_never_compacts(spark, corpus, tmp_path):
     """REGRESSION: trim_every=0 ('never compact') crashed with
     ZeroDivisionError on round 1."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=9, refetchsecs=3600),
-                      num_partitions=2, collect_lineage=False,
-                      use_bloom=False, trim_every=0)
+                      num_partitions=2, use_bloom=False, trim_every=0)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), corpus, None, cfg)
     seeds = corpus.select("url").withColumn("priority", F.lit(0)).limit(6)
     for r in range(5):
@@ -704,8 +694,7 @@ def test_resumed_run_keeps_clock_and_outlinks(spark, corpus, tmp_path):
     dropped the previous invocation's outlinks. The warehouse's recorded
     round_ts anchors the clock and last_delta_dir seeds link-following."""
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=9, refetchsecs=3600),
-                      num_partitions=2, collect_lineage=False,
-                      use_bloom=False, follow_links=True,
+                      num_partitions=2, use_bloom=False, follow_links=True,
                       link_deny="offsite")
     wh = str(tmp_path / "wh")
     seeds = corpus.select("url").withColumn("priority", F.lit(0)).limit(5)
@@ -741,8 +730,7 @@ def test_trim_protects_requested_but_gate_dropped_keys(spark, tmp_path):
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     cfg = CrawlConfig(
         refetch=RefetchConfig(maxfetches=8, refetchsecs=100, agelimit=250),
-        trim_every=2, num_partitions=4, collect_lineage=False,
-        use_bloom=False,
+        trim_every=2, num_partitions=4, use_bloom=False,
     )
     eng = CrawlEngine(spark, str(tmp_path / "wh"), pages, None, cfg)
     eng.run_round(seeds, 0, START)                       # fetches=1
@@ -779,8 +767,8 @@ def test_bloom_gated_trim_then_rerequest_matches_unfiltered(spark, corpus,
             refetch=RefetchConfig(maxfetches=8, refetchsecs=3600,
                                   agelimit=4 * 3600, trimdb=True,
                                   refetchfromdb=False),
-            default_budget=1000, num_partitions=4, collect_lineage=False,
-            trim_every=4, use_bloom=use_bloom)
+            default_budget=1000, num_partitions=4, trim_every=4,
+            use_bloom=use_bloom)
         eng = CrawlEngine(spark, str(tmp_path / f"wh{use_bloom}"), corpus,
                           None, cfg)
         for rnd, s in enumerate(plan):
@@ -821,14 +809,13 @@ def test_pages_precanonicalized_contract(spark, tmp_path):
     with _pytest.raises(ValueError, match="page_url"):
         CrawlEngine(spark, str(tmp_path / "w1"), pages, None,
                     CrawlConfig(refetch=RefetchConfig(),
-                                collect_lineage=False,
                                 pages_precanonicalized=True))
     # poisoned column: an unrelated page_url must NOT be trusted when
     # the caller says pages_precanonicalized=False
     poisoned = pages.withColumn("page_url", F.lit("https://bogus/x"))
     eng = CrawlEngine(spark, str(tmp_path / "w2"), poisoned, None,
                       CrawlConfig(refetch=RefetchConfig(),
-                                  num_partitions=2, collect_lineage=False,
+                                  num_partitions=2,
                                   pages_precanonicalized=False))
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     eng.run_round(seeds, 0, START)
@@ -837,8 +824,7 @@ def test_pages_precanonicalized_contract(spark, tmp_path):
     # column and fetch nothing
     eng2 = CrawlEngine(spark, str(tmp_path / "w3"), poisoned, None,
                        CrawlConfig(refetch=RefetchConfig(),
-                                   num_partitions=2,
-                                   collect_lineage=False))
+                                   num_partitions=2))
     eng2.run_round(seeds, 0, START)
     assert eng2.articles_table.read().count() == 0
 
@@ -855,8 +841,7 @@ def test_pages_unique_per_url_skips_dedup_identically(spark, corpus,
     outs = {}
     for name, flag in (("dedup", False), ("unique", True)):
         cfg = CrawlConfig(refetch=RefetchConfig(), default_budget=1000,
-                          num_partitions=4, collect_lineage=False,
-                          pages_unique_per_url=flag)
+                          num_partitions=4, pages_unique_per_url=flag)
         eng = CrawlEngine(spark, str(tmp_path / f"wh_{name}"), corpus,
                           None, cfg)
         eng.run(seeds, rounds=2, start_ts=START, round_gap_secs=10800)

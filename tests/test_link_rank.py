@@ -134,7 +134,7 @@ def _lr_engine(spark, corpus, wh, **cfg_kw):
     cfg = CrawlConfig(
         refetch=RefetchConfig(maxfetches=5, refetchsecs=3600),
         default_budget=1000, num_partitions=4, follow_links=True,
-        collect_lineage=False, link_rank=True, **cfg_kw)
+        link_rank=True, **cfg_kw)
     return CrawlEngine(spark, wh, corpus, None, cfg)
 
 

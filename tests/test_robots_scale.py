@@ -138,8 +138,9 @@ def test_politeness_schedule_budgets_df_parity(spark):
 
 
 def test_crawl_scale_path_output_identical(spark, tmp_path):
-    """End-to-end: robots_scale_path=True produces the same per-round
-    fetch ordering and final seen-set as the dict engine."""
+    """End-to-end: the robots DataFrame path (robots_scale_hosts=0, so
+    any host count selects it) produces the same per-round fetch
+    ordering and final seen-set as the dict engine."""
     corpus = pages_df(spark, 120, partitions=4)
     robots = spark.createDataFrame(robots_rows(), ROBOTS_SCHEMA)
     base = dict(
@@ -152,10 +153,11 @@ def test_crawl_scale_path_output_identical(spark, tmp_path):
     ).select("url", "priority")
 
     results = {}
-    for name, flag in (("dict", False), ("scale", True)):
+    for name, kw in (("dict", {}), ("scale", {"robots_scale_hosts": 0})):
         eng = CrawlEngine(
             spark, str(tmp_path / f"wh_{name}"), corpus, robots,
-            CrawlConfig(robots_scale_path=flag, **base))
+            CrawlConfig(**kw, **base))
+        assert (eng.rules_df is not None) == (name == "scale")
         for rnd in range(2):
             ts = START + timedelta(seconds=rnd * 3600)
             eng.run_round(seeds, rnd, ts, with_order_audit=True)
@@ -240,9 +242,9 @@ def test_live_fetch_scale_path_carries_crawl_delay(spark, tmp_path,
 
     monkeypatch.setattr(C, "fetch_stage", spy)
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=3, refetchsecs=3600),
-                      robots_scale_path=True, default_budget=1000,
+                      robots_scale_hosts=0, default_budget=1000,
                       round_seconds=10, num_partitions=4,
-                      collect_lineage=False, use_bloom=False)
+                      use_bloom=False)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), corpus, robots, cfg,
                       fetcher=fake_fetch)
     seeds = corpus.select("url").withColumn("priority", F.lit(0))

@@ -61,8 +61,7 @@ def test_ordering_invariant_across_parallelism(spark, tmp_path):
             eng = CrawlEngine(
                 spark, str(tmp_path / f"wh{partitions}"), pages, None,
                 CrawlConfig(refetch=RefetchConfig(), default_budget=9,
-                            num_partitions=partitions,
-                            collect_lineage=False),
+                            num_partitions=partitions),
             )
             seeds = spark.createDataFrame(
                 [(url_for(i), (i * 7) % 3) for i in range(80)],
@@ -122,7 +121,7 @@ def test_engine_grows_bloom_when_full(spark, tmp_path):
     eng = CrawlEngine(
         spark, str(tmp_path / "wh"), pages, None,
         CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                    collect_lineage=False, bloom_buckets=4,
+                    bloom_buckets=4,
                     bloom_bits_per_bucket=1 << 10),  # capacity ~409 < 600
     )
     seeds = pages.select("url").withColumn("priority", F.lit(0))
@@ -142,8 +141,7 @@ def test_bloom_n_keys_counts_keys_not_refetches(spark, tmp_path):
     eng = CrawlEngine(
         spark, str(tmp_path / "wh"), pages, None,
         CrawlConfig(refetch=RefetchConfig(maxfetches=8, refetchsecs=3600),
-                    num_partitions=4, collect_lineage=False,
-                    bloom_buckets=4))
+                    num_partitions=4, bloom_buckets=4))
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     for rnd in range(4):                     # rounds 1-3 refetch every key
         eng.run_round(seeds, rnd, START + timedelta(seconds=3600 * rnd))
@@ -167,7 +165,7 @@ def test_bloom_marker_is_backend_scoped(spark, tmp_path):
         return CrawlEngine(
             spark, str(tmp_path / "wh"), pages, None,
             CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                        collect_lineage=False, bloom_buckets=4, **kw))
+                        bloom_buckets=4, **kw))
 
     def seeds(n):
         return spark.createDataFrame([(url_for(i), 0) for i in range(n)],

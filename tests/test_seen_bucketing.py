@@ -92,7 +92,7 @@ def test_seen_filter_split_equals_seen_filter(spark):
 
 def _run_engine(spark, wh, pages, seeds, rounds=6, **cfg_kw):
     cfg = CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                      collect_lineage=False, trim_every=2, **cfg_kw)
+                      trim_every=2, **cfg_kw)
     eng = CrawlEngine(spark, wh, pages, None, cfg)
     for r in range(rounds):
         eng.run_round(seeds, r, START + timedelta(seconds=10801 * r))
@@ -173,8 +173,7 @@ def test_resume_from_flat_base_compacts_bucketed(spark, tmp_path):
     the next compaction writes the url_hash-bucketed base."""
     n = 60
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=2),
-                      num_partitions=4, collect_lineage=False,
-                      trim_every=3)
+                      num_partitions=4, trim_every=3)
     orc = _oracle(cfg, n)
     seed_rows = [{"url": url_for(i), "priority": 0} for i in range(n)]
     ts = [START + timedelta(seconds=10801 * r) for r in range(4)]
@@ -277,7 +276,7 @@ def test_bucketed_base_survives_catalog_loss(spark, tmp_path):
     eng2 = CrawlEngine(
         spark, str(tmp_path / "wh"), pages, None,
         CrawlConfig(refetch=RefetchConfig(), num_partitions=4,
-                    collect_lineage=False, trim_every=2))
+                    trim_every=2))
     after = sorted((r.url_hash, r.fetches) for r in eng2.seen().collect())
     assert before == after
     # and the next round still runs (gate + trawl against the re-

@@ -263,7 +263,7 @@ def test_splash_fetcher_adapter(spark, tmp_path):
     eng = CrawlEngine(
         spark, str(tmp_path / "wh"), None, None,
         CrawlConfig(refetch=RefetchConfig(), num_partitions=2,
-                    collect_lineage=False, use_bloom=False, salt=2),
+                    use_bloom=False, salt=2),
         fetcher=splash_fetcher(http, "http://splash:8050"))
     seeds = corpus.select("url").withColumn("priority", F.lit(0))
     eng.run_round(seeds, 0, datetime(2017, 4, 1, tzinfo=timezone.utc))

@@ -172,8 +172,7 @@ def test_engine_export_jsonl(spark, tmp_path):
 
     pages = pages_df(spark, 30, partitions=2)
     eng = CrawlEngine(spark, str(tmp_path / "wh"), pages, None,
-                      CrawlConfig(refetch=RefetchConfig(), num_partitions=2,
-                                  collect_lineage=False))
+                      CrawlConfig(refetch=RefetchConfig(), num_partitions=2))
     eng.run_round(pages.select("url").withColumn("priority", F.lit(0)), 0,
                   datetime(2017, 4, 1, tzinfo=timezone.utc))
     out = tmp_path / "jsonl"

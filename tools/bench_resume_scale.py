@@ -137,7 +137,6 @@ def _engine(spark, wh):
                                   agelimit=10**9),
             default_budget=BUDGET,
             num_partitions=BUCKETS,
-            collect_lineage=False,
             use_bloom=True,
             broadcast_frontier=False,
             pages_unique_per_url=True,

@@ -148,7 +148,6 @@ def main() -> None:
             refetch=RefetchConfig(maxfetches=max(8, N_ROUNDS + 1)),
             default_budget=BUDGET,
             num_partitions=BUCKETS,
-            collect_lineage=False,
             use_bloom=True,
             broadcast_frontier=False,    # SMJ against the bucketed table
             # the generator emits exactly one row per URL and the

@@ -380,8 +380,7 @@ def main() -> None:
     pages = spark.read.parquet(pages_path)
     wh = tempfile.mkdtemp()
     eng = CrawlEngine(spark, wh, pages, None,
-                      CrawlConfig(refetch=RefetchConfig(), num_partitions=8,
-                                  collect_lineage=False))
+                      CrawlConfig(refetch=RefetchConfig(), num_partitions=8))
     # build the round plan up to items without committing
     from risjbot_spark.store.snapshots import SnapshotTable
     captured = {}
@@ -420,7 +419,7 @@ def main() -> None:
     wh2 = tempfile.mkdtemp()
     eng2 = CrawlEngine(spark, wh2, pages, None,
                        CrawlConfig(refetch=_RC(), num_partitions=8,
-                                   collect_lineage=False, trim_every=2))
+                                   trim_every=2))
     seeds2 = pages.select("url").withColumn("priority", F.lit(0))
     start = datetime(2017, 4, 1, tzinfo=timezone.utc)
     for r in range(4):
