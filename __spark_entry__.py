@@ -116,7 +116,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     first 50 in registration order (observed r1–r4), so the registry is
     sized to make EVERY entry driver-verified.  The crawl-engine
     end-to-end pair leads, then the 13 queries the r4 window missed,
-    then the rest.  11 intermediate/superseded entries are retired from
+    then the rest.  3 intermediate-stage entries are retired from
     this window (rationale per name in
     risjbot_spark/queries.py::RETIRED_FROM_DRIVER) but stay fully
     oracle-checked via queries_extended() +
@@ -133,7 +133,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def queries_extended() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The full surface: the 50 driver-registered queries plus the 11
+    """The full surface: the 50 driver-registered queries plus the 3
     retired-from-driver entries, every one with an ORACLE_SQL twin."""
     from risjbot_spark.queries import QUERIES
 

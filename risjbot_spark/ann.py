@@ -34,8 +34,6 @@ reference's crawl operators.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -121,59 +119,19 @@ def assign_nearest(
     cent_id: str = "centroid",
     cent_vec: str = "cvec",
     out_col: str = "centroid",
-    strategy: str = "argmin",
-    id_col: Optional[str] = None,
 ) -> DataFrame:
-    """df + nearest-centroid column. Two result-identical strategies
-    (same (dist, id) tie-break as the oracle's `ORDER BY d ASC,
-    centroid ASC ... rn = 1`; parity-tested):
+    """df + nearest-centroid column, with the same (dist, id) tie-break
+    as the oracle's `ORDER BY d ASC, centroid ASC ... rn = 1`.
 
-    "argmin" (default): the centroid table collapses to a one-row
-    array-of-structs that broadcasts into the scan
-    (BroadcastNestedLoopJoin on one row); the argmin is
-    `array_min(transform(carr, c -> (squared_l2, c.id)))` — ZERO
-    exchange of the vector side. Replaces the r3 crossJoin +
+    The centroid table collapses to a one-row array-of-structs that
+    broadcasts into the scan (BroadcastNestedLoopJoin on one row); the
+    argmin is `array_min(transform(carr, c -> (squared_l2, c.id)))` —
+    ZERO exchange of the vector side. Replaces the r3 crossJoin +
     row_number() window that materialized and re-shuffled n×K rows per
     Lloyd iteration (a 10^10-row exchange at 10^9 vectors / K=10).
     Constraint: all K centroids live in ONE row — fine through
-    K×dim ≈ 10^6 doubles (~8 MB); beyond that use "minby".
-
-    "minby": crossJoin(broadcast(centroids)) + map-side-combining
-    `groupBy(id).agg(min_by(...))` — K rows combine to 1 per vector
-    BEFORE the exchange, so the shuffle is n rows (K× less than the r3
-    window, not zero), every expression stays whole-stage-codegen, and
-    there is no single-row size constraint. Measured at 10^6×16×K=10
-    (BENCH/kmeans_assign_1m.json): locally minby 1.42 s / argmin 2.34 s
-    / window 1.71 s — RAM-speed shuffle favors codegen; at cluster
-    scale the exchange volume dominates.
-
-    "minby" groups by `id_col` (required for it — rows must keep their
-    identity; grouping by the vector would merge duplicate vectors);
-    both return the same columns + out_col.
+    K×dim ≈ 10^6 doubles (~8 MB).
     """
-    if strategy == "minby":
-        if id_col is None:
-            raise ValueError('strategy="minby" needs id_col= (rows are '
-                             're-grouped by their identity)')
-        others = [c for c in df.columns if c != id_col]
-        dist = F.aggregate(
-            F.zip_with(F.col(vec_col), F.col("_cv"),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
-        j = (df.crossJoin(F.broadcast(
-                centroids.select(F.col(cent_id).alias("_cid"),
-                                 F.col(cent_vec).alias("_cv"))))
-             .select(*df.columns,
-                     F.struct(dist.alias("d"),
-                              F.col("_cid").alias("cid")).alias("_dc")))
-        return (j.groupBy(id_col)
-                .agg(*[F.min_by(F.col(c), F.col("_dc")).alias(c)
-                       for c in others],
-                     F.min_by(F.col("_dc").getField("cid"),
-                              F.col("_dc")).alias(out_col))
-                .select(*df.columns, out_col))
-    if strategy != "argmin":
-        raise ValueError(f"unknown strategy {strategy!r}")
     carr = _centroid_array(centroids, cent_id, cent_vec)
     scored = df.crossJoin(F.broadcast(carr))
     best = F.array_min(F.transform(

@@ -74,8 +74,6 @@ _TOKS = "__tq_toks"
 _SH = "__tq_s"
 _HIT = "__tq_hit"
 _BSET = "__tq_boiler"
-_POS = "__tq_pos"
-_LINE = "__tq_line"
 _THR = "__tq_thr"
 _NT = "__tq_nt"
 
@@ -465,8 +463,7 @@ def mix_sample(df: DataFrame, group_cols,
 def decontaminate(train: DataFrame, eval_df: DataFrame,
                   id_col: str, text_col: str,
                   *, ngram: int = 5,
-                  round_dp: int = 6,
-                  broadcast_eval: bool = True) -> DataFrame:
+                  round_dp: int = 6) -> DataFrame:
     """Benchmark decontamination by token n-gram overlap: for every
     training document that shares at least one `ngram`-token shingle
     with the evaluation set, return
@@ -486,22 +483,15 @@ def decontaminate(train: DataFrame, eval_df: DataFrame,
     exactly ONE exchange on the 100 TB side, keyed by doc id and
     map-side combined. Both sides tokenize identically (lowercased
     str.split(): `dedup.tokens_expr`), so quoting a benchmark question
-    verbatim hits regardless of case or whitespace shape.
-
-    `broadcast_eval` (default True) fits the intended shape — a small
-    benchmark suite. Pass False when the "eval" side is itself
-    corpus-sized (e.g. cross-corpus overlap audits): the hint would
-    otherwise push a multi-GB build past Spark's broadcast limits, and
-    a plain shuffled join is the correct plan there."""
+    verbatim hits regardless of case or whitespace shape."""
     if id_col in ("n_hits", "n_doc_ngrams", "hit_frac", _SH, _HIT):
         raise ValueError(f"id_col {id_col!r} collides with an output or "
                          "internal column of decontaminate")
-    ev = (eval_df.select(F.explode(
-              ngrams_expr(tokens_expr(F.col(text_col)), ngram)).alias(_SH))
-          .distinct()
-          .withColumn(_HIT, F.lit(1)))
-    if broadcast_eval:
-        ev = F.broadcast(ev)
+    ev = F.broadcast(
+        eval_df.select(F.explode(
+            ngrams_expr(tokens_expr(F.col(text_col)), ngram)).alias(_SH))
+        .distinct()
+        .withColumn(_HIT, F.lit(1)))
     tr = train.select(
         F.col(id_col),
         F.explode(F.array_distinct(
@@ -566,8 +556,6 @@ def strip_boilerplate(df: DataFrame, text_col: str,
                       *, min_docs: int = 2,
                       min_line_chars: int = 10,
                       boiler: DataFrame | None = None,
-                      strategy: str = "broadcast",
-                      id_col: str | None = None,
                       out_col: str | None = None) -> DataFrame:
     """APPLY line-level boilerplate removal: every line whose trimmed
     form is in the boilerplate set (computed from `df` itself, or
@@ -578,28 +566,19 @@ def strip_boilerplate(df: DataFrame, text_col: str,
     `out_col` names a new column. NULL text stays NULL; a document
     whose every line is boilerplate becomes the empty string.
 
-    strategy="broadcast" (default): the boilerplate set is collected
-    into a single-row array, broadcast, and the removal is a pure
-    expression — the corpus side never exchanges (the same
-    one-row-broadcast shape as `ann.assign_nearest`). Right for
-    boilerplate sets up to ~10^6 lines (the broadcast is the array's
-    string bytes). strategy="join" (requires `id_col`): posexplode →
-    left-anti join on the trimmed line → re-aggregate by id → join
-    back; three corpus-side exchanges, but the boilerplate set only
-    ever streams through a shuffled join — right when the set itself
-    is too large to broadcast (min_docs=2 over a 10^10-page crawl).
-    strategy="join" REQUIRES `id_col` values to be unique: rows sharing
-    an id would have their lines merged into one rebuilt text (the
-    broadcast strategy has no such constraint — it never regroups)."""
+    The boilerplate set is collected into a single-row array,
+    broadcast, and the removal is a pure expression — the corpus side
+    never exchanges (the same one-row-broadcast shape as
+    `ann.assign_nearest`). Right for boilerplate sets up to ~10^6 lines
+    (the broadcast is the array's string bytes)."""
     if out_col is None:
         out_col = text_col
     elif out_col in df.columns:
         raise ValueError(f"out_col {out_col!r} already exists in the "
                          "input; pick a fresh name")
-    clash = [c for c in (_BSET, _POS, _LINE) if c in df.columns]
-    if clash:
-        raise ValueError(f"input column(s) {clash} collide with "
-                         "internal columns of strip_boilerplate")
+    if _BSET in df.columns:
+        raise ValueError(f"input column {_BSET!r} collides with an "
+                         "internal column of strip_boilerplate")
     if boiler is None:
         boiler = boilerplate_lines(df, text_col, min_docs=min_docs,
                                    min_line_chars=min_line_chars)
@@ -607,41 +586,14 @@ def strip_boilerplate(df: DataFrame, text_col: str,
         raise ValueError("boiler DataFrame must have a 'line' column "
                          "(as produced by boilerplate_lines)")
     text = F.col(text_col)
-    if strategy == "broadcast":
-        bset = boiler.agg(F.collect_list("line").alias(_BSET))
-        cleaned = F.when(text.isNull(), F.lit(None)).otherwise(
-            F.array_join(
-                F.filter(F.split(text, _LINE_RE),
-                         lambda l: ~F.array_contains(F.col(_BSET),
-                                                     F.trim(l))),
-                "\n"))
-        out = (df.crossJoin(F.broadcast(bset))
-               .withColumn(out_col, cleaned).drop(_BSET))
-        return out.select(*df.columns) if out_col in df.columns else out
-    if strategy != "join":
-        raise ValueError(f"unknown strategy {strategy!r}; expected "
-                         "'broadcast' or 'join'")
-    if id_col is None:
-        raise ValueError("strategy='join' needs id_col to reassemble "
-                         "documents")
-    ex = (df.filter(text.isNotNull())
-          .select(F.col(id_col),
-                  F.posexplode(F.split(text, _LINE_RE))
-                  .alias(_POS, _LINE)))
-    kept = ex.join(boiler,
-                   F.trim(ex[_LINE]) == boiler["line"], "left_anti")
-    rebuilt = (
-        kept.groupBy(id_col)
-        .agg(F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(_POS, _LINE))),
-                lambda s: s[_LINE]), "\n").alias(_BSET)))
-    # all-lines-boilerplate docs drop out of `rebuilt`: restore them as
-    # empty strings (broadcast-strategy parity); NULL text stays NULL
-    joined = df.join(rebuilt, id_col, "left")
+    bset = boiler.agg(F.collect_list("line").alias(_BSET))
     cleaned = F.when(text.isNull(), F.lit(None)).otherwise(
-        F.coalesce(F.col(_BSET), F.lit("")))
-    out = joined.withColumn(out_col, cleaned).drop(_BSET)
+        F.array_join(
+            F.filter(F.split(text, _LINE_RE),
+                     lambda l: ~F.array_contains(F.col(_BSET), F.trim(l))),
+            "\n"))
+    out = (df.crossJoin(F.broadcast(bset))
+           .withColumn(out_col, cleaned).drop(_BSET))
     return out.select(*df.columns) if out_col in df.columns else out
 
 

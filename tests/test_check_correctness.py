@@ -1,12 +1,46 @@
-"""The correctness twin's column-type comparison
-(tools/check_correctness.py). Values are compared through str(), so a
-DuckDB HUGEINT sum and a Spark BIGINT sum look equal there; the type
-classes must catch the drift on their own. No Spark session needed."""
+"""The correctness twin (tools/check_correctness.py) and the registry
+it checks. Values are compared through str(), so a DuckDB HUGEINT sum
+and a Spark BIGINT sum look equal there; the type classes must catch
+the drift on their own. No Spark session needed."""
 
 import duckdb
+import pytest
 
+import __spark_entry__ as entry
 from risjbot_spark import queries as Q
 from tools import check_correctness as twin
+
+
+def test_registry_shape():
+    """Every query on the extended surface has an oracle twin (and no
+    twin is orphaned), the driver window is exactly 50, and each
+    retired name is still a live query."""
+    assert set(entry.queries_extended()) == set(entry.oracle_sql())
+    assert len(entry.queries()) == 50
+    assert set(Q.RETIRED_FROM_DRIVER) <= set(Q.QUERIES)
+
+
+class _NoSession:
+    """Stands in for SparkSession: reaching for a builder fails the
+    test, so a check that should stop first is seen to stop first."""
+
+    @property
+    def builder(self):
+        raise AssertionError("a SparkSession was started")
+
+
+@pytest.mark.parametrize("args", [[], ["stub"], ["--extended"]])
+def test_query_without_oracle_fails_before_session(monkeypatch, capsys,
+                                                   args):
+    """A selected query with no ORACLE_SQL twin is a FAIL, not a
+    rows-only pass the driver could never hash-check."""
+    stub = {"stub": lambda spark, sf: None}
+    monkeypatch.setattr(entry, "queries", lambda: stub)
+    monkeypatch.setattr(entry, "queries_extended", lambda: stub)
+    monkeypatch.setattr(entry, "oracle_sql", lambda: {})
+    monkeypatch.setattr(twin, "SparkSession", _NoSession())
+    assert twin.main("/nonexistent", args) == 1
+    assert "FAIL  no ORACLE_SQL twin for: ['stub']" in capsys.readouterr().out
 
 
 def test_type_class_separates_integer_widths_and_floats():

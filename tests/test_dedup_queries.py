@@ -196,11 +196,12 @@ def test_dedup_clusters_are_true_connected_components(spark, sf_dir):
     # composing on top of the clustering must not blow up the planner
     # (the CC loop truncates lineage per round — regression guard for
     # the exponential-plan OOM)
-    from risjbot_spark.queries import _docs_with_mutants, q_dedup_survivor_docs
-    kept_ids = {r["doc_id"]
-                for r in q_dedup_survivor_docs(spark, sf_dir).collect()}
-    all_ids = {r["doc_id"]
-               for r in _docs_with_mutants(spark, sf_dir).collect()}
+    from risjbot_spark import dedup
+    from risjbot_spark.queries import _docs_with_mutants
+    docs = _docs_with_mutants(spark, sf_dir)
+    kept_ids = {r["doc_id"] for r in dedup.survivor_docs(
+        docs, "doc_id", q_dedup_clusters(spark, sf_dir)).collect()}
+    all_ids = {r["doc_id"] for r in docs.collect()}
     losers = {d for d, s in survivor.items() if not s}
     assert kept_ids == all_ids - losers
 

@@ -362,11 +362,10 @@ def test_ivf_search_batch_matches_per_query(vectors):
         assert batch[qid] == single
 
 
-def test_assign_strategies_agree(spark, vectors):
-    """"argmin" (zero-exchange) and "minby" (map-side-combining, for
-    K×dim beyond a single row) must assign identically, tie-breaks
-    included — two identical-distance centroids force the (d, id)
-    ordering to decide."""
+def test_assign_nearest_tie_breaks_on_smaller_centroid_id(spark, vectors):
+    """Two identical-distance centroids force the (d, id) ordering to
+    decide: the smaller centroid id wins, as in the oracle's
+    `ORDER BY d ASC, centroid ASC`."""
     e = vectors.select("vid", ann.as_double_vec("vec").alias("vec"))
     cents = spark.createDataFrame(
         [(0, [1.0, 2.0, 3.0, 4.0]), (1, [1.0, 2.0, 3.0, 4.0]),
@@ -374,15 +373,7 @@ def test_assign_strategies_agree(spark, vectors):
         "centroid int, cvec array<double>")
     a = {r["vid"]: r["c"] for r in ann.assign_nearest(
         e, "vec", cents, out_col="c").collect()}
-    b = {r["vid"]: r["c"] for r in ann.assign_nearest(
-        e, "vec", cents, out_col="c", strategy="minby",
-        id_col="vid").collect()}
-    assert a == b
     assert a[10] == 0          # tie between 0 and 1 → smaller id
-    with pytest.raises(ValueError, match="id_col"):
-        ann.assign_nearest(e, "vec", cents, strategy="minby")
-    with pytest.raises(ValueError, match="unknown strategy"):
-        ann.assign_nearest(e, "vec", cents, strategy="window")
 
 
 def test_minhash_expr_path_signature_stage_has_no_exchange(corpus):

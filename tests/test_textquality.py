@@ -308,24 +308,6 @@ def test_strip_boilerplate_broadcast(line_corpus):
     assert out2[4] == "" and out2[1] == "story one body text"
 
 
-def test_strip_boilerplate_join_parity(line_corpus):
-    for min_docs in (2, 3):
-        b = {r["pk"]: r["body"] for r in
-             textquality.strip_boilerplate(
-                 line_corpus, "body", min_docs=min_docs).collect()}
-        j = {r["pk"]: r["body"] for r in
-             textquality.strip_boilerplate(
-                 line_corpus, "body", min_docs=min_docs,
-                 strategy="join", id_col="pk").collect()}
-        assert b == j
-    with pytest.raises(ValueError, match="id_col"):
-        textquality.strip_boilerplate(line_corpus, "body",
-                                      strategy="join")
-    with pytest.raises(ValueError, match="strategy"):
-        textquality.strip_boilerplate(line_corpus, "body",
-                                      strategy="nope")
-
-
 def test_strip_boilerplate_frozen_set_and_out_col(spark, line_corpus):
     """A boiler set frozen elsewhere applies to new batches (the
     streaming-ready form), and out_col leaves the source column

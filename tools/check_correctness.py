@@ -83,8 +83,9 @@ def canon_rows(cols, rows):
 def main(sf_dir: str, only: list[str]):
     # the driver calls __spark_entry__.queries()/oracle_sql(), which adds
     # the crawl-engine end-to-end queries on top of risjbot_spark.queries
-    # — check exactly that surface; --extended widens to the full 61-query
-    # surface including the entries retired from the driver's 50-row window
+    # — check exactly that surface; --extended widens to the full 53-query
+    # surface including the 3 entries retired from the driver's 50-row
+    # window
     import __spark_entry__ as entry
 
     extended = "--extended" in only
@@ -93,10 +94,15 @@ def main(sf_dir: str, only: list[str]):
     ORACLE_SQL = entry.oracle_sql()
 
     # validate the subset BEFORE paying SparkSession startup: a typo'd
-    # query name fails in milliseconds, with no session left behind
+    # query name, or a query the driver could not hash-check because it
+    # has no oracle twin, fails in milliseconds with no session left
     unknown = [n for n in (only or []) if n not in QUERIES]
     if unknown:
         print(f"FAIL  unknown query name(s): {unknown}")
+        return 1
+    no_oracle = [n for n in (only or QUERIES) if n not in ORACLE_SQL]
+    if no_oracle:
+        print(f"FAIL  no ORACLE_SQL twin for: {no_oracle}")
         return 1
 
     spark = (
@@ -115,7 +121,7 @@ def main(sf_dir: str, only: list[str]):
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
-        sql = ORACLE_SQL.get(name)
+        sql = ORACLE_SQL[name]
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -124,9 +130,6 @@ def main(sf_dir: str, only: list[str]):
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
-            continue
-        if sql is None:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle)")
             continue
         try:
             rel = con.sql(sql)

@@ -128,10 +128,18 @@ def main() -> None:
           "frontier-side prefix match is JVM-only (rules parse is the "
           "only Python, on the small rules side)")
 
-    # --- ivf_search: centroid table broadcasts; candidate join must be
-    # an equi join on the probed centroid labels
-    p = plan_of(QUERIES["ivf_search"](spark, SF))
-    sections.append(("ivf_search (probe join)", p))
+    # --- ann.ivf_search over an ann.kmeans index: the probed centroid
+    # table broadcasts; the candidate join is an equi join on the probed
+    # cluster ids
+    from risjbot_spark import ann
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    km = ann.kmeans(emb, "vec_id", "embedding", k=10, iters=2)
+    qv = (emb.filter(F.col("vec_id") == 0)
+          .select(ann.as_double_vec("embedding").alias("qv")))
+    p = plan_of(ann.ivf_search(emb.filter(F.col("vec_id") != 0),
+                               "vec_id", "embedding", km, qv,
+                               nprobe=3, k=10))
+    sections.append(("ann.ivf_search (probe join)", p))
     check("ivf_search", "BroadcastHashJoin" in p, "probed centroids broadcast")
     check("ivf_search", "CartesianProduct" not in p,
           "no cartesian in candidate selection")
@@ -438,11 +446,12 @@ def main() -> None:
     check("seen_gate_bucketed", p.count("Exchange hashpartitioning") == 2,
           "exchanges = frontier + delta resolve only; base side in place")
 
-    # --- ivf_kmeans: every Lloyd iteration broadcasts the K-row
+    # --- ann.kmeans: every Lloyd iteration broadcasts the K-row
     # centroid table into the assignment join; vectors never shuffle
-    # for assignment (only the K-row centroid recompute aggregates)
-    p = plan_of(QUERIES["ivf_kmeans"](spark, SF))
-    sections.append(("ivf_kmeans (Lloyd iterations)", p))
+    # for assignment (only the K-row centroid recompute aggregates);
+    # `km` is the index built for the ann.ivf_search checks above
+    p = plan_of(km)
+    sections.append(("ann.kmeans (Lloyd iterations)", p))
     check("ivf_kmeans", "CartesianProduct" not in p,
           "no cartesian: centroids broadcast into the assignment join")
     check("ivf_kmeans", "BroadcastNestedLoopJoin" in p
