@@ -37,7 +37,7 @@ from .frontier.politeness import (
 )
 from .frontier.state import (
     RefetchConfig,
-    merge_seen,
+    resolve_split,
     seen_filter,
     seen_state,
     seen_updates,
@@ -500,23 +500,25 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     _SEEN_COLS = ["url_hash", "url", "host", "fetches", "last_fetch"]
 
-    def _seen_parts(self) -> tuple[DataFrame, DataFrame | None] | None:
-        """(bucketed base, post-compaction deltas) when the current seen
-        snapshot has that shape — a url_hash-bucketed compacted base as
-        its first data dir, flat round deltas after it. None otherwise
-        (before the first compaction, or a flat base from an older
-        engine) — callers fall back to the generic groupBy resolve."""
+    def _seen_parts(self) -> tuple[DataFrame | None, DataFrame | None]:
+        """(base, deltas) of the current seen snapshot. `base` is the
+        url_hash-bucketed compacted base when the snapshot's first data
+        dir is one and flat round deltas follow it, else None. `deltas`
+        is every other row: the deltas after that base (None right after
+        a compaction), or without it the whole snapshot (before the
+        first compaction, a flat base from an older engine, or an empty
+        table). Every delta row is newer than every base row."""
         man = self.seen_table.manifest()
-        if man is None or not man["files"]:
-            return None
-        meta = man.get("file_meta", {})
-        first, rest = man["files"][0], man["files"][1:]
-        if not meta.get(first, {}).get("bucket_table"):
-            return None
-        if any(meta.get(d, {}).get("bucket_table")
-               or meta.get(d, {}).get("partition_by") for d in rest):
-            return None                     # unexpected shape: be generic
-        base = self.seen_table.read_dir(first, man).select(*self._SEEN_COLS)
+        files = (man or {}).get("files") or []
+        meta = (man or {}).get("file_meta", {})
+        if (not files or not meta.get(files[0], {}).get("bucket_table")
+                or any(meta.get(d, {}).get("bucket_table")
+                       or meta.get(d, {}).get("partition_by")
+                       for d in files[1:])):
+            return None, self.seen_table.read(schema=SEEN_SCHEMA).select(
+                *self._SEEN_COLS)
+        base = self.seen_table.read_dir(files[0], man).select(*self._SEEN_COLS)
+        rest = files[1:]
         if not rest:
             return base, None
         # ONE multi-path relation, not a reduce of per-dir unions: a
@@ -538,28 +540,24 @@ class CrawlEngine:
         return base, deltas
 
     def seen(self) -> DataFrame:
-        """Current per-key seen state — merge-on-read: the table holds a
-        compacted base plus per-round update deltas (Iceberg MoR
-        pattern). Past the first compaction the base is url_hash-bucketed
-        and the resolve runs SPLIT — deltas resolve among themselves
-        (O(delta) shuffle) and anti-join into the base with no exchange
-        on the base side — instead of re-shuffling the whole table
-        through `seen_state`'s groupBy. Row-identical (parity-locked)."""
+        """Current per-key seen state — merge-on-read: the table holds an
+        optional compacted base plus per-round update deltas (Iceberg MoR
+        pattern). The deltas resolve among themselves (O(delta) shuffle)
+        and anti-join into the url_hash-bucketed base with no exchange on
+        the base side — the whole table never re-shuffles through
+        `seen_state`'s groupBy."""
         return self._seen_from_parts(self._seen_parts())
 
     def _seen_from_parts(
-        self, parts: tuple[DataFrame, DataFrame | None] | None
+        self, parts: tuple[DataFrame | None, DataFrame | None]
     ) -> DataFrame:
         """seen() given an already-resolved _seen_parts() — the round
         loop resolves parts ONCE and feeds both this and the gate."""
-        if parts is None:
-            return seen_state(self.seen_table.read(schema=SEEN_SCHEMA))
         base, deltas = parts
         if deltas is None:
             return base                     # freshly compacted: resolved
-        from .frontier.state import resolve_split
-
-        return resolve_split(base, seen_state(deltas))
+        newer = seen_state(deltas)
+        return newer if base is None else resolve_split(base, newer)
 
     def run_round(
         self,
@@ -616,11 +614,10 @@ class CrawlEngine:
         # predicate and stored last_fetch on a non-UTC machine
         if round_ts.tzinfo is None:
             round_ts = round_ts.replace(tzinfo=timezone.utc)
-        # parts resolved ONCE per round: seen(), the J1 gate, and the
-        # compaction merge all read the same split (or generic) view —
-        # no duplicate manifest reads / per-delta plan rebuilding
+        # parts resolved ONCE per round: the J1 gate and the compaction
+        # merge read the same (base, deltas) view — no duplicate manifest
+        # reads / per-delta plan rebuilding
         parts = self._seen_parts()
-        seen = self._seen_from_parts(parts)
 
         fr = self._assemble_frontier(seeds, round_ts)
         # keysrqd parity (refetchcontrol.py:231-232): the reference
@@ -632,7 +629,7 @@ class CrawlEngine:
         # history and re-fetching it from scratch every agelimit cycle
         requested_keys = fr.select("url_hash")
         eligible = self._observe(
-            self._seen_gate(self._robots_filter(fr), parts, seen, round_ts),
+            self._seen_gate(self._robots_filter(fr), parts, round_ts),
             "after_seen_gate")
         scheduled = self._observe(
             self._politeness(eligible, with_order_audit), "scheduled")
@@ -652,7 +649,7 @@ class CrawlEngine:
         fetched_keys = self.spark.read.parquet(self.last_delta_dir).select(
             "url_hash", "url_canon", "host",
             "previousfetches")  # column-pruned delta scan
-        self._commit_seen(parts, seen, fetched_keys, requested_keys,
+        self._commit_seen(parts, fetched_keys, requested_keys,
                           lineage, round_no, round_ts)
         _mark("seen_merge_commit")
         if self._update_bloom(fetched_keys, lineage, round_no):
@@ -773,28 +770,20 @@ class CrawlEngine:
             return robots_filter_df(fr, self.rules_df)
         return fr
 
-    def _seen_gate(self, fr: DataFrame, parts, seen: DataFrame,
+    def _seen_gate(self, fr: DataFrame, parts,
                    round_ts: datetime) -> DataFrame:
         """Seen-set gate: bloom pre-filter + authoritative join (J1).
         Definite-new URLs skip the join shuffle entirely; the filter is
         maintained incrementally across rounds (no per-round rebuild).
-        With a bucketed compacted base the gate runs SPLIT (frontier ×
-        base with no exchange on the base side + small resolved-delta
-        join) instead of joining the union-resolved table."""
-        cfg = self.cfg
-        if parts is not None:
-            from .frontier.state import seen_filter_split
+        The join runs SPLIT: frontier × bucketed base (no exchange on the
+        base side) + the small resolved-delta join, never against the
+        union-resolved table."""
+        base, deltas = parts
+        newer = seen_state(deltas) if deltas is not None else None
 
-            base, deltas = parts
-            newer = (seen_state(deltas) if deltas is not None
-                     else self.spark.createDataFrame([], SEEN_SCHEMA))
-
-            def gate(f):
-                return seen_filter_split(f, base, newer, cfg.refetch,
-                                         round_ts)
-        else:
-            def gate(f):
-                return seen_filter(f, seen, cfg.refetch, round_ts)
+        def gate(f):
+            return seen_filter(f, base, self.cfg.refetch, round_ts,
+                               newer=newer)
 
         if self.bloom is None:
             return gate(fr)
@@ -1049,7 +1038,7 @@ class CrawlEngine:
         out["per_partition_extracted"] = _footer_row_counts(data_dir)
         return out
 
-    def _commit_seen(self, parts, seen: DataFrame, fetched_keys: DataFrame,
+    def _commit_seen(self, parts, fetched_keys: DataFrame,
                      requested_keys: DataFrame, lineage: dict,
                      round_no: int, round_ts: datetime) -> None:
         """Seen MERGE (J2), merge-on-read. Normal rounds append only this
@@ -1057,8 +1046,12 @@ class CrawlEngine:
         10^10 keys a full rewrite per round is the dominant cost; Iceberg
         MoR has the same shape). Trim rounds (J3b) materialize full state
         anyway, so they double as the compaction: one replace-commit
-        folds base + deltas back into a single snapshot. trim_every=0 →
-        never compact (like expire_keep_last=0's keep-forever)."""
+        folds base + deltas back into a single snapshot: this round's
+        resolved updates carry round_ts, newer than every stored row, so
+        the compacted state is updates ∪ (seen ∖ update-keys) — no
+        groupBy over the full table (the bucketed WRITE below clusters it
+        once anyway). trim_every=0 → never compact (like
+        expire_keep_last=0's keep-forever)."""
         cfg = self.cfg
         rts_iso = round_ts.isoformat()
         if not (cfg.trim_every > 0 and round_no > 0
@@ -1074,18 +1067,8 @@ class CrawlEngine:
                 stats={"last_fetch_range": [rts_iso, rts_iso]},
             )
             return
-        if parts is not None:
-            # split-form MERGE: this round's resolved updates are strictly
-            # newer than every pre-round row, so the compacted state is
-            # updates ∪ (seen ∖ update-keys) — skips re-shuffling the full
-            # table through the groupBy (the bucketed WRITE below
-            # clusters it once anyway). Row-identical to merge_seen
-            # (parity-locked).
-            from .frontier.state import resolve_split
-
-            new_seen = resolve_split(seen, seen_updates(fetched_keys, round_ts))
-        else:
-            new_seen = merge_seen(seen, fetched_keys, round_ts)
+        new_seen = resolve_split(self._seen_from_parts(parts),
+                                 seen_updates(fetched_keys, round_ts))
         if cfg.refetch.trimdb:
             # protect the PRE-GATE requested keys, as the reference's
             # keysrqd does (refetchcontrol.py:150-193; see _run_round).

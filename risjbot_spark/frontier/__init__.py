@@ -1,9 +1,8 @@
-from .state import RefetchConfig, merge_seen, seen_filter, trawl_candidates, trim_seen
+from .state import RefetchConfig, seen_filter, trawl_candidates, trim_seen
 
 __all__ = [
     "RefetchConfig",
     "seen_filter",
-    "merge_seen",
     "trawl_candidates",
     "trim_seen",
 ]

@@ -5,8 +5,14 @@ Reimplements the reference's RefetchControl rules
 `seen` table — the crawl's core join (SURVEY.md §2.3 J1-J3):
 
   J1 seen_filter      _process_request   (refetchcontrol.py:227-279)
-  J2 merge_seen       _process_item      (refetchcontrol.py:281-316)
+  J2 seen_updates     _process_item      (refetchcontrol.py:281-316)
+     + resolve_split
   J3 trawl/trim       spider_idle        (refetchcontrol.py:132-195)
+
+The seen table is SPLIT: an optional url_hash-bucketed compacted base
+(one resolved row per key) and per-round resolved deltas, every delta
+row newer than every base row. J1 joins the frontier to each side and
+J2 appends a delta (or, on compaction, resolve_split folds one in).
 
 Scale notes (the 100 TB story):
   * J1 is an equi join on url_hash — hash-partitioned both sides; AQE
@@ -14,9 +20,10 @@ Scale notes (the 100 TB story):
     bloom pre-filter (frontier.bloom) removes definite-new URLs *before*
     this shuffle while the seen keys fit its driver budget; past it the
     (split, bucketed-base) join gates alone.
-  * J2 is expressed as union + hash aggregation (map-side combinable)
-    rather than a full-outer join — one shuffle, no join, and exactly the
-    Iceberg `MERGE INTO ... WHEN MATCHED UPDATE fetches+1` in SQL form.
+  * J2 appends resolved rows (fetches+1, round_ts) — the Iceberg
+    `MERGE INTO ... WHEN MATCHED UPDATE fetches+1` as a merge-on-read
+    delta; compaction is newer ∪ (base ∖ newer-keys), so the large side
+    stays in place instead of re-shuffling through a groupBy.
   * All time arithmetic uses a round timestamp passed as a LITERAL —
     never current_timestamp() inside distributed expressions — so rounds
     are deterministic and resumable (SURVEY.md §7).
@@ -24,7 +31,7 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
@@ -50,54 +57,59 @@ def _age_secs(round_ts: datetime):
 
 
 def seen_filter(
-    frontier: DataFrame, seen: DataFrame, cfg: RefetchConfig, round_ts: datetime
+    frontier: DataFrame, seen: DataFrame | None, cfg: RefetchConfig,
+    round_ts: datetime, newer: DataFrame | None = None,
 ) -> DataFrame:
     """J1 — the skip-before-fetch join. Keeps frontier rows that are
     first fetches, or refetch-eligible; annotates `previousfetches`.
 
+    `seen` holds one resolved row per key (a compacted base, or any
+    resolved view); `newer`, when given, holds resolved rows strictly
+    newer than `seen`'s wherever keys overlap (the resolved deltas).
+    Either may be None. The sides are NOT unioned first: a union node
+    discards the base scan's bucket distribution, forcing the join to
+    shuffle the whole seen table every round. Two left joins instead —
+    frontier × base (exchange on the frontier side only against a
+    bucketed base), then × the small newer table (broadcast-eligible) —
+    with newer values taking precedence. Output ≡
+    seen_filter(frontier, resolve_split(seen, newer)) (parity-locked).
+
     Predicate order matches _process_request: drop when
     fetches >= maxfetches OR age < refetchsecs OR age > agelimit."""
     age = _age_secs(round_ts)
-    j = frontier.join(
-        seen.select("url_hash", "fetches", "last_fetch"), "url_hash", "left_outer"
-    )
-    first_fetch = F.col("fetches").isNull()
+    j, fs, ls = frontier, [], []
+    for i, side in enumerate(s for s in (seen, newer) if s is not None):
+        j = j.join(side.select("url_hash", F.col("fetches").alias(f"_f{i}"),
+                               F.col("last_fetch").alias(f"_l{i}")),
+                   "url_hash", "left_outer")
+        fs.insert(0, f"_f{i}")      # newest side first: it supersedes
+        ls.insert(0, f"_l{i}")
+    # the trailing NULL keeps coalesce well-formed with no side at all;
+    # the optimizer drops it (and a one-argument coalesce) from the plan
+    fetches = F.coalesce(*fs, F.lit(None).cast("int"))
+    last_fetch = F.coalesce(*ls, F.lit(None).cast("timestamp"))
+    first_fetch = fetches.isNull()
     refetch_ok = (
-        (F.col("fetches") < cfg.maxfetches)
-        & (age(F.col("last_fetch")) >= cfg.refetchsecs)
-        & (age(F.col("last_fetch")) <= cfg.age_limit_secs)
+        (fetches < cfg.maxfetches)
+        & (age(last_fetch) >= cfg.refetchsecs)
+        & (age(last_fetch) <= cfg.age_limit_secs)
     )
     return (
         j.filter(first_fetch | refetch_ok)
-        .withColumn("previousfetches", F.coalesce(F.col("fetches"), F.lit(0)).cast("int"))
-        .drop("fetches", "last_fetch")
+        .withColumn("previousfetches", F.coalesce(fetches, F.lit(0)).cast("int"))
+        .drop(*fs, *ls)
     )
 
 
-def seen_updates(fetched: DataFrame, round_ts: datetime,
-                 seen: DataFrame | None = None) -> DataFrame:
+def seen_updates(fetched: DataFrame, round_ts: datetime) -> DataFrame:
     """One round's seen-table delta as RESOLVED rows: (url_hash, url,
     host, previousfetches+1, round_ts) per fetched key — the Iceberg
     MoR equality-upsert analogue, where a key's NEWEST row is its
     complete state. O(round keys) to write, and — because no cross-delta
     sum is needed to resolve — old files can be pruned from reads whose
     predicate bounds last_fetch (the trawl; see
-    trawl_candidates_pruned). `previousfetches` is free at fetch time
-    (seen_filter annotates it); callers without it pass `seen` and the
-    prior count joins on (O(round) × resolved view)."""
-    if "previousfetches" not in fetched.columns:
-        if seen is None:
-            raise ValueError(
-                "fetched lacks previousfetches; pass seen to derive it")
-        fetched = (
-            fetched.join(
-                seen.select("url_hash", F.col("fetches").alias("_pf")),
-                "url_hash", "left_outer")
-            .withColumn(
-                "previousfetches",
-                F.coalesce(F.col("_pf"), F.lit(0)).cast("int"))
-            .drop("_pf")
-        )
+    trawl_candidates_pruned). `previousfetches` is free at fetch time:
+    seen_filter annotates it and the articles delta carries it."""
     return (
         fetched.select(
             "url_hash",
@@ -143,60 +155,6 @@ def resolve_split(base: DataFrame, newer: DataFrame) -> DataFrame:
     (parity-locked in tests)."""
     return newer.unionByName(
         base.join(newer.select("url_hash"), "url_hash", "left_anti"))
-
-
-def seen_filter_split(
-    frontier: DataFrame, base: DataFrame, newer: DataFrame,
-    cfg: RefetchConfig, round_ts: datetime,
-) -> DataFrame:
-    """J1 against the split representation WITHOUT unioning base and
-    deltas first: a union node discards the base scan's bucket
-    distribution, forcing the gate join to shuffle the whole seen table
-    every round. Two left joins instead — frontier × bucketed base
-    (exchange on the frontier side only), then × the small resolved
-    delta table (broadcast-eligible) — with delta values taking
-    precedence (resolved rows: newest wins). Output ≡
-    seen_filter(frontier, resolve_split(base, newer)) (parity-locked)."""
-    age = _age_secs(round_ts)
-    b = base.select("url_hash", F.col("fetches").alias("_bf"),
-                    F.col("last_fetch").alias("_bl"))
-    d = newer.select("url_hash", F.col("fetches").alias("_df"),
-                     F.col("last_fetch").alias("_dl"))
-    j = (
-        frontier.join(b, "url_hash", "left_outer")
-        .join(d, "url_hash", "left_outer")
-        .withColumn("fetches", F.coalesce("_df", "_bf"))
-        .withColumn("last_fetch", F.coalesce("_dl", "_bl"))
-    )
-    first_fetch = F.col("fetches").isNull()
-    refetch_ok = (
-        (F.col("fetches") < cfg.maxfetches)
-        & (age(F.col("last_fetch")) >= cfg.refetchsecs)
-        & (age(F.col("last_fetch")) <= cfg.age_limit_secs)
-    )
-    return (
-        j.filter(first_fetch | refetch_ok)
-        .withColumn("previousfetches",
-                    F.coalesce(F.col("fetches"), F.lit(0)).cast("int"))
-        .drop("fetches", "last_fetch", "_bf", "_bl", "_df", "_dl")
-    )
-
-
-def merge_seen(
-    seen: DataFrame, fetched: DataFrame, round_ts: datetime
-) -> DataFrame:
-    """J2 — fetch-history upsert: `INSERT OR REPLACE ... fetches+1, now()`
-    (refetchcontrol.py:302-313) as a single hash aggregation — the
-    compaction path (copy-on-write form of the MERGE).
-
-    Iceberg SQL equivalent (production):
-      MERGE INTO seen s USING fetched f ON s.url_hash = f.url_hash
-      WHEN MATCHED THEN UPDATE SET fetches = s.fetches + 1, last_fetch = :ts
-      WHEN NOT MATCHED THEN INSERT (url_hash, url, host, fetches, last_fetch)
-      VALUES (f.url_hash, f.url_canon, f.host, 1, :ts)
-    """
-    return seen_state(
-        seen.unionByName(seen_updates(fetched, round_ts, seen=seen)))
 
 
 def trawl_candidates(

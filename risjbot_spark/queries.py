@@ -149,7 +149,7 @@ def q_refetch_eligibility(spark, sf):
 def q_merge_upsert(spark, sf):
     """J2 MERGE semantics as union + hash agg: old state (events before
     cutoff) merged with updates (events after): fetches summed, last ts
-    wins — the exact merge_seen() shape."""
+    wins — the union + hash-agg form of seen_state()."""
     ev = _t(spark, sf, "events")
     cutoff = F.to_timestamp(F.lit("2024-01-02 00:00:00"))
     old = ev.filter(F.col("ts") < cutoff)

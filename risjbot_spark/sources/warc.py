@@ -609,7 +609,9 @@ def records_df_to_warc_files(df: DataFrame, *, n_files: int,
         F.pmod(F.xxhash64("url"), F.lit(n_files)).cast("int")
          .alias("file_id"))
 
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # every argument hinted (or none): a partial hint makes
+    # applyInPandas warn that it cannot infer the eval type
+    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["url", "warc_ts"], kind="mergesort")
         members = []
         cdx = []

@@ -71,7 +71,7 @@ def stateful_refetch_gate(
     Emits one row per candidate with the RefetchControl decision
     (first fetch / refetch / skip) and updates (fetches, last_fetch) for
     allowed rows — the arbitrary-stateful-op twin of the batch
-    seen_filter + merge_seen pair. Event time = discovered_ts."""
+    seen_filter + seen_updates pair. Event time = discovered_ts."""
     age_limit = agelimit or maxfetches * refetchsecs
 
     def gate(key, pdfs, state: GroupState):

@@ -11,8 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from risjbot_spark.frontier.politeness import RobotsRules, parse_robots
-from risjbot_spark.frontier.state import RefetchConfig, merge_seen, seen_filter, \
-    trawl_candidates, trim_seen
+from risjbot_spark.frontier.state import RefetchConfig, resolve_split, \
+    seen_filter, seen_updates, trawl_candidates, trim_seen
 from risjbot_spark.frontier.xxhash import xxhash64
 from risjbot_spark.schema import SEEN_SCHEMA
 
@@ -66,14 +66,16 @@ def test_seen_filter_rules(spark):
 
 
 def test_merge_seen_upsert(spark):
-    """J2: INSERT OR REPLACE with fetches+1 (refetchcontrol.py:302-313)."""
+    """J2: INSERT OR REPLACE with fetches+1 (refetchcontrol.py:302-313),
+    in the compaction form: resolved updates ∪ (seen ∖ update-keys).
+    `fetched` carries previousfetches as the seen gate annotates it."""
     seen = _seen(spark, [("https://h1/a", 2, T0 - timedelta(hours=2))])
     fetched = spark.createDataFrame(
-        [(xxhash64("https://h1/a"), "https://h1/a", "h1"),
-         (xxhash64("https://h1/b"), "https://h1/b", "h1")],
-        "url_hash long, url_canon string, host string",
+        [(xxhash64("https://h1/a"), "https://h1/a", "h1", 2),
+         (xxhash64("https://h1/b"), "https://h1/b", "h1", 0)],
+        "url_hash long, url_canon string, host string, previousfetches int",
     )
-    merged = merge_seen(seen, fetched, T0)
+    merged = resolve_split(seen, seen_updates(fetched, T0))
     got = {r["url"]: r["fetches"] for r in merged.collect()}
     assert got["https://h1/a"] == 3
     assert got["https://h1/b"] == 1

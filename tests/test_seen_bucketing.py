@@ -1,9 +1,11 @@
-"""Bucketed seen base (Iceberg bucket(N, url_hash) analogue): the J1
-gate and the MoR resolve must be row-identical to the generic paths,
-shuffle-free on the base side, and resumable across catalogs."""
+"""Bucketed seen base (Iceberg bucket(N, url_hash) analogue): the split
+J1 gate and the MoR resolve must be row-identical to the groupBy
+latest-wins resolve, with or without a base, shuffle-free on the base
+side, and resumable across catalogs."""
 
 from datetime import datetime, timedelta, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from risjbot_spark.corpus import host_lang_for, pages_df, pathway_for, url_for
@@ -13,8 +15,8 @@ from risjbot_spark.frontier.state import (
     RefetchConfig,
     resolve_split,
     seen_filter,
-    seen_filter_split,
     seen_state,
+    seen_updates,
 )
 from risjbot_spark.frontier.xxhash import xxhash64
 from risjbot_spark.schema import SEEN_SCHEMA
@@ -76,7 +78,7 @@ def test_seen_filter_split_equals_seen_filter(spark):
     ts = datetime(2017, 4, 2, 2, 0, tzinfo=timezone.utc)
     merged = resolve_split(base, newer)
     a = seen_filter(frontier, merged, cfg, ts)
-    b = seen_filter_split(frontier, base, newer, cfg, ts)
+    b = seen_filter(frontier, base, cfg, ts, newer=newer)
     key = lambda df: sorted(
         (r.url_hash, r.previousfetches) for r in df.collect())
     assert key(a) == key(b)
@@ -88,6 +90,90 @@ def test_seen_filter_split_equals_seen_filter(spark):
                         xxhash64("https://h2.example.com/c"),
                         xxhash64("https://h1.example.com/zz")}
     assert got[xxhash64("https://h1.example.com/zz")] == 0
+
+
+@pytest.mark.parametrize("sides", ["base", "newer", "both", "neither"])
+def test_seen_filter_optional_sides_parity(spark, sides):
+    """seen_filter over (base | None, newer | None) gates exactly as the
+    single join against resolve_split(base, newer), an absent side read
+    as an empty table — the one J1 path before the first compaction
+    (newer only), right after one (base only) and between them."""
+    base = _seen_rows(spark, [
+        ("a", 1, "2017-04-01 12:00:00"),     # eligible (age 14h)
+        ("b", 8, "2017-04-01 12:00:00"),     # maxfetches reached
+        ("c", 1, "2017-04-01 20:00:00"),     # too young (age 6h)
+    ])
+    newer = _seen_rows(spark, [
+        ("a", 2, "2017-04-02 01:30:00"),     # h0/a supersedes: too young
+        ("d", 2, "2017-04-01 12:00:00"),     # h1/d: eligible, newer only
+    ])
+    empty = spark.createDataFrame([], SEEN_SCHEMA)
+    b = base if sides in ("base", "both") else None
+    n = newer if sides in ("newer", "both") else None
+    frontier = spark.createDataFrame(
+        [(xxhash64(f"https://h{i}.example.com/{k}"),
+          f"https://h{i}.example.com/{k}", f"h{i}.example.com")
+         for i in range(3) for k in ("a", "b", "c", "d", "zz")],
+        "url_hash long, url_canon string, host string")
+    cfg = RefetchConfig()
+    ts = datetime(2017, 4, 2, 2, 0, tzinfo=timezone.utc)
+    key = lambda df: sorted(
+        (r.url_hash, r.previousfetches) for r in df.collect())
+    got = key(seen_filter(frontier, b, cfg, ts, newer=n))
+    want = key(seen_filter(
+        frontier, resolve_split(base if b is not None else empty,
+                                newer if n is not None else empty),
+        cfg, ts))
+    assert got == want
+    assert len(got) < 15 or sides == "neither"   # the gate dropped rows
+    if sides == "neither":
+        assert got == sorted((r.url_hash, 0) for r in frontier.collect())
+
+
+def test_compaction_without_base_equals_seen_state(spark, tmp_path):
+    """A never-compacted warehouse (round deltas only, no base) compacts
+    through the same resolve_split as a bucketed one: the written base
+    equals seen_state(seen ∪ updates) row-for-row and is bucketed."""
+    ts = [START + timedelta(seconds=10801 * r) for r in range(3)]
+    wh = str(tmp_path / "wh")
+    seen_table = SnapshotTable(spark, wh, "seen")
+    urls = [url_for(i) for i in range(12)]
+    fk = "url_hash long, url_canon string, host string, previousfetches int"
+
+    def fetched(rows):
+        return spark.createDataFrame(
+            [(xxhash64(u), u, host_py(u), pf) for u, pf in rows], fk)
+
+    for r, rows in ((0, [(u, 0) for u in urls[:8]]),
+                    (1, [(u, 1) for u in urls[:3]]
+                     + [(u, 0) for u in urls[8:10]])):
+        seen_table.commit(
+            seen_updates(fetched(rows), ts[r]),
+            lineage={"round": r, "round_ts": ts[r].isoformat(),
+                     "seen_format": CrawlEngine.SEEN_FORMAT},
+            mode="append")
+    before = seen_table.read().select(*CrawlEngine._SEEN_COLS)
+    before_rows = before.collect()
+    eng = CrawlEngine(spark, wh, pages_df(spark, 12, partitions=2), None,
+                      CrawlConfig(refetch=RefetchConfig(trimdb=False),
+                                  num_partitions=4, trim_every=2,
+                                  use_bloom=False))
+    parts = eng._seen_parts()
+    assert parts[0] is None and parts[1] is not None
+    upd_rows = [(u, 2) for u in urls[:2]] + [(u, 1) for u in urls[8:9]] \
+        + [(u, 0) for u in urls[10:]]
+    eng.last_delta_dir = str(tmp_path / "delta")
+    fetched(upd_rows).write.parquet(eng.last_delta_dir)
+    eng._commit_seen(parts, spark.read.parquet(eng.last_delta_dir),
+                     spark.createDataFrame([], "url_hash long"), {}, 2, ts[2])
+    want = seen_state(
+        spark.createDataFrame(before_rows, SEEN_SCHEMA)
+        .unionByName(seen_updates(fetched(upd_rows), ts[2])))
+    key = lambda df: sorted(map(tuple, df.select(*eng._SEEN_COLS).collect()))
+    assert key(eng.seen()) == key(want)
+    assert {r.url: r.fetches for r in eng.seen().collect()}[urls[0]] == 3
+    base, deltas = eng._seen_parts()
+    assert base is not None and deltas is None
 
 
 def _run_engine(spark, wh, pages, seeds, rounds=6, **cfg_kw):
@@ -148,8 +234,9 @@ def _parity_with_oracle(spark, tmp_path, **cfg_kw):
         if r % eng.cfg.trim_every == 0:
             orc.trim(requested, ts)
     assert _seen_fetches(eng) == {u: nf for u, (nf, _) in orc.seen.items()}
-    # the engine actually produced the split shape
-    assert eng._seen_parts() is not None
+    # the engine actually produced a bucketed base with deltas after it
+    base, deltas = eng._seen_parts()
+    assert base is not None and deltas is not None
     return eng
 
 
@@ -196,7 +283,8 @@ def test_resume_from_flat_base_compacts_bucketed(spark, tmp_path):
     pages = pages_df(spark, n, partitions=4)
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     eng = CrawlEngine(spark, wh, pages, None, cfg)
-    assert eng._seen_parts() is None             # flat: generic resolve
+    base, deltas = eng._seen_parts()             # flat: all rows deltas
+    assert base is None and deltas is not None
     key = lambda df: sorted(map(tuple, df.select(*eng._SEEN_COLS).collect()))
     assert key(eng.seen()) == key(seen_state(rows))
 
@@ -212,7 +300,8 @@ def test_resume_from_flat_base_compacts_bucketed(spark, tmp_path):
     assert man["files"] and man["lineage"]["compacted"]
     meta = man["file_meta"][man["files"][0]]
     assert meta["bucket_table"] and meta["n_buckets"] == 1
-    assert eng._seen_parts() is not None
+    base, deltas = eng._seen_parts()
+    assert base is not None and deltas is None   # just compacted
     orc.trim({canonicalize_py(s["url"]) for s in seed_rows}, ts[3])
     assert _seen_fetches(eng) == {u: nf for u, (nf, _) in orc.seen.items()}
 
@@ -229,8 +318,8 @@ def test_gate_plan_no_exchange_on_base_side(spark, tmp_path):
     frontier = spark.createDataFrame(
         [(xxhash64(url_for(i)), url_for(i), "h") for i in range(30)],
         "url_hash long, url_canon string, host string")
-    gated = seen_filter_split(frontier, base, newer, RefetchConfig(),
-                              START + timedelta(days=2))
+    gated = seen_filter(frontier, base, RefetchConfig(),
+                        START + timedelta(days=2), newer=newer)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         plan = gated._jdf.queryExecution().executedPlan().toString()

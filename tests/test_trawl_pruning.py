@@ -126,18 +126,6 @@ def test_resolved_delta_replay_is_idempotent(spark, tmp_path):
     assert got == {"https://h1/a": 3}
 
 
-def test_seen_updates_derives_previousfetches_from_seen(spark):
-    """Callers without the previousfetches column get it joined on."""
-    seen = _rows(spark, [("https://h1/a", 4, T0 - timedelta(hours=8))])
-    fetched = spark.createDataFrame(
-        [(xxhash64("https://h1/a"), "https://h1/a", "h1"),
-         (12345, "https://h1/new", "h1")],
-        "url_hash long, url_canon string, host string")
-    got = {r.url: r.fetches
-           for r in seen_updates(fetched, T0, seen=seen).collect()}
-    assert got == {"https://h1/a": 5, "https://h1/new": 1}
-
-
 def test_trawl_pruning_correct_under_non_utc_driver_tz(tmp_path):
     """REGRESSION: the window cutoffs were naive datetimes, which PySpark
     converts through the driver's OS timezone — on a non-UTC driver the

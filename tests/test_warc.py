@@ -184,6 +184,22 @@ def test_write_warc_routing_is_partitioning_independent(spark, tmp_path):
     assert fa == fb
 
 
+def test_warc_files_plan_infers_eval_type_without_warning(spark):
+    """Building the writer's applyInPandas plan must not warn that the
+    eval type cannot be inferred from type hints (a half-hinted grouped
+    function did, once per write_warc call)."""
+    import warnings
+
+    df = spark.createDataFrame(
+        [(u, t, b) for u, t, b in _mk_pages(2)],
+        "url string, warc_ts timestamp, payload binary")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        W.records_df_to_warc_files(df, n_files=2)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)
+                and "infer the eval type" in str(w.message)]
+
+
 def test_negative_content_length_cannot_loop():
     evil = (b"WARC/1.0\r\nWARC-Type: response\r\n"
             b"WARC-Target-URI: https://a.org/x\r\n"
