@@ -37,14 +37,16 @@ from .frontier.politeness import (
 )
 from .frontier.state import (
     RefetchConfig,
+    resolve_parts,
     resolve_split,
     seen_filter,
+    seen_parts,
     seen_state,
     seen_updates,
     trawl_candidates_pruned,
     trim_seen,
 )
-from .schema import HTTP_DATE_FMT, SEEN_SCHEMA
+from .schema import HTTP_DATE_FMT
 from .store import SnapshotTable
 from .udfs import extract_article_udf
 from .urlnorm import with_canonical
@@ -498,66 +500,12 @@ class CrawlEngine:
         os.replace(tmp, path)
 
     # ------------------------------------------------------------------
-    _SEEN_COLS = ["url_hash", "url", "host", "fetches", "last_fetch"]
-
-    def _seen_parts(self) -> tuple[DataFrame | None, DataFrame | None]:
-        """(base, deltas) of the current seen snapshot. `base` is the
-        url_hash-bucketed compacted base when the snapshot's first data
-        dir is one and flat round deltas follow it, else None. `deltas`
-        is every other row: the deltas after that base (None right after
-        a compaction), or without it the whole snapshot (before the
-        first compaction, a flat base from an older engine, or an empty
-        table). Every delta row is newer than every base row."""
-        man = self.seen_table.manifest()
-        files = (man or {}).get("files") or []
-        meta = (man or {}).get("file_meta", {})
-        if (not files or not meta.get(files[0], {}).get("bucket_table")
-                or any(meta.get(d, {}).get("bucket_table")
-                       or meta.get(d, {}).get("partition_by")
-                       for d in files[1:])):
-            return None, self.seen_table.read(schema=SEEN_SCHEMA).select(
-                *self._SEEN_COLS)
-        base = self.seen_table.read_dir(files[0], man).select(*self._SEEN_COLS)
-        rest = files[1:]
-        if not rest:
-            return base, None
-        # ONE multi-path relation, not a reduce of per-dir unions: a
-        # union chain grows the plan by a node per round, re-analyzed by
-        # every consumer on the round critical path. The multi-path read
-        # samples ONE footer for the schema, so a deficient dir (older /
-        # divergent writer missing a _SEEN_COL) would silently null-fill
-        # instead of failing analysis — check each dir's columns once
-        # here (driver-side footer read, ≤ trim_every dirs) to keep the
-        # per-dir read's loud failure mode
-        expected = set(self._SEEN_COLS)
-        for d in rest:
-            missing = expected - set(self.spark.read.parquet(d).columns)
-            if missing:
-                raise RuntimeError(
-                    f"seen delta dir {d} lacks column(s) {sorted(missing)}"
-                    " — written by an incompatible engine version?")
-        deltas = self.spark.read.parquet(*rest).select(*self._SEEN_COLS)
-        return base, deltas
-
     def seen(self) -> DataFrame:
         """Current per-key seen state — merge-on-read: the table holds an
         optional compacted base plus per-round update deltas (Iceberg MoR
-        pattern). The deltas resolve among themselves (O(delta) shuffle)
-        and anti-join into the url_hash-bucketed base with no exchange on
-        the base side — the whole table never re-shuffles through
-        `seen_state`'s groupBy."""
-        return self._seen_from_parts(self._seen_parts())
-
-    def _seen_from_parts(
-        self, parts: tuple[DataFrame | None, DataFrame | None]
-    ) -> DataFrame:
-        """seen() given an already-resolved _seen_parts() — the round
-        loop resolves parts ONCE and feeds both this and the gate."""
-        base, deltas = parts
-        if deltas is None:
-            return base                     # freshly compacted: resolved
-        newer = seen_state(deltas)
-        return newer if base is None else resolve_split(base, newer)
+        pattern), resolved by frontier.state.resolve_parts without
+        re-shuffling the whole table through `seen_state`'s groupBy."""
+        return resolve_parts(self.spark, seen_parts(self.seen_table))
 
     def run_round(
         self,
@@ -617,7 +565,7 @@ class CrawlEngine:
         # parts resolved ONCE per round: the J1 gate and the compaction
         # merge read the same (base, deltas) view — no duplicate manifest
         # reads / per-delta plan rebuilding
-        parts = self._seen_parts()
+        parts = seen_parts(self.seen_table)
 
         fr = self._assemble_frontier(seeds, round_ts)
         # keysrqd parity (refetchcontrol.py:231-232): the reference
@@ -1067,7 +1015,7 @@ class CrawlEngine:
                 stats={"last_fetch_range": [rts_iso, rts_iso]},
             )
             return
-        new_seen = resolve_split(self._seen_from_parts(parts),
+        new_seen = resolve_split(resolve_parts(self.spark, parts),
                                  seen_updates(fetched_keys, round_ts))
         if cfg.refetch.trimdb:
             # protect the PRE-GATE requested keys, as the reference's

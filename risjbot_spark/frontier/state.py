@@ -7,12 +7,15 @@ Reimplements the reference's RefetchControl rules
   J1 seen_filter      _process_request   (refetchcontrol.py:227-279)
   J2 seen_updates     _process_item      (refetchcontrol.py:281-316)
      + resolve_split
-  J3 trawl/trim       spider_idle        (refetchcontrol.py:132-195)
+  J3 trawl_candidates_pruned / trim_seen
+                      spider_idle        (refetchcontrol.py:132-195)
 
-The seen table is SPLIT: an optional url_hash-bucketed compacted base
-(one resolved row per key) and per-round resolved deltas, every delta
-row newer than every base row. J1 joins the frontier to each side and
-J2 appends a delta (or, on compaction, resolve_split folds one in).
+The seen table is SPLIT: an optional compacted base (one resolved row
+per key; url_hash-bucketed, lf_day-partitioned) and per-round resolved
+deltas, every delta row newer than every base row. seen_parts is its
+one reader and resolve_parts its one resolve: J1 joins the frontier to
+each side, J2 appends a delta (or, on compaction, resolve_split folds
+one in), and the J3a trawl resolves only the parts its window can touch.
 
 Scale notes (the 100 TB story):
   * J1 is an equi join on url_hash — hash-partitioned both sides; AQE
@@ -31,11 +34,16 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..schema import SEEN_SCHEMA
+
+SEEN_COLS = SEEN_SCHEMA.fieldNames()
 
 
 @dataclass(frozen=True)
@@ -107,8 +115,9 @@ def seen_updates(fetched: DataFrame, round_ts: datetime) -> DataFrame:
     MoR equality-upsert analogue, where a key's NEWEST row is its
     complete state. O(round keys) to write, and — because no cross-delta
     sum is needed to resolve — old files can be pruned from reads whose
-    predicate bounds last_fetch (the trawl; see
-    trawl_candidates_pruned). `previousfetches` is free at fetch time:
+    predicate bounds last_fetch (the trawl reads seen_parts(since=);
+    the manifest's last_fetch_range on each delta, the round timestamp,
+    lets it skip a dir whole). `previousfetches` is free at fetch time:
     seen_filter annotates it and the articles delta carries it."""
     return (
         fetched.select(
@@ -157,6 +166,82 @@ def resolve_split(base: DataFrame, newer: DataFrame) -> DataFrame:
         base.join(newer.select("url_hash"), "url_hash", "left_anti"))
 
 
+def _utc(ts: datetime) -> datetime:
+    return (ts.replace(tzinfo=timezone.utc) if ts.tzinfo is None
+            else ts.astimezone(timezone.utc))
+
+
+def _parquet_columns(data_dir: str) -> set:
+    """Column names of one parquet footer in data_dir — a driver-side
+    metadata read, no Spark job; empty when the dir holds no data file."""
+    import pyarrow.parquet as pq
+
+    for fn in sorted(os.listdir(data_dir)):
+        if fn.endswith(".parquet"):
+            return set(pq.read_schema(os.path.join(data_dir, fn)).names)
+    return set()
+
+
+def seen_parts(seen_table, since: datetime | None = None):
+    """(base, deltas) of the current seen snapshot — the one reader of
+    the seen table: the J1 gate, compaction and the J3a trawl all start
+    here. `base` is the first data dir when it is a compaction output
+    (url_hash-bucketed, or lf_day-partitioned as older engines wrote it
+    flat): one resolved row per key. `deltas` is the flat round dirs
+    after it, or every dir if the table was never compacted. Either is
+    None when absent; every delta row is newer than every base row.
+
+    `since` lets the read skip rows whose last_fetch is at or before
+    it: base days before since's date by lf_day partition pruning, a
+    delta dir whole when its manifest last_fetch_range ends at or
+    before `since` (a dir without the range is read)."""
+    man = seen_table.manifest() or {}
+    files = man.get("files") or []
+    meta = man.get("file_meta", {})
+    since = None if since is None else _utc(since)
+    base = None
+    if files and (meta.get(files[0], {}).get("bucket_table")
+                  or meta.get(files[0], {}).get("partition_by")):
+        base = seen_table.read_dir(files[0], man)
+        if since is not None:
+            base = base.filter(F.col("lf_day") >= F.lit(since.date()))
+        base = base.select(*SEEN_COLS)
+        files = files[1:]
+    if since is not None:
+        files = [d for d in files
+                 if "last_fetch_range" not in meta.get(d, {})
+                 or _utc(datetime.fromisoformat(
+                     meta[d]["last_fetch_range"][1])) > since]
+    if not files:
+        return base, None
+    # ONE multi-path relation with the known schema, not a union per
+    # dir: a union chain grows the plan by a node per round, and schema
+    # inference costs a Spark job. An explicit schema null-fills a
+    # column a deficient dir (older / divergent writer) lacks, so check
+    # each dir's footer here to keep the loud failure
+    for d in files:
+        missing = set(SEEN_COLS) - _parquet_columns(d)
+        if missing:
+            raise RuntimeError(
+                f"seen delta dir {d} lacks column(s) {sorted(missing)}"
+                " — written by an incompatible engine version?")
+    return base, seen_table.spark.read.schema(SEEN_SCHEMA).parquet(*files)
+
+
+def resolve_parts(spark, parts) -> DataFrame:
+    """Current per-key state from seen_parts() — merge-on-read: the
+    deltas resolve among themselves (O(delta) shuffle) and anti-join
+    into the base with no exchange on a bucketed base's side."""
+    base, deltas = parts
+    if deltas is None:
+        # limit(0): the optimizer folds an empty table away, where a bare
+        # empty createDataFrame plans an RDD scan into every consumer
+        return base if base is not None else spark.createDataFrame(
+            [], SEEN_SCHEMA).limit(0)
+    newer = seen_state(deltas)
+    return newer if base is None else resolve_split(base, newer)
+
+
 def trawl_candidates(
     seen: DataFrame, cfg: RefetchConfig, round_ts: datetime
 ) -> DataFrame:
@@ -174,97 +259,23 @@ def trawl_candidates(
 
 def trawl_candidates_pruned(
     spark, seen_table, cfg: RefetchConfig, round_ts: datetime
-):
+) -> DataFrame:
     """J3a with FILE-LEVEL pruning — the min/max pruning SURVEY §4
     promises (reference's sqlite index scan, refetchcontrol.py:113-115,
-    becomes Iceberg-style manifest/partition pruning).
-
-    Sound because delta rows are RESOLVED (seen_updates): a key's newest
-    row carries its full state, so the scan only needs files that can
-    contain (a) rows inside the trawl window [round_ts-agelimit,
-    round_ts-refetchsecs] — candidate sources — and (b) rows newer than
-    the window — excluders, keys whose resolved last_fetch is too fresh.
-    Files wholly OLDER than the window never matter: every row in them
-    is superseded or out-of-window. Per manifest entry:
-      * flat delta dirs carry a last_fetch range in the manifest (the
-        round timestamp, constant per delta) → whole-file skip;
-      * the compacted base is written partitioned by lf_day → Spark
-        partition pruning skips day directories inside it.
-    At 10^10 keys with mostly-cold history this reads the recent tail of
-    the table instead of all of it. Output ≡ trawl_candidates(seen())
-    row-for-row (parity-tested)."""
-    man = seen_table.manifest()
-    age = _age_secs(round_ts)
-    if man is None or not man["files"]:
-        from ..schema import SEEN_SCHEMA
-
-        return spark.createDataFrame([], SEEN_SCHEMA).limit(0)
-    if not cfg.refetchfromdb:
-        return seen_table.read().select(
-            "url_hash", "url", "host", "fetches", "last_fetch").limit(0)
-    # tz-AWARE cutoffs: a naive datetime literal goes through the
-    # driver's OS timezone (time.mktime) on its way into the plan, so a
-    # non-UTC driver would shift the window and silently diverge from
-    # the unpruned path; aware datetimes convert to true UTC instants
-    rts = (round_ts if round_ts.tzinfo is not None
-           else round_ts.replace(tzinfo=timezone.utc))
-    lo = rts - timedelta(seconds=cfg.age_limit_secs)   # exclusive
-    hi = rts - timedelta(seconds=cfg.refetchsecs)      # inclusive
-    cols = ["url_hash", "url", "host", "fetches", "last_fetch"]
-    meta = man.get("file_meta", {})
-    window_srcs, newer_srcs = [], []
-    for d in man["files"]:
-        m = meta.get(d, {})
-        pby = m.get("partition_by")
-        rng = m.get("last_fetch_range")
-        if pby:
-            # read_dir: a bucketed base must resolve through the catalog
-            # (schema + partition listing live there; the dir may even be
-            # file-free when the compacted state was empty)
-            df = seen_table.read_dir(d, man)
-            day = F.col(pby[0])
-            window_srcs.append(
-                df.filter(day.between(F.lit(lo.date()), F.lit(hi.date())))
-                .select(*cols))
-            newer_srcs.append(
-                df.filter(day >= F.lit(hi.date())).select(*cols))
-        elif rng:
-            mn = datetime.fromisoformat(rng[0])
-            mx = datetime.fromisoformat(rng[1])
-            mn = mn if mn.tzinfo else mn.replace(tzinfo=timezone.utc)
-            mx = mx if mx.tzinfo else mx.replace(tzinfo=timezone.utc)
-            if mx > lo and mn <= hi:
-                window_srcs.append(seen_table.read_dir(d, man).select(*cols))
-            if mx > hi:
-                newer_srcs.append(seen_table.read_dir(d, man).select(*cols))
-        else:  # legacy dir without stats: cannot prune, read for both
-            df = seen_table.read_dir(d, man).select(*cols)
-            window_srcs.append(df)
-            newer_srcs.append(df)
-
-    from functools import reduce
-
-    if not window_srcs:
-        from ..schema import SEEN_SCHEMA
-
-        return spark.createDataFrame([], SEEN_SCHEMA).limit(0)
-    window = reduce(lambda a, b: a.unionByName(b), window_srcs)
-    # latest-wins within the window subset is the key's true state: its
-    # globally-newest row is in-window for every surviving candidate
-    # (a newer-than-window row would anti-join it away below)
-    cand = seen_state(window).filter(
-        (age(F.col("last_fetch")) >= cfg.refetchsecs)
-        & (age(F.col("last_fetch")) < cfg.age_limit_secs)
-        & (F.col("fetches") < cfg.maxfetches)
-    )
-    if newer_srcs:
-        newer = reduce(lambda a, b: a.unionByName(b), newer_srcs)
-        fresh_keys = (
-            newer.filter(F.col("last_fetch") > F.lit(hi).cast("timestamp"))
-            .select("url_hash").distinct()
-        )
-        cand = cand.join(fresh_keys, "url_hash", "left_anti")
-    return cand
+    becomes Iceberg-style manifest/partition pruning): the trawl over
+    seen_parts(since=round_ts - agelimit). Exact because a key's newest
+    row decides its state and deltas are newer than the base, so a row
+    at or before the window's old edge can be neither a candidate nor
+    the row that excludes one. At 10^10 keys with mostly-cold history
+    this reads the recent tail of the table instead of all of it.
+    Output ≡ trawl_candidates(seen()) row-for-row (parity-tested)."""
+    # tz-AWARE: a naive datetime literal goes through the driver's OS
+    # timezone (time.mktime) on its way into the plan, so a non-UTC
+    # driver would shift the window and diverge from the unpruned path
+    rts = _utc(round_ts)
+    since = rts - timedelta(seconds=cfg.age_limit_secs)
+    return trawl_candidates(
+        resolve_parts(spark, seen_parts(seen_table, since=since)), cfg, rts)
 
 
 def trim_seen(

@@ -12,11 +12,14 @@ from risjbot_spark.corpus import host_lang_for, pages_df, pathway_for, url_for
 from risjbot_spark.crawl import CrawlConfig, CrawlEngine, seen_bucket_count
 from risjbot_spark.frontier.oracle import CrawlOracle
 from risjbot_spark.frontier.state import (
+    SEEN_COLS,
     RefetchConfig,
     resolve_split,
     seen_filter,
+    seen_parts,
     seen_state,
     seen_updates,
+    trawl_candidates_pruned,
 )
 from risjbot_spark.frontier.xxhash import xxhash64
 from risjbot_spark.schema import SEEN_SCHEMA
@@ -152,13 +155,13 @@ def test_compaction_without_base_equals_seen_state(spark, tmp_path):
             lineage={"round": r, "round_ts": ts[r].isoformat(),
                      "seen_format": CrawlEngine.SEEN_FORMAT},
             mode="append")
-    before = seen_table.read().select(*CrawlEngine._SEEN_COLS)
+    before = seen_table.read().select(*SEEN_COLS)
     before_rows = before.collect()
     eng = CrawlEngine(spark, wh, pages_df(spark, 12, partitions=2), None,
                       CrawlConfig(refetch=RefetchConfig(trimdb=False),
                                   num_partitions=4, trim_every=2,
                                   use_bloom=False))
-    parts = eng._seen_parts()
+    parts = seen_parts(eng.seen_table)
     assert parts[0] is None and parts[1] is not None
     upd_rows = [(u, 2) for u in urls[:2]] + [(u, 1) for u in urls[8:9]] \
         + [(u, 0) for u in urls[10:]]
@@ -169,10 +172,10 @@ def test_compaction_without_base_equals_seen_state(spark, tmp_path):
     want = seen_state(
         spark.createDataFrame(before_rows, SEEN_SCHEMA)
         .unionByName(seen_updates(fetched(upd_rows), ts[2])))
-    key = lambda df: sorted(map(tuple, df.select(*eng._SEEN_COLS).collect()))
+    key = lambda df: sorted(map(tuple, df.select(*SEEN_COLS).collect()))
     assert key(eng.seen()) == key(want)
     assert {r.url: r.fetches for r in eng.seen().collect()}[urls[0]] == 3
-    base, deltas = eng._seen_parts()
+    base, deltas = seen_parts(eng.seen_table)
     assert base is not None and deltas is None
 
 
@@ -235,7 +238,7 @@ def _parity_with_oracle(spark, tmp_path, **cfg_kw):
             orc.trim(requested, ts)
     assert _seen_fetches(eng) == {u: nf for u, (nf, _) in orc.seen.items()}
     # the engine actually produced a bucketed base with deltas after it
-    base, deltas = eng._seen_parts()
+    base, deltas = seen_parts(eng.seen_table)
     assert base is not None and deltas is not None
     return eng
 
@@ -255,8 +258,8 @@ def test_seen_bucket_count_sized_from_keys():
 def test_resume_from_flat_base_compacts_bucketed(spark, tmp_path):
     """A warehouse whose compacted base was written flat (lf_day
     partitions, no buckets — what older engines wrote with bucketing
-    off) resumes through the generic resolve: seen() equals seen_state
-    over the same rows, the next round gates as the oracle does, and
+    off) resumes with that dir as its split base: seen() equals
+    seen_state over the same rows, the next round gates as the oracle does, and
     the next compaction writes the url_hash-bucketed base."""
     n = 60
     cfg = CrawlConfig(refetch=RefetchConfig(maxfetches=2),
@@ -283,9 +286,9 @@ def test_resume_from_flat_base_compacts_bucketed(spark, tmp_path):
     pages = pages_df(spark, n, partitions=4)
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     eng = CrawlEngine(spark, wh, pages, None, cfg)
-    base, deltas = eng._seen_parts()             # flat: all rows deltas
-    assert base is None and deltas is not None
-    key = lambda df: sorted(map(tuple, df.select(*eng._SEEN_COLS).collect()))
+    base, deltas = seen_parts(eng.seen_table)    # flat base, no deltas
+    assert base is not None and deltas is None
+    key = lambda df: sorted(map(tuple, df.select(*SEEN_COLS).collect()))
     assert key(eng.seen()) == key(seen_state(rows))
 
     maxed = {u for u, (nf, _) in orc.seen.items() if nf >= 2}
@@ -300,7 +303,7 @@ def test_resume_from_flat_base_compacts_bucketed(spark, tmp_path):
     assert man["files"] and man["lineage"]["compacted"]
     meta = man["file_meta"][man["files"][0]]
     assert meta["bucket_table"] and meta["n_buckets"] == 1
-    base, deltas = eng._seen_parts()
+    base, deltas = seen_parts(eng.seen_table)
     assert base is not None and deltas is None   # just compacted
     orc.trim({canonicalize_py(s["url"]) for s in seed_rows}, ts[3])
     assert _seen_fetches(eng) == {u: nf for u, (nf, _) in orc.seen.items()}
@@ -313,7 +316,7 @@ def test_gate_plan_no_exchange_on_base_side(spark, tmp_path):
     pages = pages_df(spark, 90, partitions=4)
     seeds = pages.select("url").withColumn("priority", F.lit(0))
     eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds, rounds=4)                   # compaction at 2 + delta
-    base, deltas = eng._seen_parts()
+    base, deltas = seen_parts(eng.seen_table)
     newer = seen_state(deltas)
     frontier = spark.createDataFrame(
         [(xxhash64(url_for(i)), url_for(i), "h") for i in range(30)],
@@ -327,12 +330,41 @@ def test_gate_plan_no_exchange_on_base_side(spark, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert "Bucketed: true" in plan
     # two hash exchanges total: the frontier into the bucket layout and
-    # the O(delta) resolve groupBy — NEVER the base. Walk the bucketed
-    # scan's ancestor chain (tree lines above it with a shallower
-    # branch marker) and require it exchange-free.
+    # the O(delta) resolve groupBy — NEVER the base
     assert plan.count("Exchange hashpartitioning") == 2
+    _, ancestors = _scan_ancestors(plan, "Bucketed: true")
+    assert not any("Exchange" in l for l in ancestors), ancestors
+
+
+def test_trawl_plan_resolves_against_base_in_place(spark, tmp_path):
+    """After a compaction the J3a trawl scans the base ONCE, day-pruned
+    (a PartitionFilters on lf_day), with no exchange on its ancestor
+    chain: the window's deltas anti-join into the base in place instead
+    of the whole window re-shuffling through a groupBy."""
+    pages = pages_df(spark, 90, partitions=4)
+    seeds = pages.select("url").withColumn("priority", F.lit(0))
+    eng = _run_engine(spark, str(tmp_path / "wh"), pages, seeds, rounds=4)
+    man = eng.seen_table.manifest()
+    tbl = man["file_meta"][man["files"][0]]["bucket_table"]
+    trawl = trawl_candidates_pruned(spark, eng.seen_table, eng.cfg.refetch,
+                                    START + timedelta(seconds=10801 * 4))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = trawl._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    scan, ancestors = _scan_ancestors(plan, tbl)
+    assert sum(tbl in l for l in plan.splitlines()) == 1, plan
+    assert "PartitionFilters: [" in scan and "lf_day" in scan.split(
+        "PartitionFilters: [")[1], scan
+    assert not any("Exchange" in l for l in ancestors), ancestors
+
+
+def _scan_ancestors(plan: str, marker: str) -> tuple[str, list[str]]:
+    """(the scan line holding `marker`, its ancestor chain): the tree
+    lines above it with a shallower branch marker, up to the root."""
     lines = plan.splitlines()
-    scan_i = next(i for i, l in enumerate(lines) if "Bucketed: true" in l)
+    scan_i = next(i for i, l in enumerate(lines) if marker in l)
 
     def depth(line):
         for tok in ("+- ", ":- "):
@@ -348,7 +380,7 @@ def test_gate_plan_no_exchange_on_base_side(spark, tmp_path):
             d = di
         if di == -1:
             break
-    assert not any("Exchange" in l for l in ancestors), ancestors
+    return lines[scan_i], ancestors
 
 
 def test_bucketed_base_survives_catalog_loss(spark, tmp_path):

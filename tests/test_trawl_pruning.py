@@ -9,11 +9,13 @@ table. Sound pruning needs latest-row-wins deltas (resolved fetches, not
 
 from datetime import datetime, timedelta, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from risjbot_spark.frontier.xxhash import xxhash64
 from risjbot_spark.frontier.state import (
     RefetchConfig,
+    seen_parts,
     seen_state,
     seen_updates,
     trawl_candidates,
@@ -39,7 +41,9 @@ def _rows(spark, rows):
 
 
 def _mk_table(spark, tmp_path):
-    """Base (3 day-partitions) + 3 deltas: in-window, too-fresh, stale."""
+    """Base (3 day-partitions) + 4 deltas: in-window, too-fresh, stale,
+    and an in-window one committed without last_fetch_range stats (an
+    older writer's), which no stat can skip."""
     t = SnapshotTable(spark, str(tmp_path), "seen")
     base = _rows(spark, [
         ("https://h1/old-stale", 2, T0 - timedelta(days=9)),      # too old
@@ -63,6 +67,9 @@ def _mk_table(spark, tmp_path):
     t.commit(_rows(spark, [("https://h3/ancient", 1, d_old)]),
              mode="append",
              stats={"last_fetch_range": [d_old.isoformat()] * 2})
+    t.commit(_rows(spark, [("https://h3/legacy-eligible", 3,
+                            T0 - timedelta(hours=3))]),
+             mode="append")
     return t
 
 
@@ -75,9 +82,11 @@ def test_trawl_pruning_matches_full_resolve(spark, tmp_path):
     pruned = trawl_candidates_pruned(spark, t, CFG, T0)
     got = {r.url: (r.fetches, r.last_fetch) for r in pruned.collect()}
     assert set(got) == full == {
-        "https://h1/in-window", "https://h2/delta-eligible"}
+        "https://h1/in-window", "https://h2/delta-eligible",
+        "https://h3/legacy-eligible"}
     # resolved fetches come through intact on the pruned path
     assert got["https://h2/delta-eligible"][0] == 2
+    assert got["https://h3/legacy-eligible"][0] == 3
 
 
 def test_trawl_pruning_skips_out_of_window_files(spark, tmp_path):
@@ -88,6 +97,7 @@ def test_trawl_pruning_skips_out_of_window_files(spark, tmp_path):
     man = t.manifest()
     stale_dir = man["files"][3]          # the d_old delta
     base_dir = man["files"][0]
+    legacy_dir = man["files"][4]         # no stats: read, never skipped
     # default metadata truncation elides Location paths from plan text
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     try:
@@ -97,6 +107,7 @@ def test_trawl_pruning_skips_out_of_window_files(spark, tmp_path):
         spark.conf.unset("spark.sql.maxMetadataStringLength")
     assert stale_dir.split("/")[-1] not in plan
     assert base_dir.split("/")[-1] in plan
+    assert legacy_dir.split("/")[-1] in plan
     assert "PartitionFilters" in plan
     assert "lf_day" in plan
 
@@ -108,6 +119,27 @@ def test_trawl_pruning_empty_and_refetchfromdb_off(spark, tmp_path):
     off = RefetchConfig(maxfetches=8, refetchsecs=3600, agelimit=86400,
                         refetchfromdb=False)
     assert trawl_candidates_pruned(spark, t2, off, T0).count() == 0
+
+
+@pytest.mark.parametrize("base", [None, "flat", "bucketed"])
+def test_seen_parts_rejects_delta_missing_column(spark, tmp_path, base):
+    """The deltas read with the known schema, which would null-fill a
+    column a deficient dir (an older / divergent writer) lacks; the
+    per-dir footer check must fail loudly instead, whether or not a
+    compacted base precedes the deltas."""
+    t = SnapshotTable(spark, str(tmp_path), "seen")
+    good = _rows(spark, [("https://h1/a", 1, T0 - timedelta(hours=5))])
+    if base is None:
+        t.commit(good, mode="append")
+    else:
+        t.commit(good.withColumn("lf_day", F.to_date("last_fetch")),
+                 mode="replace", partition_by=["lf_day"],
+                 bucket_by="url_hash" if base == "bucketed" else None,
+                 n_buckets=1)
+    t.commit(_rows(spark, [("https://h2/b", 2, T0 - timedelta(hours=4))])
+             .drop("fetches"), mode="append")
+    with pytest.raises(RuntimeError, match="fetches"):
+        seen_parts(t)
 
 
 def test_resolved_delta_replay_is_idempotent(spark, tmp_path):
@@ -137,8 +169,9 @@ def test_trawl_pruning_correct_under_non_utc_driver_tz(tmp_path):
     import sys
 
     code = """
-import sys
-sys.path.insert(0, "/root/repo"); sys.path.insert(0, "/root/repo/tests")
+import os, sys
+root = sys.argv[2]
+sys.path[:0] = [root, os.path.join(root, "tests")]
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions", "2")
@@ -159,7 +192,10 @@ assert pruned == full, f"diverged under non-UTC TZ: {pruned} != {full}"
 print("TZ-PARITY-OK")
 """
     env = dict(os.environ, TZ="Asia/Kolkata")
+    # the package and tests of THIS checkout, not whatever tree an
+    # installed path or another checkout would resolve to
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "-c", code, str(tmp_path / "tzwh")],
+        [sys.executable, "-c", code, str(tmp_path / "tzwh"), root],
         env=env, capture_output=True, text=True, timeout=300)
     assert "TZ-PARITY-OK" in out.stdout, out.stdout + out.stderr

@@ -30,10 +30,13 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-# run-dependent tokens: Spark's plan and expression ids, mkdtemp dir
-# names, and the random suffix of snapshot data dirs / bucket tables
+# run-dependent tokens: Spark's plan, expression and RDD ids (an RDD id
+# counts every RDD the session built before, so it moves whenever an
+# earlier section's job count does), mkdtemp dir names, and the random
+# suffix of snapshot data dirs / bucket tables
 _RUN_TOKENS = [
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"(/tmp/(?:tmp|plans_[a-z]+_))[a-z0-9_]{8}"), r"\1XXXXXXXX"),
     (re.compile(r"\b(snap[-_](?:[a-z_]+_)?\d+[-_])[0-9a-f]{8}\b"),
@@ -449,7 +452,9 @@ def main() -> None:
     from risjbot_spark.frontier.state import (
         RefetchConfig as _RC,
         seen_filter,
+        seen_parts,
         seen_state,
+        trawl_candidates_pruned,
     )
     wh2 = tempfile.mkdtemp()
     eng2 = CrawlEngine(spark, wh2, pages, None,
@@ -459,7 +464,7 @@ def main() -> None:
     start = datetime(2017, 4, 1, tzinfo=timezone.utc)
     for r in range(4):
         eng2.run_round(seeds2, r, start + timedelta(seconds=10801 * r))
-    base, deltas = eng2._seen_parts()
+    base, deltas = seen_parts(eng2.seen_table)
     gated = seen_filter(
         pages.select(F.col("url").alias("url_canon"))
         .withColumn("url_hash", F.xxhash64("url_canon")),
@@ -472,6 +477,25 @@ def main() -> None:
           "compacted base scanned with its bucket spec")
     check("seen_gate_bucketed", p.count("Exchange hashpartitioning") == 2,
           "exchanges = frontier + delta resolve only; base side in place")
+
+    # --- the J3a trawl over the same warehouse: the window's deltas
+    # anti-join into the day-pruned base in place — one base scan, and
+    # both hash exchanges sit over the delta scans
+    trawl = trawl_candidates_pruned(spark, eng2.seen_table, _RC(),
+                                    start + timedelta(seconds=10801 * 4))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    p = plan_of(trawl, "simple")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    sections.append(("trawl over bucketed base (pruned J3a)", p))
+    man2 = eng2.seen_table.manifest()
+    tbl2 = man2["file_meta"][man2["files"][0]]["bucket_table"]
+    base_scans = [ln for ln in p.splitlines() if tbl2 in ln]
+    check("trawl_bucketed",
+          len(base_scans) == 1
+          and re.search(r"PartitionFilters: \[[^\]]*lf_day", base_scans[0])
+          and p.count("Exchange hashpartitioning") == 2,
+          "base scanned once, day-pruned on lf_day; exchanges = delta "
+          "resolve + delta key set only, base side in place")
 
     # --- ann.kmeans: every Lloyd iteration broadcasts the K-row
     # centroid table into the assignment join; vectors never shuffle
