@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from .frontier.bloom import PartitionedBloom
 from .frontier.politeness import (
-    build_rules_map,
     fetch_order_key,
     host_budgets,
     host_budgets_df,
@@ -33,6 +32,7 @@ from .frontier.politeness import (
     politeness_schedule,
     robots_filter,
     robots_filter_df,
+    rules_from_rows,
     salted_repartition,
 )
 from .frontier.state import (
@@ -125,7 +125,9 @@ class CrawlConfig:
     # robots host count at which rules/budgets move from a driver dict
     # (broadcast once, no join) into DataFrames joined on host —
     # output-identical (parity-tested); needed when hosts outgrow driver
-    # memory (10^6-10^8 hosts — a 10^10-URL frontier)
+    # memory (10^6-10^8 hosts — a 10^10-URL frontier). The choice reads
+    # at most this many robots rows to the driver, once at construction:
+    # the read that decides the backend is the dict path's own input
     robots_scale_hosts: int = 200_000
     bloom_buckets: int = 64
     bloom_bits_per_bucket: int = 1 << 18  # adaptive: grows 4× when full
@@ -267,16 +269,10 @@ class CrawlEngine:
         self.rules_df = None
         self.budgets_df = None
         self._max_budget: int | None = None
-        # robots backend by host count — the dict path collects EVERY
-        # host's rules to the driver (build_rules_map), so the count job
-        # is strictly cheaper than what it prevents
-        if robots is None:
-            robots_scale, why = False, "no robots table"
-        else:
-            n_hosts = robots.count()
-            robots_scale = n_hosts >= self.cfg.robots_scale_hosts
-            why = (f"{n_hosts} robots hosts vs threshold "
-                   f"{self.cfg.robots_scale_hosts}")
+        # robots backend by host count, from the one read that also
+        # fills the dict: no count job first, no second scan after
+        self.rules_map, why = self._read_robots(robots)
+        robots_scale = self.rules_map is None
         self.backend_choices["robots_dataframe"] = {
             "value": robots_scale, "auto": True, "why": why}
         if robots_scale:
@@ -292,7 +288,6 @@ class CrawlEngine:
             row = self.budgets_df.agg(F.max("budget")).first()
             self._max_budget = max(self.cfg.default_budget, row[0] or 0)
         else:
-            self.rules_map = build_rules_map(robots) if robots is not None else {}
             self.budgets = host_budgets(
                 self.rules_map, self.cfg.round_seconds, self.cfg.default_budget
             )
@@ -321,6 +316,23 @@ class CrawlEngine:
         a_man = self.articles_table.manifest()
         if a_man is not None and a_man["files"]:
             self.last_delta_dir = a_man["files"][-1]
+
+    def _read_robots(self, robots: DataFrame | None):
+        """(rules dict, evidence) for the dict robots backend, or
+        (None, evidence) when the table reaches robots_scale_hosts rows
+        and the DataFrame backend takes it. ONE bounded read: the table
+        in a single task, cut at the threshold — one Spark job with one
+        task, never a full-table scan, and never more rows on the driver
+        than the dict backend itself holds."""
+        limit = self.cfg.robots_scale_hosts
+        if robots is None:
+            return {}, "no robots table"
+        rows = (robots.select("host", "robots_txt").coalesce(1).take(limit)
+                if limit > 0 else [])
+        if len(rows) >= limit:
+            return None, f">= {limit} robots hosts vs threshold {limit}"
+        return (rules_from_rows(rows),
+                f"{len(rows)} robots hosts vs threshold {limit}")
 
     SEEN_FORMAT = 2   # 1 = increment deltas (sum-resolve); 2 = resolved rows
 

@@ -92,13 +92,16 @@ def parse_robots(robots_txt: str) -> RobotsRules:
     return RobotsRules(tuple(disallow), tuple(allow), delay, tuple(sitemaps))
 
 
+def rules_from_rows(rows) -> dict[str, RobotsRules]:
+    """(host, robots_txt) rows → the rules dict, parsing each row as it
+    arrives (a later row for a host replaces an earlier one)."""
+    return {r["host"].lower(): parse_robots(r["robots_txt"]) for r in rows}
+
+
 def build_rules_map(robots_df: DataFrame) -> dict[str, RobotsRules]:
     """Parse robots per distinct host on the driver (hosts are a small
     dimension; this is the reference's one-robots-fetch-per-host)."""
-    return {
-        r["host"].lower(): parse_robots(r["robots_txt"])
-        for r in robots_df.select("host", "robots_txt").collect()
-    }
+    return rules_from_rows(robots_df.select("host", "robots_txt").collect())
 
 
 def broadcast_rules(spark, rules_map: dict[str, RobotsRules]):

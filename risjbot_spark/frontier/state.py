@@ -151,7 +151,8 @@ def seen_state(rows: DataFrame) -> DataFrame:
     )
 
 
-def resolve_split(base: DataFrame, newer: DataFrame) -> DataFrame:
+def resolve_split(base: DataFrame, newer: DataFrame,
+                  keys: DataFrame | None = None) -> DataFrame:
     """Merge-on-read resolve for the SPLIT representation: `base` already
     holds one resolved row per key (a compacted snapshot), `newer` holds
     one resolved row per key that is strictly newer wherever keys
@@ -161,9 +162,11 @@ def resolve_split(base: DataFrame, newer: DataFrame) -> DataFrame:
     groupBy. Against a url_hash-bucketed base the anti join runs with NO
     exchange on the base side (the newer side broadcasts or shuffles
     O(delta)). Output ≡ seen_state(base ∪ newer) row-for-row
-    (parity-locked in tests)."""
-    return newer.unionByName(
-        base.join(newer.select("url_hash"), "url_hash", "left_anti"))
+    (parity-locked in tests). `keys` may stand in for newer's key set
+    with any url_hash rows holding the same keys: a left-anti join
+    ignores duplicates, so raw delta keys spare a second resolve."""
+    keys = newer.select("url_hash") if keys is None else keys
+    return newer.unionByName(base.join(keys, "url_hash", "left_anti"))
 
 
 def _utc(ts: datetime) -> datetime:
@@ -239,7 +242,8 @@ def resolve_parts(spark, parts) -> DataFrame:
         return base if base is not None else spark.createDataFrame(
             [], SEEN_SCHEMA).limit(0)
     newer = seen_state(deltas)
-    return newer if base is None else resolve_split(base, newer)
+    return newer if base is None else resolve_split(
+        base, newer, deltas.select("url_hash"))
 
 
 def trawl_candidates(

@@ -17,6 +17,7 @@ from risjbot_spark.corpus import host_lang_for, pages_df, pathway_for, url_for
 from risjbot_spark.crawl import CrawlConfig, CrawlEngine
 from risjbot_spark.frontier.bloom import PartitionedBloom
 from risjbot_spark.frontier.oracle import CrawlOracle
+from risjbot_spark.frontier.politeness import build_rules_map, host_budgets
 from risjbot_spark.frontier.state import RefetchConfig
 from risjbot_spark.schema import ROBOTS_SCHEMA
 from risjbot_spark.urlnorm import canonicalize_py
@@ -125,7 +126,48 @@ def test_robots_flips_to_dataframe_beyond_host_budget(spark, tmp_path):
     assert eng.rules_df is not None and not eng.rules_map
     ch = eng.backend_choices["robots_dataframe"]
     assert ch["value"] is True and ch["auto"] is True
-    assert "20 robots hosts" in ch["why"]
+    # the read stops at the threshold, so the evidence is a lower bound
+    assert ch["why"] == ">= 10 robots hosts vs threshold 10"
+
+
+def _delay_robots(spark, n):
+    return spark.createDataFrame(
+        [(f"www.host{i}.example",
+          f"User-agent: *\nDisallow: /p{i}/\nCrawl-delay: {i % 4}")
+         for i in range(n)], ROBOTS_SCHEMA)
+
+
+def test_robots_threshold_boundary(spark, tmp_path):
+    """One row short of robots_scale_hosts is the dict backend with
+    exactly the rules and budgets the whole-table helpers build;
+    exactly robots_scale_hosts rows is the DataFrame backend, and so is
+    a threshold of 0 (whose construction reads no robots row:
+    test_lineage_jobs pins its job count)."""
+    pages = pages_df(spark, 10, partitions=2)
+    robots = _delay_robots(spark, 12)
+    eng = _engine(spark, tmp_path, pages, "below", robots=robots,
+                  robots_scale_hosts=13)
+    assert eng.rules_df is None
+    rules = build_rules_map(robots)
+    assert eng.rules_map == rules and len(rules) == 12
+    assert eng.budgets == host_budgets(rules, eng.cfg.round_seconds,
+                                       eng.cfg.default_budget)
+    assert eng.budgets
+    assert eng.backend_choices["robots_dataframe"] == {
+        "value": False, "auto": True,
+        "why": "12 robots hosts vs threshold 13"}
+    eng = _engine(spark, tmp_path, pages, "at", robots=robots,
+                  robots_scale_hosts=12)
+    assert eng.rules_df is not None and not eng.rules_map
+    assert not eng.budgets
+    assert eng.backend_choices["robots_dataframe"] == {
+        "value": True, "auto": True,
+        "why": ">= 12 robots hosts vs threshold 12"}
+    eng = _engine(spark, tmp_path, pages, "zero", robots=robots,
+                  robots_scale_hosts=0)
+    assert eng.rules_df is not None and not eng.rules_map
+    assert eng.backend_choices["robots_dataframe"]["why"] == (
+        ">= 0 robots hosts vs threshold 0")
 
 
 def test_frontier_stops_broadcasting_beyond_row_budget(spark, tmp_path):

@@ -16,22 +16,28 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import functions as F
 
-from risjbot_spark.corpus import pages_df
+from risjbot_spark.corpus import pages_df, robots_rows
 from risjbot_spark.crawl import CrawlConfig, CrawlEngine
 from risjbot_spark.frontier.state import RefetchConfig
+from risjbot_spark.schema import ROBOTS_SCHEMA
 
 T0 = datetime(2017, 4, 1, tzinfo=timezone.utc)
 
 
-def _round_job_count(spark, eng, seeds, rnd, ts, tag):
+def _job_count(spark, group, fn):
+    """(Spark jobs fn() started, its result) via a job group."""
     sc = spark.sparkContext
-    group = f"lineage-jobs-{tag}-{rnd}"
     sc.setJobGroup(group, group)
     try:
-        lineage = eng.run_round(seeds, rnd, ts)
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), lineage
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _round_job_count(spark, eng, seeds, rnd, ts, tag):
+    return _job_count(spark, f"lineage-jobs-{tag}-{rnd}",
+                      lambda: eng.run_round(seeds, rnd, ts))
 
 
 # Spark jobs in each of the three rounds below (local[4], 8 shuffle
@@ -93,3 +99,36 @@ def test_manifest_still_carries_counters(spark, tmp_path):
     assert lin["fetched"] == 20 and lin["extracted"] > 0
     assert lin["frontier_in"] == 20
     assert sum(lin["per_partition_extracted"].values()) == 20
+
+
+def test_construction_reads_robots_in_one_job(spark, tmp_path):
+    """Engine construction reads the robots table with ONE single-task
+    job that both picks the backend and fills the rules dict. The
+    12-host table from Python rows (4 partitions here) ran 3 jobs when
+    a count() picked the backend and a collect() filled the dict, and
+    the DataFrame backend ran 6 with the count in front of its parse
+    and max(budget) jobs, even at robots_scale_hosts=0."""
+    pages = pages_df(spark, 10, partitions=2)
+
+    def build(tag, robots, **kw):
+        cfg = CrawlConfig(num_partitions=4, bloom_buckets=8, **kw)
+        return _job_count(spark, f"construction-jobs-{tag}",
+                          lambda: CrawlEngine(spark, str(tmp_path / tag),
+                                              pages, robots, cfg))
+
+    def robots():
+        return spark.createDataFrame(robots_rows(), ROBOTS_SCHEMA)
+
+    n, eng = build("dict", robots())
+    assert eng.rules_df is None and len(eng.rules_map) == 12
+    assert n == 1, f"dict backend construction ran {n} jobs"
+    n, eng = build("none", None)
+    assert n == 0, f"construction without robots ran {n} jobs"
+    n, eng = build("df", robots(), robots_scale_hosts=10)
+    assert eng.rules_df is not None and not eng.rules_map
+    assert n <= 5, f"DataFrame backend construction ran {n} jobs"
+    # threshold 0 skips the read: the same backend, one job fewer (a
+    # fresh table, so the persisted rules of the build above don't hit)
+    n0, eng = build("df0", robots(), robots_scale_hosts=0)
+    assert eng.rules_df is not None
+    assert n0 == n - 1, f"threshold-0 construction ran {n0} jobs, not {n - 1}"

@@ -480,7 +480,8 @@ def main() -> None:
 
     # --- the J3a trawl over the same warehouse: the window's deltas
     # anti-join into the day-pruned base in place — one base scan, and
-    # both hash exchanges sit over the delta scans
+    # the one hash exchange is the delta resolve (the anti join's key
+    # side is the raw delta keys, so it needs no distinct of its own)
     trawl = trawl_candidates_pruned(spark, eng2.seen_table, _RC(),
                                     start + timedelta(seconds=10801 * 4))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -493,9 +494,10 @@ def main() -> None:
     check("trawl_bucketed",
           len(base_scans) == 1
           and re.search(r"PartitionFilters: \[[^\]]*lf_day", base_scans[0])
-          and p.count("Exchange hashpartitioning") == 2,
-          "base scanned once, day-pruned on lf_day; exchanges = delta "
-          "resolve + delta key set only, base side in place")
+          and p.count("Exchange hashpartitioning") == 1,
+          "base scanned once, day-pruned on lf_day; one exchange, the "
+          "delta resolve: the anti join takes the raw delta keys, base "
+          "side in place")
 
     # --- ann.kmeans: every Lloyd iteration broadcasts the K-row
     # centroid table into the assignment join; vectors never shuffle
