@@ -142,17 +142,20 @@ class CrawlConfig:
     link_allow: str = ""                 # regex; empty → allow all
     link_deny: str = ""                  # regex; empty → deny none
     # W1+ link-graph prioritization (frontier/rank.py): each committed
-    # round appends its outlink edges to <warehouse>/link_edges; every
-    # link_rank_every rounds the engine recomputes fixed-point PageRank
-    # over the accumulated graph into <warehouse>/link_ranks; subsequent
-    # frontiers merge authority into `priority` —
-    # greatest(existing, rank div link_rank_unit) — so hand-pinned
-    # spider priorities still win while unpinned URLs schedule by global
-    # authority. Per-round cost: one O(round-outlinks) append + one
-    # rank-keyed left join on the deduped frontier; the rank job itself
-    # is edge-list-sized and runs only on the cadence. Ranks are
-    # advisory state: a crash mid-refresh leaves no _SUCCESS marker and
-    # the next round simply schedules without authority.
+    # round appends its outlink edges to the <warehouse>/link_edges
+    # snapshot table; every link_rank_every rounds the engine recomputes
+    # fixed-point PageRank over the accumulated graph into the
+    # <warehouse>/link_ranks snapshot table; subsequent frontiers merge
+    # authority into `priority` — greatest(existing, rank div
+    # link_rank_unit) — so hand-pinned spider priorities still win while
+    # unpinned URLs schedule by global authority. Per-round cost: one
+    # O(round-outlinks) append + one rank-keyed left join on the deduped
+    # frontier; the rank job itself is edge-list-sized and runs only on
+    # the cadence. Both tables commit like seen/articles (new data dir,
+    # manifest, atomic CURRENT swap), so a crash or failure mid-refresh
+    # keeps the previous ranks and edge log. An older engine's loose
+    # part files in those dirs are named by no manifest and never read;
+    # ranks are advisory and come back at the next refresh.
     link_rank: bool = False
     link_rank_every: int = 1             # rank-refresh cadence (rounds)
     link_rank_iterations: int = 3
@@ -268,7 +271,6 @@ class CrawlEngine:
                 F.col("url_canon").alias("page_url"), "warc_ts", "html")
         self.rules_df = None
         self.budgets_df = None
-        self._max_budget: int | None = None
         # robots backend by host count, from the one read that also
         # fills the dict: no count job first, no second scan after
         self.rules_map, why = self._read_robots(robots)
@@ -278,15 +280,12 @@ class CrawlEngine:
         if robots_scale:
             # scale path: rules stay distributed — parse once per host
             # (persisted so the parse runs once per engine, not per
-            # round), budgets join on host. The only driver-side scalar
-            # is max(budget), one agg at init for the presplit decision.
+            # round), budgets join on host.
             self.rules_map = {}
             self.budgets = {}
             self.rules_df = parse_rules_df(robots).persist()
             self.budgets_df = host_budgets_df(
                 self.rules_df, self.cfg.round_seconds)
-            row = self.budgets_df.agg(F.max("budget")).first()
-            self._max_budget = max(self.cfg.default_budget, row[0] or 0)
         else:
             self.budgets = host_budgets(
                 self.rules_map, self.cfg.round_seconds, self.cfg.default_budget
@@ -301,9 +300,10 @@ class CrawlEngine:
         self._recover_incomplete_round()
         self._bloom_dir = os.path.join(warehouse, "bloom")
         # W1+ link-graph state (config link_rank): the edge log and the
-        # latest rank snapshot live beside the other warehouse tables
-        self._link_edges_dir = os.path.join(warehouse, "link_edges")
-        self._link_ranks_dir = os.path.join(warehouse, "link_ranks")
+        # latest ranks, snapshot tables beside seen and articles
+        if self.cfg.link_rank:
+            self.link_edges = SnapshotTable(spark, warehouse, "link_edges")
+            self.link_ranks = SnapshotTable(spark, warehouse, "link_ranks")
         self.bloom = None
         if self.cfg.use_bloom:
             self._init_bloom()
@@ -758,7 +758,7 @@ class CrawlEngine:
         round, not two keyed by the same normalized host)."""
         scheduled = politeness_schedule(
             eligible, self.budgets, self.cfg.default_budget, self.spark,
-            budgets_df=self.budgets_df, max_budget=self._max_budget,
+            budgets_df=self.budgets_df,
             keep_crawl_delay=(self.fetcher is not None
                               and self.budgets_df is not None),
         )
@@ -1094,12 +1094,10 @@ class CrawlEngine:
     # ---- W1+ link-graph state (config link_rank) ---------------------
     def _load_link_ranks(self) -> DataFrame | None:
         """Latest committed rank snapshot, or None before the first
-        refresh (and after a crash mid-overwrite — no _SUCCESS, no
-        authority this round; the next cadence rewrites it)."""
-        if not os.path.exists(os.path.join(self._link_ranks_dir,
-                                           "_SUCCESS")):
+        refresh (no authority this round)."""
+        if self.link_ranks.current_snapshot_id() is None:
             return None
-        return self.spark.read.parquet(self._link_ranks_dir)
+        return self.link_ranks.read()
 
     def _update_link_graph(self, round_no: int) -> None:
         """Append the committed round's outlink edges; refresh ranks on
@@ -1109,56 +1107,35 @@ class CrawlEngine:
         iterates edge-sized shuffles only (frontier/rank.py scale
         notes). Runs after the seen commit: a crash here loses at most
         advisory priority signal, never crawl state."""
-        import shutil
-
         from .frontier.rank import link_graph_ranks, outlink_edges
-
-        # recover an interrupted compaction swap (below) before touching
-        # the log: a crash between the two renames leaves the old log
-        # parked at .trash with no live dir — restore it; a crash after
-        # the second rename leaves a redundant .trash — drop it
-        trash = self._link_edges_dir + ".trash"
-        if os.path.exists(trash):
-            if not os.path.exists(self._link_edges_dir):
-                os.rename(trash, self._link_edges_dir)
-            else:
-                shutil.rmtree(trash, ignore_errors=True)
 
         delta = self.spark.read.parquet(self.last_delta_dir)
         if "links" not in delta.columns:
             return
-        (outlink_edges(delta.select("url_canon", "links"))
-         .write.mode("append").parquet(self._link_edges_dir))
+        self.link_edges.commit(
+            outlink_edges(delta.select("url_canon", "links")),
+            mode="append", lineage={"round": round_no})
         if (round_no + 1) % max(1, self.cfg.link_rank_every) != 0:
             return
         # one distinct-graph materialization shared by the rank job and
-        # the compaction write (persist = compute once, spill not
+        # the compaction commit (persist = compute once, spill not
         # recompute)
-        edges = (self.spark.read.parquet(self._link_edges_dir)
-                 .distinct().persist())
+        edges = self.link_edges.read().distinct().persist()
         try:
             edges.count()
             ranks = link_graph_ranks(
                 edges, iterations=self.cfg.link_rank_iterations,
                 num_partitions=self.cfg.num_partitions,
                 checkpoint_dir=self.cfg.link_rank_checkpoint_dir or None)
-            ranks.write.mode("overwrite").parquet(self._link_ranks_dir)
+            self.link_ranks.commit(ranks, mode="replace")
             # compact the edge log to the distinct graph: refetch rounds
             # re-append the same (src,dst) pairs every cycle, so without
             # this the log — and every refresh's scan+distinct — grows
             # O(rounds × outlinks) on a crawl whose distinct graph is
-            # static. The compacted graph is written to a SIBLING temp
-            # dir and swapped in (the seen table's replace-commit
-            # idiom), never overwritten in place: an in-place overwrite
-            # deletes the source files this plan reads, and a lost
-            # executor's cache-block recompute against the deleted
-            # parquet would fail the job with the log truncated —
-            # permanently losing edges from pages never refetched.
-            tmp = self._link_edges_dir + ".compact.tmp"
-            edges.write.mode("overwrite").parquet(tmp)
-            os.rename(self._link_edges_dir, trash)
-            os.rename(tmp, self._link_edges_dir)
-            shutil.rmtree(trash, ignore_errors=True)
+            # static
+            self.link_edges.commit(edges, mode="replace")
+            self.link_ranks.expire_snapshots(1)
+            self.link_edges.expire_snapshots(1)
         finally:
             edges.unpersist()
 

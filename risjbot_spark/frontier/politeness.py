@@ -279,15 +279,18 @@ def order_cols():
             F.col("url_hash").asc())
 
 
+# salted pre-rank fan-out: a hot host's rows spread over this many
+# window partitions before the exact per-host window
+PRESPLIT_SALT = 32
+
+
 def politeness_schedule(
     frontier: DataFrame,
     budgets: dict[str, int],
     default_budget: int,
     spark,
     presplit_threshold: int = 100_000,
-    presplit_salt: int = 32,
     budgets_df: DataFrame | None = None,
-    max_budget: int | None = None,
     keep_crawl_delay: bool = False,
 ) -> DataFrame:
     """W1/W3 — per-host window rank by (priority DESC, discovered_ts,
@@ -309,20 +312,19 @@ def politeness_schedule(
 
     Hot-host bound: a plain per-host window puts ALL of a host's rows in
     one task — a host owning half a 10^10 frontier is an OOM, not a
-    skew. When every budget ≤ `presplit_threshold`, a salted pre-rank
-    runs first: rank within (host, url_hash % salt) and cut to the
-    budget. A row's salted-partition rank never exceeds its true
-    per-host rank (same order key, subset of the rows), so only rows
-    already past budget are cut and the result is bit-identical; the
-    exact window then sees ≤ salt×budget rows per host. Unbounded
-    budgets (this harness's corpus-join mode) skip the extra shuffle.
+    skew. When `default_budget` ≤ `presplit_threshold`, a salted
+    pre-rank runs first: rank within (host, url_hash % PRESPLIT_SALT)
+    and cut to the budget. A row's salted-partition rank never exceeds
+    its true per-host rank (same order key, subset of the rows), so only
+    rows already past budget are cut and the result is bit-identical at
+    any budget; the exact window then sees ≤ salt×budget rows per host.
+    An unbounded default budget (this harness's corpus-join mode) skips
+    the extra shuffle.
 
     Scale path: pass `budgets_df` (host_norm, budget — host_budgets_df)
     instead of the dict and the budget arrives via an equi-join on host
     rather than a plan literal; AQE broadcasts it while small, shuffle-
-    joins when not (and the window shuffles by host anyway). Supply
-    `max_budget` (one agg at engine init) so the presplit decision
-    stays driver-side."""
+    joins when not (and the window shuffles by host anyway)."""
     drop_cols = []
     if budgets_df is not None:
         # keep_crawl_delay: the live fetch stage needs the per-host
@@ -336,9 +338,6 @@ def politeness_schedule(
             _norm_host_expr(F.col("host")) == F.col("host_norm"), "left")
         budget_col = F.coalesce(F.col("budget"), F.lit(default_budget))
         drop_cols = ["host_norm", "budget"]
-        if max_budget is None:
-            row = budgets_df.agg(F.max("budget")).first()
-            max_budget = max(default_budget, row[0] or 0)
     else:
         budget_items = [(h, b) for h, b in budgets.items()]
         if budget_items:
@@ -351,11 +350,10 @@ def politeness_schedule(
             )
         else:
             budget_col = F.lit(default_budget)
-        max_budget = max([default_budget, *budgets.values()])
 
-    if max_budget <= presplit_threshold:
+    if default_budget <= presplit_threshold:
         pre = Window.partitionBy(
-            "host", F.pmod(F.col("url_hash"), F.lit(presplit_salt))
+            "host", F.pmod(F.col("url_hash"), F.lit(PRESPLIT_SALT))
         ).orderBy(*order_cols())
         frontier = (
             frontier.withColumn("_pre_rank", F.row_number().over(pre))

@@ -169,15 +169,6 @@ def _match_test(node: Node, test: str) -> bool:
     return node.tag == test
 
 
-def _child_texts(node: Node):
-    """Direct text children in document order (lxml ``el/text()``)."""
-    if node.text:
-        yield node.text
-    for c in node.children:
-        if c.tail:
-            yield c.tail
-
-
 def _eval_steps(contexts: list[Node], steps: tuple[_Step, ...]):
     """Evaluate element steps; the final step may be text()/@attr."""
     current = contexts

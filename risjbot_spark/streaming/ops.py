@@ -304,7 +304,7 @@ def stream_quality_gate(docs: DataFrame, eval_docs: DataFrame,
     `q_prob` column."""
     from ..dedup import tokens_expr
     from ..textquality import (classifier_prob_expr, ngrams_expr,
-                               repetition_exprs)
+                               quality_passes, repetition_exprs)
 
     ev = (eval_docs
           .select(F.explode(F.array_distinct(
@@ -336,13 +336,10 @@ def stream_quality_gate(docs: DataFrame, eval_docs: DataFrame,
         *(expr.alias(name) for name, expr in sig.items()),
         hit_frac.alias("eval_hit_frac"), *clf_cols)
     passes = (
-        (F.col("n_tokens") > 0)
-        & F.coalesce(F.col("dup_ngram_frac") <= max_dup_ngram_frac,
-                     F.lit(True))
-        & F.coalesce(F.col("top_token_frac") <= max_top_token_frac,
-                     F.lit(True))
-        & F.coalesce(F.col("distinct_token_ratio") >= min_distinct_ratio,
-                     F.lit(True))
+        quality_passes({name: F.col(name) for name in sig},
+                       max_dup_ngram_frac=max_dup_ngram_frac,
+                       max_top_token_frac=max_top_token_frac,
+                       min_distinct_ratio=min_distinct_ratio)
         & F.coalesce(F.col("eval_hit_frac") <= max_hit_frac, F.lit(True))
     )
     if min_prob is not None:

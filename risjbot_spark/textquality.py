@@ -154,6 +154,24 @@ def repetition_exprs(toks, *, ngram: int = 2,
     }
 
 
+def quality_passes(sig: dict, *, max_dup_ngram_frac: float,
+                   max_top_token_frac: float,
+                   min_distinct_ratio: float) -> Column:
+    """The repetition gate's keep predicate over the four signals (a
+    dict keyed like `repetition_exprs`, of expressions or columns): a
+    document with no tokens fails; a NULL fraction (too short to judge)
+    passes that check. Shared by `quality_filter` and the streaming
+    gate."""
+    return (
+        (sig["n_tokens"] > 0)
+        & F.coalesce(sig["dup_ngram_frac"] <= max_dup_ngram_frac,
+                     F.lit(True))
+        & F.coalesce(sig["top_token_frac"] <= max_top_token_frac,
+                     F.lit(True))
+        & F.coalesce(sig["distinct_token_ratio"] >= min_distinct_ratio,
+                     F.lit(True)))
+
+
 def quality_filter(df: DataFrame, text_col: str,
                    *, ngram: int = 2,
                    max_dup_ngram_frac: float = 0.3,
@@ -193,15 +211,10 @@ def quality_filter(df: DataFrame, text_col: str,
     d = (df.filter(F.col(text_col).isNotNull())
          .withColumn(_TOKS, tokens_expr(F.col(text_col))))
     sig = repetition_exprs(F.col(_TOKS), ngram=ngram, round_dp=round_dp)
-    passes = (
-        (sig["n_tokens"] > 0)
-        & F.coalesce(sig["dup_ngram_frac"] <= max_dup_ngram_frac,
-                     F.lit(True))
-        & F.coalesce(sig["top_token_frac"] <= max_top_token_frac,
-                     F.lit(True))
-        & F.coalesce(sig["distinct_token_ratio"] >= min_distinct_ratio,
-                     F.lit(True)))
-    kept = d.filter(passes)
+    kept = d.filter(quality_passes(
+        sig, max_dup_ngram_frac=max_dup_ngram_frac,
+        max_top_token_frac=max_top_token_frac,
+        min_distinct_ratio=min_distinct_ratio))
     if with_signals:
         kept = kept.select(
             *df.columns, *(sig[n].alias(n) for n in sig_names))

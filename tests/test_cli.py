@@ -209,9 +209,8 @@ def test_cli_stats(spark, tmp_path, capsys):
 def test_cli_link_rank_flags(spark, tmp_path):
     """--link-rank reaches the config and produces the warehouse rank
     state over a two-round link-following crawl."""
-    import os
-
     from risjbot_spark.__main__ import main as cli_main
+    from risjbot_spark.store import SnapshotTable
 
     pages_path = str(tmp_path / "pagesLR")
     pages_df(spark, 60, partitions=2).write.parquet(pages_path)
@@ -226,8 +225,9 @@ def test_cli_link_rank_flags(spark, tmp_path):
         "--follow-links", "--link-rank", "--link-rank-iters", "2",
     ], spark=spark)
     assert rc == 0
-    assert os.path.exists(os.path.join(wh, "link_edges"))
-    assert os.path.exists(os.path.join(wh, "link_ranks", "_SUCCESS"))
+    for name in ("link_edges", "link_ranks"):
+        assert SnapshotTable(spark, wh, name).current_snapshot_id() \
+            is not None, f"no {name} snapshot committed"
 
 
 def test_cli_cdx_build_and_lookup(spark, tmp_path, capsys):

@@ -103,11 +103,12 @@ def test_manifest_still_carries_counters(spark, tmp_path):
 
 def test_construction_reads_robots_in_one_job(spark, tmp_path):
     """Engine construction reads the robots table with ONE single-task
-    job that both picks the backend and fills the rules dict. The
-    12-host table from Python rows (4 partitions here) ran 3 jobs when
-    a count() picked the backend and a collect() filled the dict, and
-    the DataFrame backend ran 6 with the count in front of its parse
-    and max(budget) jobs, even at robots_scale_hosts=0."""
+    job that both picks the backend and fills the rules dict, and the
+    DataFrame backend runs nothing more (its parse and budgets stay
+    lazy). The 12-host table from Python rows (4 partitions here) ran 3
+    jobs when a count() picked the backend and a collect() filled the
+    dict; the DataFrame backend ran 5 (4 at robots_scale_hosts=0) while
+    a max(budget) agg decided the politeness presplit."""
     pages = pages_df(spark, 10, partitions=2)
 
     def build(tag, robots, **kw):
@@ -126,9 +127,8 @@ def test_construction_reads_robots_in_one_job(spark, tmp_path):
     assert n == 0, f"construction without robots ran {n} jobs"
     n, eng = build("df", robots(), robots_scale_hosts=10)
     assert eng.rules_df is not None and not eng.rules_map
-    assert n <= 5, f"DataFrame backend construction ran {n} jobs"
-    # threshold 0 skips the read: the same backend, one job fewer (a
-    # fresh table, so the persisted rules of the build above don't hit)
+    assert n == 1, f"DataFrame backend construction ran {n} jobs"
+    # threshold 0 skips the read: the same backend, no job at all
     n0, eng = build("df0", robots(), robots_scale_hosts=0)
     assert eng.rules_df is not None
-    assert n0 == n - 1, f"threshold-0 construction ran {n0} jobs, not {n - 1}"
+    assert n0 == 0, f"threshold-0 construction ran {n0} jobs"

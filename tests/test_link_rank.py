@@ -5,6 +5,8 @@ partitioning-invariance (the reason the arithmetic is integral), the
 reliable-checkpoint variant, edge building from extracted articles,
 and the priority merge the politeness scheduler consumes."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -149,8 +151,6 @@ def test_engine_link_rank_authority_reaches_frontier(spark, tmp_path):
     """Round 0 commits edges, the refresh writes ranks, and round 1's
     frontier carries authority: every URL in the observed link graph
     schedules with priority >= base (150000 div 10000 = 15)."""
-    import os
-
     from datetime import datetime, timezone
 
     from risjbot_spark.corpus import pages_df, url_for
@@ -163,9 +163,8 @@ def test_engine_link_rank_authority_reaches_frontier(spark, tmp_path):
     eng.run(seeds, rounds=2,
             start_ts=datetime(2017, 4, 1, tzinfo=timezone.utc),
             round_gap_secs=60)
-    assert os.path.exists(os.path.join(str(tmp_path / "wh"), "link_edges"))
-    assert os.path.exists(os.path.join(
-        str(tmp_path / "wh"), "link_ranks", "_SUCCESS"))
+    assert eng.link_edges.current_snapshot_id() is not None
+    assert eng.link_ranks.current_snapshot_id() is not None
     p0 = _round_priorities(eng, 0)
     p1 = _round_priorities(eng, 1)
     assert p0 and all(v == 0 for v in p0.values())  # no ranks yet
@@ -224,8 +223,6 @@ def test_engine_link_rank_explicit_pin_survives(spark, tmp_path):
 def test_engine_link_rank_cadence_skips_refresh(spark, tmp_path):
     """link_rank_every=3 with 2 rounds: edges accumulate but no rank
     snapshot is written, and rounds schedule without authority."""
-    import os
-
     from datetime import datetime, timezone
 
     from risjbot_spark.corpus import pages_df, url_for
@@ -239,9 +236,9 @@ def test_engine_link_rank_cadence_skips_refresh(spark, tmp_path):
     eng.run(seeds, rounds=2,
             start_ts=datetime(2017, 4, 1, tzinfo=timezone.utc),
             round_gap_secs=60)
-    assert os.path.exists(os.path.join(str(tmp_path / "whc"), "link_edges"))
-    assert not os.path.exists(os.path.join(
-        str(tmp_path / "whc"), "link_ranks", "_SUCCESS"))
+    assert eng.link_edges.current_snapshot_id() is not None
+    assert eng.link_ranks.current_snapshot_id() is None
+    assert eng._load_link_ranks() is None
     p1 = _round_priorities(eng, 1)
     assert p1 and all(v == 0 for v in p1.values())
 
@@ -288,9 +285,7 @@ def test_zero_iterations_rejected(spark):
 def test_engine_compacts_edge_log_on_refresh(spark, tmp_path):
     """Refetch rounds re-append identical edges; the refresh must fold
     the log back to the distinct graph so it stays O(distinct edges),
-    and the post-compaction log must still produce the same ranks."""
-    import os
-
+    and expiry must leave each link table one live data dir."""
     from datetime import datetime, timezone
 
     from risjbot_spark.corpus import pages_df, url_for
@@ -305,44 +300,48 @@ def test_engine_compacts_edge_log_on_refresh(spark, tmp_path):
     eng.run(seeds, rounds=3,
             start_ts=datetime(2017, 4, 1, tzinfo=timezone.utc),
             round_gap_secs=3600)
-    log_dir = os.path.join(str(tmp_path / "whcomp"), "link_edges")
-    log = spark.read.parquet(log_dir)
+    log = eng.link_edges.read()
     assert log.count() == log.distinct().count(), \
         "edge log carries duplicate rows after a compacting refresh"
+    for table in (eng.link_edges, eng.link_ranks):
+        snaps = table.snapshots()
+        assert len(snaps) == 1 and len(snaps[0]["files"]) == 1, \
+            f"{table.name}: {len(snaps)} live snapshots after the refresh"
+        assert sorted(d for d in os.listdir(table.dir)
+                      if d.startswith("snap-") and "manifest" not in d) \
+            == [os.path.basename(snaps[0]["files"][0])]
 
 
-def test_edge_log_compaction_crash_recovery(spark, tmp_path):
-    """The compaction swap (tmp-write → rename old to .trash → rename
-    tmp in → drop .trash) must self-heal from either crash window: a
-    parked .trash with no live dir is restored; a leftover redundant
-    .trash next to a live dir is dropped. No edges are ever lost."""
-    import os
-    import shutil
-
+def test_failed_refresh_keeps_previous_ranks(spark, tmp_path, monkeypatch):
+    """A refresh whose rank write fails must leave the previous ranks
+    readable and the edge log whole: the snapshot commit writes a new
+    data dir and swaps CURRENT only after the write succeeds."""
     from datetime import datetime, timezone
 
+    import risjbot_spark.frontier.rank as rank
     from risjbot_spark.corpus import pages_df, url_for
 
     corpus = pages_df(spark, 60, partitions=4)
-    eng = _lr_engine(spark, corpus, str(tmp_path / "whcr"))
+    eng = _lr_engine(spark, corpus, str(tmp_path / "whfail"))
     seeds = spark.createDataFrame(
         [(url_for(i), 0) for i in range(0, 24, 4)],
         "url string, priority int")
     start = datetime(2017, 4, 1, tzinfo=timezone.utc)
     eng.run_round(seeds, 0, start)
-    log_dir = eng._link_edges_dir
-    n_edges = spark.read.parquet(log_dir).distinct().count()
-    assert n_edges > 0
+    before = _ranks_dict(eng._load_link_ranks())
+    edges_before = set(eng.link_edges.read().distinct().collect())
+    assert before and edges_before
 
-    # crash window 1: old log parked at .trash, no live dir
-    os.rename(log_dir, log_dir + ".trash")
-    eng.run_round(seeds, 1, start.replace(hour=1))
-    assert os.path.exists(log_dir) and not os.path.exists(
-        log_dir + ".trash")
-    assert spark.read.parquet(log_dir).distinct().count() == n_edges
+    good = rank.link_graph_ranks
 
-    # crash window 2: compacted dir live, redundant .trash left behind
-    shutil.copytree(log_dir, log_dir + ".trash")
-    eng.run_round(seeds, 2, start.replace(hour=2))
-    assert not os.path.exists(log_dir + ".trash")
-    assert spark.read.parquet(log_dir).distinct().count() == n_edges
+    def failing(edges, **kw):
+        return good(edges, **kw).withColumn(
+            "rank", F.raise_error(F.lit("rank write failed")).cast("long"))
+
+    monkeypatch.setattr(rank, "link_graph_ranks", failing)
+    with pytest.raises(Exception, match="rank write failed"):
+        eng.run_round(seeds, 1, start.replace(hour=1))
+    ranks = eng._load_link_ranks()
+    assert ranks is not None, "a failed refresh dropped the ranks"
+    assert _ranks_dict(ranks) == before
+    assert set(eng.link_edges.read().distinct().collect()) == edges_before

@@ -129,8 +129,7 @@ def test_politeness_schedule_budgets_df_parity(spark):
     via_dict = politeness_schedule(fr, budgets, 8, spark)
     via_df = politeness_schedule(
         fr, {}, 8, spark,
-        budgets_df=host_budgets_df(parse_rules_df(_robots_df(spark)), 10),
-        max_budget=20)
+        budgets_df=host_budgets_df(parse_rules_df(_robots_df(spark)), 10))
     key = lambda r: (r.url_canon, r.host_rank)
     assert sorted(map(key, via_df.collect())) == \
         sorted(map(key, via_dict.collect()))

@@ -231,3 +231,10 @@ def test_politeness_two_phase_equals_exact(spark):
                 two.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert per_host["hot.example.com"] == 7
     assert all(v <= 25 for v in per_host.values())
+    # the decision reads the default budget alone: at the threshold the
+    # pre-rank runs although the hot host's budget (40) is above it
+    over = {"hot.example.com": 40}
+    exact = politeness_schedule(fr, over, 25, spark, presplit_threshold=0)
+    two = politeness_schedule(fr, over, 25, spark, presplit_threshold=25)
+    assert "_pre_rank" in two._jdf.queryExecution().analyzed().toString()
+    assert key(two) == key(exact)
